@@ -47,20 +47,22 @@ def assert_pk_absent(incoming: DataFrame, existing: DataFrame, pk: str, table: s
     (reference etl/load.py:59-85 — chunked IN-list readback + set
     intersection → here one semi join).
 
-    No forced broadcast: the existing-PK side is unbounded (it is the
-    whole stored table's key set), so AQE promotes it to broadcast only
-    when its runtime size is under the threshold; otherwise it shuffles.
+    One aggregate action: the clash count and up to five example keys
+    (the smallest) come back in one row. A ``limit(5)`` probe would, when
+    nothing clashes (the usual case), rescan ever more partitions in one
+    job after another. The example set is at most the incoming batch's
+    distinct keys. No forced broadcast: the
+    existing-PK side is unbounded (it is the whole stored table's key
+    set), so AQE promotes it to broadcast only when its runtime size is
+    under the threshold; otherwise it shuffles.
     """
-    clash = (
-        incoming.join(existing.select(pk).distinct(), pk, "left_semi")
-        .select(pk)
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        examples = [r[0] for r in clash]
+    clash = incoming.join(existing.select(pk), pk, "left_semi").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.slice(F.sort_array(F.collect_set(pk)), 1, 5).alias("examples"),
+    ).first()
+    if clash["n"]:
         raise IntegrityError(
-            f"PKs already present in '{table}': e.g. {examples} — aborting insert"
+            f"PKs already present in '{table}': e.g. {clash['examples']} — aborting insert"
         )
 
 
@@ -78,12 +80,17 @@ def fk_split(child: DataFrame, parent: DataFrame, key: str) -> FkResult:
 
     The parent-key projection is NOT force-broadcast: parent tables grow
     without bound at scale, and a forced broadcast of an unbounded frame
-    OOMs the driver. AQE broadcasts it when the runtime size is small.
+    OOMs the driver. The planner broadcasts it when the parent's size is
+    under the threshold, and AQE when its runtime size is. It is not
+    de-duplicated: a semi or anti join only asks whether a key exists,
+    and a ``distinct`` would add a shuffle before every such join.
     """
-    parent_keys = parent.select(key).na.drop().distinct()
+    parent_keys = parent.select(key).na.drop()
+    # a join on a column name puts that column first: select the child's
+    # order back, so both sides land and audit with the child's layout
     return FkResult(
-        valid=child.join(parent_keys, key, "left_semi"),
-        missing=child.join(parent_keys, key, "left_anti"),
+        valid=child.join(parent_keys, key, "left_semi").select(*child.columns),
+        missing=child.join(parent_keys, key, "left_anti").select(*child.columns),
     )
 
 

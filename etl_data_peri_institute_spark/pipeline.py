@@ -12,19 +12,24 @@ Faithful behaviors preserved (SURVEY.md §7.4):
 - regular pagos semi-filter SKIPPED when today's matriculas are empty —
   the reference's conditional at etl/pipeline.py:194 changes which rows
   reach the FK check, so it is kept verbatim;
-- shared matriculas extract feeds two transforms (O2) → ``.cache()``;
+- shared matriculas extract feeds two transforms (O2); the frames that
+  several writes read (today's valid matriculas, the day's pagos) are
+  materialized once;
 - FK-missing and required-null rows audit to CSV then drop (or abort,
   per policy flags — O6).
 """
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass, field
-from datetime import date, timedelta
+from datetime import date, datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import schemas
 from .operators.integrity import (
     IntegrityError,
     assert_pk_absent,
@@ -47,8 +52,17 @@ PAGOS_REQUIRED = ["fecha_pago"]  # etl/load.py:33-37
 
 @dataclass
 class PipelineResult:
+    """``counts``: rows landed per table (an upsert counts its incoming
+    rows). ``stages``: per table, ``rows_in``, ``rows_kept``,
+    ``rejected`` (rows per audit reason), ``delta_rows`` (rows that
+    reached the table), and the data ``files`` and ``bytes`` landed —
+    all taken from the writes themselves. ``manifest``: the JSON file
+    holding ``stages``."""
+
     counts: dict[str, int] = field(default_factory=dict)
     audits: list[str] = field(default_factory=list)
+    stages: dict[str, dict] = field(default_factory=dict)
+    manifest: str | None = None
 
 
 def _incremental_filter(df: DataFrame, ts_col: str, target_date: str) -> DataFrame:
@@ -68,46 +82,73 @@ def run_pipeline(
     drop_missing_matriculas: bool = True,
 ) -> PipelineResult:
     """grids: {'cursos': .., 'estudiantes': .., 'matriculas': .., 'pagos': ..}
-    raw worksheet grids (list-of-lists of strings)."""
+    raw worksheet grids (list-of-lists of strings).
+
+    Every count comes from a write's observed row count (sinks.py), and
+    stored tables are read with their ``schemas`` contracts, so the
+    pipeline itself launches no counting or schema-inference job. A
+    table never written yet reads as empty: on a first day with payments
+    but no enrollments, every payment fails the FK and is audited, as
+    the reference's check against an empty table does."""
     target = target_date or (date.today() - timedelta(days=1)).isoformat()
     audit_dir = audit_dir or f"{store.root}/_audit"
     result = PipelineResult()
 
+    def audit(df: DataFrame, reason: str) -> int:
+        landed = audit_csv(df, audit_dir, reason)
+        if landed.path:
+            result.audits.append(landed.path)
+        return landed.rows
+
+    def land(table: str, n: int, rejected: dict[str, int]) -> None:
+        result.counts[table] = n
+        landed = store.last_landed
+        result.stages[table] = {
+            "rows_in": n + sum(rejected.values()),
+            "rows_kept": n,
+            "rejected": {k: v for k, v in rejected.items() if v},
+            "delta_rows": landed.delta_rows,
+            "files": landed.files,
+            "bytes": landed.bytes,
+        }
+
     # -- masters: UPSERT ----------------------------------------------------
     cursos = transform_cursos(grid_to_df(spark, grids["cursos"], header_row=2))
-    result.counts["cursos"] = store.upsert(cursos, "cursos", "codigo_curso")
+    land("cursos", store.upsert(cursos, "cursos", "codigo_curso"), {})
 
     estudiantes = transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2))
     estudiantes = dedupe_keep_last(
         estudiantes.withColumn("_row_idx", F.monotonically_increasing_id()),
         "codigo_estudiante",
     ).drop("_row_idx")
-    result.counts["estudiantes"] = store.upsert(estudiantes, "estudiantes", "codigo_estudiante")
+    land("estudiantes", store.upsert(estudiantes, "estudiantes", "codigo_estudiante"), {})
 
     # -- matriculas: incremental INSERT with FK → estudiantes ---------------
     raw_mats = grid_to_df(spark, grids["matriculas"], header_row=3)
-    todays_raw = _incremental_filter(raw_mats, "Marca temporal", target).cache()  # O2
+    todays_raw = _incremental_filter(raw_mats, "Marca temporal", target)  # O2
 
     matriculas = transform_matriculas(todays_raw)
-    students = store.read("estudiantes")
+    students = store.read("estudiantes", schemas.ESTUDIANTES)
     split = fk_split(matriculas, students, "codigo_estudiante")
-    missing_n = split.missing.count()
-    if missing_n:
-        if not drop_missing_students:
-            raise IntegrityError(f"{missing_n} matriculas reference unknown estudiantes")
-        path = audit_csv(split.missing, audit_dir, "matriculas_fk_missing")
-        if path:
-            result.audits.append(path)
-    matriculas = split.valid.cache()
+    if not drop_missing_students and (n := split.missing.count()):
+        raise IntegrityError(f"{n} matriculas reference unknown estudiantes")
+    mat_rejected = {"matriculas_fk_missing": audit(split.missing, "matriculas_fk_missing")}
+    # today's valid matriculas feed the PK guard, the insert and the pagos
+    # semi-filters: materialized once, in the partitions AQE coalesced
+    # them to (a cached plan keeps every shuffle partition, and each
+    # became a small file of the insert)
+    valid = split.valid.localCheckpoint(eager=False)
     # J1: abort if any incoming PK already exists in the target (reference
     # etl/load.py:59-85 — re-running the same day must not double-insert)
-    if store.exists("matriculas"):
-        assert_pk_absent(matriculas, store.read("matriculas"), "codigo_matricula", "matriculas")
-    result.counts["matriculas"] = store.insert(matriculas, "matriculas")
+    assert_pk_absent(
+        valid, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula", "matriculas"
+    )
+    land("matriculas", store.insert(valid, "matriculas"), mat_rejected)
 
-    # valid matricula keys for the pagos semi-filters (F3)
-    valid_keys = matriculas.select("codigo_matricula").distinct()
-    todays_mats_empty = matriculas.isEmpty()
+    # valid matricula keys for the pagos semi-filters (F3); a semi join
+    # needs no distinct build side
+    valid_keys = valid.select("codigo_matricula")
+    todays_mats_empty = result.counts["matriculas"] == 0
 
     # -- pagos: primera cuota + regulares, consolidated ---------------------
     primera = transform_pagos_primera_cuota(todays_raw)
@@ -132,47 +173,39 @@ def run_pipeline(
         # empty (etl/pipeline.py:194) — quirk preserved
         regulares = regulares.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
 
-    pagos = primera.unionByName(regulares)
+    # read by the audits and the insert below: materialized once
+    pagos = primera.unionByName(regulares).localCheckpoint(eager=False)
 
-    # FK → matriculas (against the full stored table)
-    pg_split = fk_split(pagos, store.read("matriculas"), "codigo_matricula")
-    pg_missing_n = pg_split.missing.count()
-    if pg_missing_n:
-        if not drop_missing_matriculas:
-            raise IntegrityError(f"{pg_missing_n} pagos reference unknown matriculas")
-        path = audit_csv(pg_split.missing, audit_dir, "pagos_fk_missing")
-        if path:
-            result.audits.append(path)
-    pagos = pg_split.valid
+    pg_rejected = {}
+    if todays_mats_empty:
+        # FK → matriculas (against the full stored table). With matriculas
+        # today, the semi-filters above kept only keys just inserted into
+        # that table, so no payment can fail this check and it is skipped.
+        pg_split = fk_split(pagos, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula")
+        if not drop_missing_matriculas and (n := pg_split.missing.count()):
+            raise IntegrityError(f"{n} pagos reference unknown matriculas")
+        pg_rejected["pagos_fk_missing"] = audit(pg_split.missing, "pagos_fk_missing")
+        pagos = pg_split.valid
 
     # required-not-null (fecha_pago) with audit backup — F4
     rq = required_not_null_split(pagos, PAGOS_REQUIRED)
-    if not rq.missing.isEmpty():
-        path = audit_csv(rq.missing, audit_dir, "pagos_required_null")
-        if path:
-            result.audits.append(path)
-    result.counts["pagos"] = store.insert(rq.valid, "pagos")
+    pg_rejected["pagos_required_null"] = audit(rq.missing, "pagos_required_null")
+    land("pagos", store.insert(rq.valid, "pagos"), pg_rejected)
 
-    todays_raw.unpersist()
-    matriculas.unpersist()
+    result.manifest = _write_manifest(audit_dir, target, result.stages)
     return result
 
 
-def observed_stage(
-    df: DataFrame, name: str, metrics: dict[str, "F.Column"]
-) -> tuple[DataFrame, "Observation"]:
-    """Attach free single-pass metrics to a pipeline stage via Spark's
-    Observation API: the named aggregates are computed DURING whatever
-    action first consumes ``df`` — no second scan, unlike the
-    ``.count()``-for-logging pattern, which at 100 TB doubles the read
-    cost of every audited stage. After an action runs, ``obs.get``
-    returns the metric dict.
-
-    Metrics must be aggregate expressions (count/sum/min/max/...);
-    typical stage telemetry is row count + null counts + key bounds.
-    """
-    obs = Observation(name)
-    return df.observe(obs, *[c.alias(k) for k, c in metrics.items()]), obs
+def _write_manifest(audit_dir: str, target: str, stages: dict[str, dict]) -> str:
+    """The day's stage figures as JSON in ``_manifests/`` beside the
+    audit dir (a driver-side file write, no Spark job)."""
+    out_dir = os.path.join(os.path.dirname(os.path.normpath(audit_dir)), "_manifests")
+    os.makedirs(out_dir, exist_ok=True)
+    stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
+    path = os.path.join(out_dir, f"{target}_{stamp}.json")
+    with open(path, "w") as fh:
+        json.dump({"target_date": target, "stages": stages}, fh, indent=1, sort_keys=True)
+    return path
 
 
 def _read_grid_csv(path: str) -> Grid:

@@ -16,8 +16,11 @@ The JDBC variant (the reference's actual Postgres target) is
 ``jdbc_upsert_sql`` MERGE statement for upsert.
 
 Execution discipline: each sink runs the incoming plan EXACTLY ONCE —
-the frame is staged to parquet first, and row counts come from the
-staged files' parquet footers (a metadata-only count, no recompute).
+the frame is staged to parquet first, and its row count is an
+``Observation`` on that write (gathered while the rows are written: no
+re-read of the staged files, no second pass). Stored tables are read
+with a known schema wherever the caller or the incoming frame supplies
+one, so a sink launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -27,9 +30,10 @@ import json
 import os
 import shutil
 import tempfile
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,14 +51,145 @@ def _crash_point(label: str) -> None:
         _CRASH_HOOK(label)
 
 
+# Spark records a parquet file's Spark schema in this footer key; the
+# typed store reads check it driver-side instead of launching Spark's
+# footer-reading schema-inference job
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+@dataclass(frozen=True)
+class Landed:
+    """What one sink call wrote. ``rows``: the rows it was given,
+    observed on its single write; ``delta_rows``: the rows that reached
+    the target (an upsert writes only the keys whose stored rows
+    differ); ``files``/``bytes``: the data files it added to or rewrote
+    in the target; ``path``: the output directory of an audit."""
+
+    rows: int
+    delta_rows: int = 0
+    files: int = 0
+    bytes: int = 0
+    path: str | None = None
+
+
+def observed_stage(
+    df: DataFrame, name: str, metrics: dict[str, "F.Column"]
+) -> tuple[DataFrame, Observation]:
+    """Attach free single-pass metrics to a pipeline stage via Spark's
+    Observation API: the named aggregates are computed DURING whatever
+    action first consumes ``df`` — no second scan, unlike the
+    ``.count()``-for-logging pattern, which at 100 TB doubles the read
+    cost of every audited stage. After an action runs, ``obs.get``
+    returns the metric dict.
+
+    Metrics must be aggregate expressions (count/sum/min/max/...);
+    typical stage telemetry is row count + null counts + key bounds.
+    ``name`` must be unique among the observations of one plan.
+    """
+    obs = Observation(name)
+    return df.observe(obs, *[c.alias(k) for k, c in metrics.items()]), obs
+
+
+def _rows_observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+    return observed_stage(df, name, {"rows": F.count(F.lit(1))})
+
+
+def _data_files(root: str, rels: list[str] | None = None) -> tuple[int, int]:
+    """(count, bytes) of the parquet files ``rels`` under ``root`` —
+    every visible parquet file there when ``rels`` is None."""
+    if rels is None:
+        rels = []
+        for base, dirs, files in os.walk(root):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            rels += [
+                os.path.relpath(os.path.join(base, name), root)
+                for name in files
+                if name.endswith(".parquet") and not name.startswith((".", "_"))
+            ]
+    return len(rels), sum(os.path.getsize(os.path.join(root, r)) for r in rels)
+
+
+def _q(name: str) -> str:
+    """Backtick-quote a column name for ``F.col`` (dots stay literal)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _orderable(dt: T.DataType) -> bool:
+    """Whether Spark can sort and compare values of ``dt`` (maps and
+    variants cannot)."""
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    return not isinstance(dt, T.MapType) and dt.typeName() != "variant"
+
+
+def _changed_rows(
+    incoming: DataFrame, stored: DataFrame, pk: str
+) -> tuple[DataFrame, Observation]:
+    """The incoming rows of every key whose stored rows differ — the
+    rows an upsert must write — as one lazy plan, observed for ``rows``
+    (incoming rows), ``delta_rows`` and ``changed_keys`` (delta keys
+    that already have stored rows; the rest are new).
+
+    A key is unchanged only when its stored and incoming rows are equal
+    as multisets, nulls comparing equal: re-upserting it would delete
+    and re-add the same rows. One shuffle on the key gathers both sides'
+    rows per key, each side sorted so the compare ignores row order.
+    A null key never matches a stored row (the upsert's anti-join on
+    the key does not match nulls), so its incoming rows are always new.
+    ``operators.scd.snapshot_diff`` compares one row per key, so it
+    cannot decide multiset equality and is not used here.
+
+    The observation sits above the per-key aggregate: an observation
+    below a union the optimizer proves empty is dropped with it, and
+    would never report.
+
+    Rows holding maps cannot be sorted or compared; then every incoming
+    row counts as changed, which is the plain merge."""
+    obs = Observation("upsert_delta")
+    if not _orderable(incoming.schema):
+        n = F.count(F.lit(1))
+        return incoming.observe(
+            obs, n.alias("rows"), n.alias("delta_rows"), n.alias("changed_keys")
+        ), obs
+    cols = incoming.columns
+    side = "__upsert_incoming"
+    both = stored.withColumn(side, F.lit(False)).unionByName(
+        incoming.withColumn(side, F.lit(True))
+    )
+    row = F.struct(*[F.col(_q(c)) for c in cols])
+    key = F.col(_q(pk))
+    per_key = both.groupBy(key.alias("__k")).agg(
+        F.sort_array(F.collect_list(F.when(F.col(side), row))).alias("__new"),
+        F.sort_array(
+            F.collect_list(F.when(~F.col(side) & key.isNotNull(), row))
+        ).alias("__old"),
+    )
+    changed = (F.size("__new") > 0) & ~F.col("__new").eqNullSafe(F.col("__old"))
+    per_key = per_key.observe(
+        obs,
+        F.coalesce(F.sum(F.size("__new")), F.lit(0)).alias("rows"),
+        F.coalesce(F.sum(F.when(changed, F.size("__new"))), F.lit(0)).alias("delta_rows"),
+        F.count(F.when(changed & (F.size("__old") > 0), 1)).alias("changed_keys"),
+    )
+    delta = per_key.filter(changed).select(F.explode("__new").alias("__r")).select("__r.*")
+    return delta, obs
+
+
 class ParquetStore:
     """Directory-per-table parquet 'database' used by the pipeline and
     its tests. At scale each table is a partitioned object-store prefix
-    (transactional tables date-partitioned so incremental filters prune)."""
+    (transactional tables date-partitioned so incremental filters prune).
+
+    ``last_landed`` holds what the most recent ``insert`` or ``upsert``
+    landed (a ``Landed``): the per-stage figures a caller reports
+    without another Spark job."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.last_landed: Landed | None = None
         os.makedirs(root, exist_ok=True)
 
     def path(self, table: str) -> str:
@@ -76,15 +211,58 @@ class ParquetStore:
             return reader.parquet(self.path(table))
         if schema is None:
             raise FileNotFoundError(table)
-        return self.spark.createDataFrame([], schema)
+        # limit(0) makes the emptiness plain to the optimizer, which then
+        # prunes the joins and scans that read this table, jobs included
+        return self.spark.createDataFrame([], schema).limit(0)
+
+    def _read_stored(self, table: str, schema: T.StructType) -> DataFrame:
+        """``table`` read typed as ``schema`` when one of its parquet
+        footers records exactly ``schema``'s data columns (names and
+        types; hive partition columns live in directory names and take
+        ``schema``'s types). The footer is read on the driver, so the
+        read launches no schema-inference job. A missing or file-less
+        table reads as empty. Any other footer falls back to the
+        inferred read, so a schema mismatch fails or widens exactly as
+        an untyped read would."""
+        self._recover(table)
+        final = self.path(table)
+        footer = next(
+            (
+                os.path.join(base, name)
+                for base, _dirs, files in os.walk(final)
+                for name in sorted(files)
+                if name.endswith(".parquet") and not name.startswith((".", "_"))
+            ),
+            None,
+        )
+        if footer is None:
+            return self.read(table, schema)
+        import pyarrow.parquet as pq
+
+        try:
+            meta = pq.read_schema(footer).metadata or {}
+            stored = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        except (KeyError, ValueError, OSError):
+            return self.read(table)
+        part_cols = self._detect_partition_cols(table)
+
+        def types(fields):
+            return {f.name: f.dataType.simpleString() for f in fields}
+
+        if set(part_cols) <= set(schema.names) and types(stored.fields) == types(
+            f for f in schema.fields if f.name not in part_cols
+        ):
+            return self.read(table, schema)
+        return self.read(table)
 
     def _stage(self, df: DataFrame, table: str) -> tuple[str, int]:
         """Materialize ``df`` once into a staging dir; return (dir, n).
-        The count reads parquet footers only — the plan is not re-run."""
+        The count is observed on the write itself — one job, no re-read
+        of the staged files."""
         stage = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_stage_")
-        df.write.mode("overwrite").parquet(stage)
-        n = self.spark.read.parquet(stage).count()
-        return stage, n
+        observed, obs = _rows_observed(df, f"{table}_stage")
+        observed.write.mode("overwrite").parquet(stage)
+        return stage, obs.get["rows"]
 
     # ---- crash-consistency journal --------------------------------
     # Every multi-step directory mutation (whole-table swap, partition
@@ -424,8 +602,8 @@ class ParquetStore:
     ) -> int:
         """Append-only INSERT (reference insert mode, etl/load.py:285).
 
-        One plan execution: stage → footer count → append into the
-        table directory.
+        One plan execution: stage (row count observed on the write) →
+        append into the table directory.
 
         ``meta_files`` commit ATOMICALLY with the appended rows (written
         inside the same journaled mutation, rolled back together on a
@@ -458,42 +636,55 @@ class ParquetStore:
         self._recover(table)
         self._check_layout(table, partition_by)
         stage, n = self._stage(df, table)
+        files = nbytes = 0
         try:
-            if n and partition_by:
-                # staged-file read → hive-layout rewrite in a second tmp
-                # dir, then a JOURNALED per-file move-in (the incoming
-                # plan still ran exactly once — both re-reads are file
-                # scans of the staged snapshot, not plan re-runs). A
-                # direct ``mode("append")`` into the live table would
-                # leave a PARTIAL append visible if the process died
-                # mid-write; the journaled move makes the append
-                # all-or-nothing under kills, like every other mutation.
-                lay = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_ins_")
-                try:
-                    (
-                        self.spark.read.parquet(stage)
-                        .write.mode("overwrite")
-                        .partitionBy(*partition_by)
-                        .parquet(lay)
-                    )
-                    rels = [
-                        os.path.relpath(os.path.join(r, fname), lay)
-                        for r, _dirs, files in os.walk(lay)
-                        for fname in files
-                        if fname.endswith(".parquet")
-                    ]
-                    self._append_files(lay, table, sorted(rels), meta_files)
-                finally:
-                    shutil.rmtree(lay, ignore_errors=True)
-            elif n:
-                rels = sorted(
-                    name for name in os.listdir(stage)
-                    if name.endswith(".parquet")
-                )
-                self._append_files(stage, table, rels, meta_files)
+            if n:
+                files, nbytes = self._land(stage, df.schema, table, partition_by, meta_files)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+        self.last_landed = Landed(n, n, files, nbytes)
         return n
+
+    def _land(
+        self,
+        stage: str,
+        schema: T.StructType,
+        table: str,
+        partition_by: list[str] | None,
+        meta_files: dict[str, str] | None = None,
+    ) -> tuple[int, int]:
+        """Append the rows staged in ``stage`` (written with ``schema``)
+        to the table: flat part files move in as they are; a hive
+        layout is first rewritten from the stage into a second tmp dir
+        (a file scan of the staged snapshot, not a plan re-run). The
+        move-in is journaled (``_append_files``): a direct
+        ``mode("append")`` into the live table would leave a PARTIAL
+        append visible if the process died mid-write. Returns the
+        (files, bytes) that landed."""
+        if not partition_by:
+            rels = sorted(name for name in os.listdir(stage) if name.endswith(".parquet"))
+            landed = _data_files(stage, rels)
+            self._append_files(stage, table, rels, meta_files)
+            return landed
+        lay = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_ins_")
+        try:
+            (
+                self.spark.read.schema(schema).parquet(stage)
+                .write.mode("overwrite")
+                .partitionBy(*partition_by)
+                .parquet(lay)
+            )
+            rels = [
+                os.path.relpath(os.path.join(r, fname), lay)
+                for r, _dirs, files in os.walk(lay)
+                for fname in files
+                if fname.endswith(".parquet")
+            ]
+            landed = _data_files(lay, rels)
+            self._append_files(lay, table, sorted(rels), meta_files)
+            return landed
+        finally:
+            shutil.rmtree(lay, ignore_errors=True)
 
     def _append_files(
         self,
@@ -845,67 +1036,90 @@ class ParquetStore:
 
     def upsert(self, df: DataFrame, table: str, pk: str) -> int:
         """Insert-or-update on PK (reference upsert, etl/load.py:283).
+        Returns the incoming row count.
 
-        Incoming is staged once (snapshot); then:
+        Change first: ONE write job reads the stored table (typed, see
+        ``_read_stored``) beside the incoming plan, keeps the incoming
+        rows of every key whose stored rows differ (``_changed_rows``)
+        and stages only those; the incoming plan runs exactly once and
+        both counts are observed on that write. Re-upserting an
+        unchanged key would delete and re-add the same rows, so leaving
+        it alone gives the same table. Then:
 
-        - **Partition-scoped path** (hive-partitioned table, single
-          partition level — the layout ``insert(partition_by=...)``
-          writes): only the partitions that the upsert TOUCHES are
-          rewritten. Affected = partitions any incoming row lands in ∪
-          partitions currently holding a colliding PK (covers rows whose
-          partition value changes). Kept rows of affected partitions are
-          anti-joined against incoming PKs, unioned with incoming,
-          written to a temp dir, and swapped in per-partition via
-          backup-rename. Untouched partition directories are never
-          rewritten (affected-partition discovery does read the table
-          once, via a PK semi-join) — at 100 TB a daily upsert against
-          a date-partitioned master table costs O(touched partitions),
-          not O(table), which is the plain-parquet analogue of Delta/
-          Iceberg MERGE file pruning. The partition-pruning filter means
-          the read side also scans only the affected directories.
-        - **Full-rewrite fallback** (unpartitioned table, multi-level
-          layouts, or a partition-name roundtrip mismatch): anti-join
-          keeps non-colliding target rows, union with incoming, write to
-          a temp dir and atomically swap — correct at any size, O(table)
-          write cost.
+        - **No changed key**: nothing else runs — no swap, and no file
+          of the table is touched (a master sheet re-upserted unchanged).
+        - **Only new keys**: the staged rows are appended through the
+          journaled ``_land`` path, in the table's own layout.
+        - **Changed keys**: the merge below runs on the staged rows only.
 
-        A failed write never corrupts the table on either path (temp dir
-        + backup-rename; no step holds the only copy mid-delete).
+          - *Partition-scoped merge* (hive-partitioned table, single
+            partition level — the layout ``insert(partition_by=...)``
+            writes): only the partitions the staged rows TOUCH are
+            rewritten. Affected = partitions a staged row lands in ∪
+            partitions holding a colliding PK (covers rows whose
+            partition value changes). Kept rows of affected partitions
+            are anti-joined against the staged PKs, unioned with them,
+            written to a temp dir and swapped in per partition via
+            backup-rename. Untouched partition directories are never
+            rewritten; the plain-parquet analogue of Delta/Iceberg
+            MERGE file pruning.
+          - *Full rewrite* (flat table, multi-level layouts, or a
+            partition-name roundtrip mismatch): anti-join keeps the
+            non-colliding stored rows, union with the staged rows, write
+            to a temp dir and atomically swap — O(table) write cost.
+
+        A failed write never corrupts the table on any path (temp dir +
+        journaled append or backup-rename; no step holds the only copy
+        mid-delete).
         """
         self._recover(table)
-        stage, n = self._stage(df, table)
+        part_cols = self._detect_partition_cols(table)
+        stored = self._read_stored(table, df.schema)
+        delta, obs = _changed_rows(df, stored, pk)
+        stage = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_stage_")
+        files = nbytes = 0
         try:
-            if not n:
-                return 0
-            incoming = self.spark.read.parquet(stage)
-            part_cols = self._detect_partition_cols(table)
-            has_table = os.path.isdir(self.path(table))
-            if (
-                has_table
-                and len(part_cols) == 1
-                and self._upsert_scoped(incoming, table, pk, part_cols[0])
-            ):
-                return n
-            if has_table:
-                current = self.read(table)
-                kept = current.join(incoming.select(pk).distinct(), pk, "left_anti")
-                merged = kept.unionByName(incoming)
-            else:
-                merged = incoming
-            self._rewrite_and_swap(merged, table, part_cols, "merge")
+            delta.write.mode("overwrite").parquet(stage)
+            d = obs.get
+            if d["delta_rows"] and not d["changed_keys"]:
+                files, nbytes = self._land(stage, delta.schema, table, part_cols)
+            elif d["delta_rows"]:
+                staged = self.spark.read.schema(delta.schema).parquet(stage)
+                files, nbytes = self._merge(staged, stored, table, pk, part_cols)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        return n
+        self.last_landed = Landed(d["rows"], d["delta_rows"], files, nbytes)
+        return d["rows"]
+
+    def _merge(
+        self,
+        delta: DataFrame,
+        current: DataFrame,
+        table: str,
+        pk: str,
+        part_cols: list[str],
+    ) -> tuple[int, int]:
+        """Replace ``current``'s rows of every key in ``delta`` by
+        ``delta``'s rows; returns the (files, bytes) written."""
+        if len(part_cols) == 1:
+            landed = self._upsert_scoped(delta, current, table, pk, part_cols[0])
+            if landed is not None:
+                return landed
+        # an anti join needs no distinct key side
+        kept = current.join(delta.select(pk), pk, "left_anti")
+        return self._rewrite_and_swap(
+            kept.unionByName(delta), table, part_cols, "merge", pre_swap=_data_files
+        )
 
     def _upsert_scoped(
-        self, incoming: DataFrame, table: str, pk: str, pc: str
-    ) -> bool:
-        """Partition-scoped merge body. Returns True when the scoped swap
-        committed; False to signal 'use the full rewrite' (roundtrip
-        safety check failed — e.g. a partition value whose formatted dir
-        name does not match what Spark wrote)."""
+        self, incoming: DataFrame, current: DataFrame, table: str, pk: str, pc: str
+    ) -> tuple[int, int] | None:
+        """Partition-scoped merge body. Returns the (files, bytes)
+        written when the scoped swap committed; None to signal 'use the
+        full rewrite' (roundtrip safety check failed — e.g. a partition
+        value whose formatted dir name does not match what Spark
+        wrote)."""
         final = self.path(table)
-        current = self.read(table)
         in_keys = incoming.select(pk).distinct()
         # Affected partition values: where incoming rows land + where
         # colliding PKs currently live — ONE pass, with each value's
@@ -939,7 +1153,7 @@ class ParquetStore:
             if r["from_current"]
         }
         if current_vals - on_disk:
-            return False
+            return None
         non_null = [v for v in vals if v is not None]
         has_null = len(non_null) < len(vals)
         pred = F.col(pc).isin(non_null) if non_null else F.lit(False)
@@ -958,11 +1172,12 @@ class ParquetStore:
             if tmp_dirs - want:
                 # Formatter/writer disagreement the other way: a written
                 # dir we did not predict. Fall back before touching final.
-                return False
+                return None
+            landed = _data_files(tmp)
             self._swap_partitions(tmp, table, sorted(want | tmp_dirs))
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        return True
+        return landed
 
     def _swap_partitions(
         self, tmp: str, table: str, affected_dirs: list[str]
@@ -1084,7 +1299,7 @@ class ParquetStore:
         return n_before - n_after
 
 
-def audit_csv(df: DataFrame, out_dir: str, reason: str) -> str | None:
+def audit_csv(df: DataFrame, out_dir: str, reason: str) -> Landed:
     """S8: back up rejected rows to a timestamped CSV (reference
     etl/load.py:114-122,141-151,183-190; artifacts retained by CI —
     daily-etl.yml:48-55).
@@ -1092,24 +1307,28 @@ def audit_csv(df: DataFrame, out_dir: str, reason: str) -> str | None:
     Distributed write — every reject row lands, however many there are
     (the reference, and an earlier version here, materialized rows on
     one node). Output is a directory of header-carrying CSV parts, the
-    standard distributed-artifact layout. Returns the directory path,
-    or None if there was nothing to audit (checked with ``isEmpty`` —
-    a first-row probe, not a full pass).
+    standard distributed-artifact layout. One write runs the rejects
+    plan once and observes its row count; an empty output is removed
+    afterwards. Returns the ``Landed`` rows, part files and bytes, with
+    ``path`` the output directory, or None when there was nothing to
+    audit.
     """
-    # one upstream execution: the lazy checkpoint materializes on the
-    # isEmpty probe and the write re-reads the checkpoint (an expensive
-    # rejects plan would otherwise run twice, and a nondeterministic one
-    # could disagree between probe and write)
-    df = df.localCheckpoint(eager=False)
-    if df.isEmpty():
-        return None
-    os.makedirs(out_dir, exist_ok=True)
+    created = not os.path.isdir(out_dir)
     # microseconds in the stamp: two same-reason audits within one
     # second must not overwrite each other's rejected rows
     stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
     path = os.path.join(out_dir, f"{reason}_{stamp}.csv")
-    df.write.option("header", True).mode("overwrite").csv(path)
-    return path
+    observed, obs = _rows_observed(df, f"audit_{reason}")
+    observed.write.option("header", True).mode("overwrite").csv(path)
+    n = obs.get["rows"]
+    if not n:
+        shutil.rmtree(path, ignore_errors=True)
+        if created:
+            with contextlib.suppress(OSError):
+                os.rmdir(out_dir)
+        return Landed(0)
+    parts = [name for name in os.listdir(path) if name.startswith("part-")]
+    return Landed(n, n, len(parts), sum(os.path.getsize(os.path.join(path, p)) for p in parts), path)
 
 
 def _jdbc_options(

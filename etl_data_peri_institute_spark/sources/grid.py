@@ -115,7 +115,9 @@ def grid_to_df(
         [T.StructField(name, T.StringType(), True) for name in header]
         + [T.StructField(ROW_IDX, T.LongType(), False)]
     )
-    df = spark.createDataFrame(rows, schema)
+    # every row was built above to fit the schema (string cells or None,
+    # an int index), so PySpark's per-cell type check is skipped
+    df = spark.createDataFrame(rows, schema, verifySchema=False)
     if canonical:
         renames = fuzzy_rename(header, canonical)
         if renames:

@@ -194,6 +194,73 @@ def test_crash_sweep_flat_append(spark, tmp_path, monkeypatch):
     _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "fapp")
 
 
+def test_upsert_no_op_passes_no_crash_point(spark, tmp_path, monkeypatch):
+    """Change-first upsert, no changed key: nothing is journaled, so there
+    is no step to kill — the table's files stay byte-identical and no
+    staging dir is left behind (flat and hive layouts)."""
+    import hashlib
+
+    def state(root):
+        out = {}
+        for base, _dirs, files in os.walk(root):
+            for name in files:
+                p = os.path.join(base, name)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, root)] = (
+                        os.stat(p).st_mtime_ns, hashlib.sha256(fh.read()).hexdigest()
+                    )
+        return out
+
+    for seed, sub in ((_seed_flat, "noop_flat"), (_seed_partitioned, "noop_hive")):
+        store = ParquetStore(spark, str(tmp_path / sub))
+        seed(store)
+        same = store.read("t")  # the stored rows, upserted again
+        before = state(store.path("t"))
+        seen: list[str] = []
+        monkeypatch.setattr(sinks, "_CRASH_HOOK", seen.append)
+        try:
+            assert store.upsert(same, "t", pk="pk") == 3
+        finally:
+            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+        assert seen == [], sub
+        assert state(store.path("t")) == before, sub
+        assert [n for n in os.listdir(store.root) if n.startswith(".")] == [], sub
+
+
+def test_crash_sweep_upsert_append_only(spark, tmp_path, monkeypatch):
+    """Change-first upsert, only new keys (beside an unchanged one): the
+    rows take the journaled append path, flat and hive."""
+
+    def mutate_flat(store: ParquetStore) -> None:
+        inc = store.spark.createDataFrame([(1, "a"), (4, "d")], "pk int, v string")
+        store.upsert(inc, "t", pk="pk")
+
+    def mutate_hive(store: ParquetStore) -> None:
+        inc = store.spark.createDataFrame(
+            [(1, "a", "d1"), (4, "d", "d1"), (5, "e", "d9")], "pk int, v string, dt string"
+        )
+        store.upsert(inc, "t", pk="pk")
+
+    for seed, mutate, sub in (
+        (_seed_flat, mutate_flat, "uapp_flat"),
+        (_seed_partitioned, mutate_hive, "uapp_hive"),
+    ):
+        labels = _sweep(spark, tmp_path, monkeypatch, seed, mutate, sub)
+        assert labels and all(lbl.startswith("append:") for lbl in labels), labels
+
+
+def test_crash_sweep_upsert_changed_key_flat(spark, tmp_path, monkeypatch):
+    """Change-first upsert, a changed key on a flat table: the merge of
+    the changed rows rides the table-swap journal."""
+
+    def mutate(store: ParquetStore) -> None:
+        inc = store.spark.createDataFrame([(1, "a"), (2, "B2"), (4, "d")], "pk int, v string")
+        store.upsert(inc, "t", pk="pk")
+
+    labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "uchg")
+    assert "table_swap:swapped" in labels
+
+
 def test_recovery_ignores_foreign_and_half_written_journals(
     spark, tmp_path, monkeypatch
 ):

@@ -13,7 +13,7 @@ from etl_data_peri_institute_spark.operators.multimodal import (
     attach_binary_payload,
     decode_image_features,
 )
-from etl_data_peri_institute_spark.sinks import ParquetStore, audit_csv
+from etl_data_peri_institute_spark.sinks import Landed, ParquetStore, audit_csv
 
 
 def test_asof_backward_basic(spark):
@@ -368,9 +368,14 @@ def test_swap_partitions_rollback_removes_new_dirs(spark, tmp_path, monkeypatch)
 
 def test_audit_csv_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([("x", None), ("y", "2")], "a string, b string")
-    path = audit_csv(df, str(tmp_path / "audit"), "rejects")
+    landed = audit_csv(df, str(tmp_path / "audit"), "rejects")
+    path = landed.path
     # distributed write: a directory of header-carrying CSV parts
     assert path and path.endswith(".csv") and os.path.isdir(path)
+    # the count is the one observed on the write; files/bytes are its parts
+    parts = [p for p in os.listdir(path) if p.startswith("part-")]
+    assert landed.rows == 2 and landed.files == len(parts) > 0
+    assert landed.bytes == sum(os.path.getsize(os.path.join(path, p)) for p in parts)
     data_rows = []
     for part in os.listdir(path):
         if part.startswith("part-") and part.endswith(".csv"):
@@ -381,8 +386,13 @@ def test_audit_csv_roundtrip(spark, tmp_path):
     assert sorted(data_rows) == ['"x",""', "y,2"] or sorted(data_rows) == ["x,", "y,2"]
     # Spark round-trip sees exactly the audited rows
     assert spark.read.option("header", True).csv(path).count() == 2
-    # empty frame → no artifact
-    assert audit_csv(df.filter(F.col("a") == "zz"), str(tmp_path / "audit"), "r2") is None
+    # empty frame → no artifact: the empty output is removed after the
+    # write, and an audit dir the call created goes with it
+    empty = df.filter(F.col("a") == "zz")
+    assert audit_csv(empty, str(tmp_path / "audit"), "r2") == Landed(0)
+    assert sorted(os.listdir(tmp_path / "audit")) == [os.path.basename(path)]
+    assert audit_csv(empty, str(tmp_path / "fresh"), "r3").path is None
+    assert not os.path.exists(tmp_path / "fresh")
 
 
 def test_jdbc_sink_wrapper(spark, monkeypatch):

@@ -4,9 +4,32 @@ quirk."""
 
 from __future__ import annotations
 
+import json
+
+from etl_data_peri_institute_spark import schemas
 from etl_data_peri_institute_spark.pipeline import run_pipeline
 from etl_data_peri_institute_spark.sinks import ParquetStore
 from tests.fixtures import ALL_GRIDS, TARGET_DATE
+
+CONTRACTS = {
+    "cursos": schemas.CURSOS,
+    "estudiantes": schemas.ESTUDIANTES,
+    "matriculas": schemas.MATRICULAS,
+    "pagos": schemas.PAGOS,
+}
+
+
+def _names_types(schema) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def _audit_rows(spark, result) -> dict[str, int]:
+    """Rejected rows per audit reason, read back from the audit CSVs."""
+    out: dict[str, int] = {}
+    for path in result.audits:
+        reason = path.rsplit("/", 1)[-1].rsplit("_", 3)[0]
+        out[reason] = out.get(reason, 0) + spark.read.option("header", True).csv(path).count()
+    return out
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -39,6 +62,59 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert any("matriculas_fk_missing" in p for p in result.audits)
     assert any("pagos_required_null" in p for p in result.audits)
 
+    # every stored table's files carry exactly its contract's names and
+    # types, so the pipeline's typed reads see what an inferred read sees
+    for table, contract in CONTRACTS.items():
+        assert _names_types(store.read(table).schema) == _names_types(contract), table
+
+
+def test_pipeline_empty_store_audits_every_payment(spark, tmp_path):
+    """A first day with payments but no enrollments: the pagos FK check
+    reads a matriculas table that was never written. It reads as empty,
+    so the payment is audited and dropped, as the reference's FK check
+    against an empty table does (it used to raise FileNotFoundError)."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    result = run_pipeline(spark, ALL_GRIDS, store, target_date="2024-03-12")
+    assert result.counts == {"cursos": 3, "estudiantes": 5, "matriculas": 0, "pagos": 0}
+    assert _audit_rows(spark, result) == {"pagos_fk_missing": 1}
+    # a zero-row insert still creates no table, and every table reads
+    # back typed by its contract whether or not it exists
+    assert not store.exists("matriculas") and not store.exists("pagos")
+    for table, contract in CONTRACTS.items():
+        assert _names_types(store.read(table, contract).schema) == _names_types(contract)
+        if store.exists(table):
+            assert _names_types(store.read(table).schema) == _names_types(contract)
+
+
+def test_pipeline_stage_manifest(spark, tmp_path):
+    """The per-day manifest agrees with the counts and the audit CSVs,
+    and records what each stage landed; re-upserting unchanged master
+    sheets lands nothing."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    result = run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    with open(result.manifest) as fh:
+        manifest = json.load(fh)
+    assert manifest == {"target_date": TARGET_DATE, "stages": result.stages}
+    assert sorted(result.stages) == sorted(result.counts)
+    audited = _audit_rows(spark, result)
+    rejected = {}
+    for table, st in result.stages.items():
+        assert st["rows_kept"] == result.counts[table]
+        assert st["rows_in"] == st["rows_kept"] + sum(st["rejected"].values())
+        # every row is new on a fresh store, so all of it lands
+        assert st["delta_rows"] == st["rows_kept"]
+        assert st["files"] > 0 and st["bytes"] > 0
+        rejected.update(st["rejected"])
+    assert rejected == audited == {"matriculas_fk_missing": 1, "pagos_required_null": 1}
+
+    later = run_pipeline(spark, ALL_GRIDS, store, target_date="2024-03-20")
+    for table in ("cursos", "estudiantes"):
+        st = later.stages[table]
+        assert (st["rows_in"], st["delta_rows"], st["files"], st["bytes"]) == (
+            result.counts[table], 0, 0, 0
+        ), table
+    assert later.stages["pagos"]["files"] == 0
+
 
 def test_pipeline_upsert_overwrites(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "db"))
@@ -62,7 +138,8 @@ def test_pipeline_same_day_rerun_aborts(spark, tmp_path):
 
     store = ParquetStore(spark, str(tmp_path / "db"))
     run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
-    with pytest.raises(IntegrityError, match="already present"):
+    examples = r"already present in 'matriculas': e\.g\. \['M001', 'M002'\]"
+    with pytest.raises(IntegrityError, match=examples):
         run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
     assert store.read("matriculas").count() == 2  # unchanged
 
@@ -190,7 +267,7 @@ def test_observed_stage_metrics_single_pass(spark):
     scan of the input."""
     from pyspark.sql import functions as F
 
-    from etl_data_peri_institute_spark.pipeline import observed_stage
+    from etl_data_peri_institute_spark.sinks import observed_stage
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (3, "c")], "k int, v string"

@@ -8,9 +8,10 @@ throughput scales with executors instead of an HTTP rate limit.
 
 UPSERT (reference etl/load.py:283 — insert-or-update on PK) without a
 Delta/Iceberg jar in this image is emulated as anti-join + union +
-atomic directory swap: target rows whose PK collides with incoming are
-replaced. On a real deployment this is one ``MERGE INTO`` against Delta/
-Iceberg — the surrounding plan (dedup → integrity → merge) is identical.
+one journaled commit of renames (``ParquetStore._commit``): target rows
+whose PK collides with incoming are replaced. On a real deployment this
+is one ``MERGE INTO`` against Delta/Iceberg — the surrounding plan
+(dedup → integrity → merge) is identical.
 The JDBC variant (the reference's actual Postgres target) is
 ``write_jdbc`` below: append straight to the table, or stage + the
 ``jdbc_upsert_sql`` MERGE statement for upsert.
@@ -26,10 +27,11 @@ one, so a sink launches no schema-inference job.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
-import tempfile
+import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -37,12 +39,15 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Test seam for the crash-consistency journal: when set, called with a
-# step label at every journaled-mutation step boundary. A test hook that
-# raises a BaseException subclass simulates a process kill BETWEEN steps
-# (BaseException skips the ``except Exception`` rollback paths exactly
-# like a real kill would; the journal recovery on next access must then
-# restore a consistent table). Never set in production.
+# Test seam for the commit protocol (``ParquetStore._commit``): when
+# set, called with a step label after every commit step —
+# ``commit:journaled``, ``commit:backed_up`` (per backup),
+# ``commit:moved`` (per move) and ``commit:committed``. A test hook
+# that raises a BaseException subclass simulates a process kill BETWEEN
+# steps (BaseException skips the ``except Exception`` rollback exactly
+# like a real kill would; recovery on next access must then restore a
+# consistent table); one that raises an ordinary Exception exercises
+# the in-process rollback. Never set in production.
 _CRASH_HOOK = None
 
 
@@ -94,19 +99,66 @@ def _rows_observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
     return observed_stage(df, name, {"rows": F.count(F.lit(1))})
 
 
-def _data_files(root: str, rels: list[str] | None = None) -> tuple[int, int]:
-    """(count, bytes) of the parquet files ``rels`` under ``root`` —
-    every visible parquet file there when ``rels`` is None."""
-    if rels is None:
-        rels = []
-        for base, dirs, files in os.walk(root):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            rels += [
-                os.path.relpath(os.path.join(base, name), root)
-                for name in files
-                if name.endswith(".parquet") and not name.startswith((".", "_"))
-            ]
+def _parquet_files(root: str) -> list[str]:
+    """The visible parquet data files under ``root``, as sorted paths
+    relative to it: what readers read. Dot- and underscore-prefixed
+    names (backups, CRCs, ``_SUCCESS``, meta files) are skipped, and so
+    is everything under such a directory."""
+    rels = []
+    for base, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        rels += [
+            os.path.relpath(os.path.join(base, name), root)
+            for name in files
+            if name.endswith(".parquet") and not name.startswith((".", "_"))
+        ]
+    return sorted(rels)
+
+
+def _data_files(root: str) -> tuple[int, int]:
+    """(count, bytes) of the visible parquet files under ``root``."""
+    rels = _parquet_files(root)
     return len(rels), sum(os.path.getsize(os.path.join(root, r)) for r in rels)
+
+
+def _remove(path: str) -> None:
+    """Remove a file or directory tree; a missing path is fine."""
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path)
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
+
+
+def _is_commit_journal(payload) -> bool:
+    """Whether ``payload`` has the shape ``ParquetStore._commit``
+    writes: a table, a committed flag and ``[dst, src, backup]``
+    entries whose dst and backup lie in the table (a rollback renames
+    and removes only those)."""
+    if not (
+        isinstance(payload, dict)
+        and isinstance(payload.get("table"), str)
+        and isinstance(payload.get("committed"), bool)
+        and isinstance(payload.get("entries"), list)
+    ):
+        return False
+
+    def inside(dst) -> bool:
+        return isinstance(dst, str) and os.path.normpath(dst).split(os.sep)[0] == payload["table"]
+
+    def beside(bak, dst) -> bool:
+        return isinstance(bak, str) and (
+            os.path.dirname(os.path.normpath(bak)) == os.path.dirname(os.path.normpath(dst))
+        )
+
+    return all(
+        isinstance(e, list)
+        and len(e) == 3
+        and inside(e[0])
+        and (e[1] is None or isinstance(e[1], str))
+        and (e[2] is None or beside(e[2], e[0]))
+        for e in payload["entries"]
+    )
 
 
 def _q(name: str) -> str:
@@ -226,15 +278,7 @@ class ParquetStore:
         an untyped read would."""
         self._recover(table)
         final = self.path(table)
-        footer = next(
-            (
-                os.path.join(base, name)
-                for base, _dirs, files in os.walk(final)
-                for name in sorted(files)
-                if name.endswith(".parquet") and not name.startswith((".", "_"))
-            ),
-            None,
-        )
+        footer = next((os.path.join(final, r) for r in _parquet_files(final)), None)
         if footer is None:
             return self.read(table, schema)
         import pyarrow.parquet as pq
@@ -255,31 +299,47 @@ class ParquetStore:
             return self.read(table, schema)
         return self.read(table)
 
-    def _stage(self, df: DataFrame, table: str) -> tuple[str, int]:
-        """Materialize ``df`` once into a staging dir; return (dir, n).
-        The count is observed on the write itself — one job, no re-read
-        of the staged files."""
-        stage = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_stage_")
+    @contextlib.contextmanager
+    def _scratch(self, table: str, kind: str):
+        """A fresh dot-prefixed dir in the store root for staging a
+        mutation of ``table``; removed on exit, whatever happened (a
+        committed dir has already moved into the table by then). Made
+        with the process umask (``mkdtemp`` makes 0700 dirs): a
+        whole-table commit turns this dir into the table dir, which
+        other readers must be able to list."""
+        path = os.path.join(self.root, f".{table}_{kind}_{uuid.uuid4().hex[:12]}")
+        os.mkdir(path)
+        try:
+            yield path
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+
+    def _stage(self, df: DataFrame, table: str, stage: str) -> int:
+        """Materialize ``df`` once into ``stage``; return its row count,
+        observed on the write itself — one job, no re-read of the staged
+        files."""
         observed, obs = _rows_observed(df, f"{table}_stage")
         observed.write.mode("overwrite").parquet(stage)
-        return stage, obs.get["rows"]
+        return obs.get["rows"]
 
-    # ---- crash-consistency journal --------------------------------
-    # Every multi-step directory mutation (whole-table swap, partition
-    # swap, append file moves) writes a JOURNAL file into the store
-    # root before its first rename and removes it after cleanup. An
-    # EXCEPTION mid-mutation is rolled back in-process (the except
-    # blocks below); a PROCESS KILL mid-mutation leaves the journal
-    # behind, and ``_recover`` — invoked from every public read/write
-    # entry point — deterministically rolls the mutation back (journal
-    # not marked committed: every pre-state copy is still on disk as a
-    # ``.__bak``/untouched dir, so restore it) or forward (marked
-    # committed: the data renames all landed; only backup cleanup
-    # remained). Without this, a kill between the backup-rename and the
-    # move-in left table rows invisible to readers (dot-prefixed backup
-    # dirs are hidden from Spark) with no automatic repair.
+    # ---- the commit protocol --------------------------------------
+    # Every mutation of a table is ONE ``_commit``: a list of entries,
+    # each "put src at dst" or "remove dst". ``_commit`` writes a
+    # JOURNAL into the store root listing the entries (with the backup
+    # name of every dst that exists), renames each existing dst aside to
+    # its ``.__bak_`` name, renames each src in, marks the journal
+    # committed, drops the backups and removes the journal. Until the
+    # committed mark every pre-state copy is still on disk, so
+    # ``_rollback`` can undo the commit exactly. An EXCEPTION is undone
+    # in-process; a PROCESS KILL leaves the journal behind, and
+    # ``_recover`` — invoked from every public read/write entry point —
+    # undoes an uncommitted journal or finishes a committed one (drops
+    # its backups). Readers skip dot-prefixed names, so a backup is
+    # never read as data, and the table directory stays the only record
+    # of what the table holds: a plain directory read (pyarrow, Spark)
+    # sees the pre-state or the post-state.
     # Cost: one root listdir per public entry call; single-writer
-    # discipline assumed (the store is not concurrent-safe, as before).
+    # discipline assumed (the store is not concurrent-safe).
 
     @staticmethod
     def _check_meta_name(name: str) -> None:
@@ -303,82 +363,30 @@ class ParquetStore:
         is an EXPLICIT maintenance call with the same precondition: run
         it only when no writer is active on the store — a live
         mutation's stage dir is indistinguishable from an orphan.
-        Journals and the dirs they reference are preserved (those
-        belong to ``_recover``). Returns the removed names."""
+        Journals and every root-level name their entries mention are
+        preserved (those belong to ``_recover``). Returns the removed
+        names."""
         if not os.path.isdir(self.root):
             return []
-        names = os.listdir(self.root)
         live: set[str] = set()
-        journaled_tables: set[str] = set()
-        corrupt_owners: set[str] = set()
-        for name in names:
-            if name.startswith(".__journal_") and name.endswith(".json"):
-                try:
-                    with open(os.path.join(self.root, name)) as fh:
-                        payload = json.load(fh)
-                except (OSError, ValueError):
-                    # corrupt/unreadable journal: its table must still
-                    # be shielded (repair belongs to _recover, which
-                    # raises loudly on this table's next access). The
-                    # filename is `.__journal_{table}_{token}` and every
-                    # token is a mkdtemp basename starting `.{table}_`,
-                    # so the owner is the prefix before the first `_.`;
-                    # with no `_.` (foreign file), shield the whole
-                    # remainder — over-shielding only defers cleanup.
-                    # The owner enters BOTH shields: journaled_tables
-                    # (in-table meta-tmp sweep) and corrupt_owners (the
-                    # root sweep below must not rmtree `.{owner}_*`
-                    # stage/backup dirs — with the journal unreadable we
-                    # can't know WHICH of them the `live` set would have
-                    # pinned, and a backup dir may hold the only copy of
-                    # the table's data).
-                    rest = name[len(".__journal_"):-len(".json")]
-                    owner = rest.split("_.", 1)[0]
-                    journaled_tables.add(owner)
-                    corrupt_owners.add(owner)
-                    continue
-                # every journal kind pins the root-level dirs it could
-                # still touch (or that hold a crashed mutation's staged
-                # files): table_swap -> stage/backup, append -> src,
-                # partition_swap -> token (its staging tmp dir's name)
-                for field in ("stage", "backup", "src", "token"):
-                    live.add(payload.get(field) or "")
-                journaled_tables.add(payload.get("table") or "")
+        shielded: list[str] = []
+        for _name, owner, payload in self._journals():
+            if payload is None:
+                # an unreadable journal still owns its table's repair,
+                # and which dirs it names is unknown — a backup may
+                # hold the only copy of the table: shield every root
+                # name of the owner (over-shielding only defers cleanup)
+                shielded += [f".{owner}_", f".{owner}."]
+            else:
+                live.update(p.split(os.sep, 1)[0] for e in payload["entries"] for p in e if p)
         removed: list[str] = []
-        # orphaned meta tmp files INSIDE table dirs: a kill between a
-        # meta tmp write and its os.replace (write_meta, or a recovery
-        # rerun's _restore_meta) leaves `._{name}_tmp` that no journal
-        # references — parquet readers ignore dot-files but nothing
-        # else ever reclaims them. Tables with a live journal are
-        # skipped (their repair belongs to _recover, which also cleans
-        # these for journaled names).
-        for tname in names:
-            tdir = os.path.join(self.root, tname)
+        for name in sorted(os.listdir(self.root)):
             if (
-                tname.startswith(".")
-                or tname in journaled_tables
-                or not os.path.isdir(tdir)
+                not name.startswith(".")
+                or name in live
+                or name.startswith(tuple(shielded))
+                or name.startswith(".__journal_") and name.endswith(".json")
             ):
-                continue
-            for inner in os.listdir(tdir):
-                p = os.path.join(tdir, inner)
-                if (
-                    inner.startswith("._")
-                    and inner.endswith("_tmp")
-                    and os.path.isfile(p)
-                ):
-                    with contextlib.suppress(OSError):
-                        os.remove(p)
-                        removed.append(f"{tname}/{inner}")
-        for name in names:
-            if not name.startswith(".") or name in live:
-                continue
-            if name.startswith(".__journal_") and name.endswith(".json"):
-                continue  # consumed only by _recover
-            if any(name.startswith(f".{t}_") for t in corrupt_owners):
-                # a corrupt journal's stage/backup/src dirs are
-                # indistinguishable from orphans without the payload —
-                # and a backup dir may be the ONLY copy of the table
                 continue
             p = os.path.join(self.root, name)
             if os.path.isdir(p):
@@ -388,7 +396,7 @@ class ParquetStore:
                 with contextlib.suppress(OSError):
                     os.remove(p)
                     removed.append(name)
-        return sorted(removed)
+        return removed
 
     def _journal_path(self, table: str, token: str) -> str:
         return os.path.join(self.root, f".__journal_{table}_{token}.json")
@@ -414,184 +422,124 @@ class ParquetStore:
         finally:
             os.close(dfd)
 
-    def _recover(self, table: str) -> None:
-        if not os.path.isdir(self.root):
-            return
-        prefix = f".__journal_{table}_"
+    def _journals(self):
+        """(name, owner, payload) of each journal in the store root.
+        ``payload`` is None when the file is unreadable or not in the
+        commit shape. The owner is the payload's table; failing that it
+        comes from the file name ``.__journal_{table}_{token}``, whose
+        token starts ``.{table}_``, so it is what precedes the first
+        ``_.`` (a foreign name without one yields the whole remainder)."""
         for name in sorted(os.listdir(self.root)):
-            # the filename prefix is a cheap NECESSARY filter (this
-            # table's journals always carry it) but not sufficient:
-            # table names may contain underscores, so '.__journal_t_...'
-            # also prefix-matches a crashed sibling table 't_x'.
-            # Ownership is decided by the PAYLOAD's table field — a
-            # journal for any other table is left untouched (per-table
-            # single-writer discipline stays safe).
-            if not (name.startswith(prefix) and name.endswith(".json")):
+            if not (name.startswith(".__journal_") and name.endswith(".json")):
                 continue
-            jp = os.path.join(self.root, name)
             try:
-                with open(jp) as fh:
+                with open(os.path.join(self.root, name)) as fh:
                     payload = json.load(fh)
             except (OSError, ValueError):
-                # journals are written atomically (tmp+fsync+replace),
-                # so an unreadable one is disk corruption, not a
-                # half-write — and it is the ONLY repair record for
-                # whatever half-applied state is on disk. Ownership
-                # can't come from the payload; parse it from the
-                # filename (token is a mkdtemp basename starting
-                # `.{table}_`, so the owner is the prefix before the
-                # first `_.`). Raise ONLY for this table's own journal:
-                # a corrupt sibling's journal (prefix-match artifact)
-                # is that table's problem, surfaced on ITS access.
+                payload = None
+            owner = payload.get("table") if isinstance(payload, dict) else None
+            if not isinstance(owner, str):
                 owner = name[len(".__journal_"):-len(".json")].split("_.", 1)[0]
-                if owner == table:
-                    raise RuntimeError(
-                        f"ParquetStore: journal {name} for table "
-                        f"{table!r} is unreadable (corrupt); manual "
-                        f"recovery required (file preserved — it is "
-                        f"the only record of the crashed mutation)"
-                    )
+            yield name, owner, payload if _is_commit_journal(payload) else None
+
+    def _recover(self, table: str) -> None:
+        """Finish or undo every journal ``table`` owns. Ownership is
+        decided by the payload (table names may contain underscores, so
+        a file-name prefix also matches a sibling ``t_x``): another
+        table's journal is left to that table's next access."""
+        if not os.path.isdir(self.root):
+            return
+        for name, owner, payload in self._journals():
+            if owner != table:
                 continue
-            if payload.get("table") != table:
-                continue
-            kind = payload.get("kind")
-            if kind == "table_swap":
-                self._recover_table_swap(payload)
-            elif kind == "partition_swap":
-                self._recover_partition_swap(payload)
-            elif kind == "append":
-                self._recover_append(payload)
-            else:
-                # unknown kind (version skew / mangled field): KEEP the
-                # journal — it is the only repair record for whatever
-                # half-applied state is on disk; deleting it would make
-                # that state permanent with no evidence. Surface loudly.
+            if payload is None:
+                # journals are written atomically (tmp+fsync+replace),
+                # so this is corruption or version skew, not a
+                # half-write — and the file is the ONLY record of
+                # whatever half-applied state is on disk: keep it
                 raise RuntimeError(
                     f"ParquetStore: journal {name} for table {table!r} "
-                    f"has unrecognized kind {kind!r}; manual recovery "
-                    f"required (file preserved)"
+                    f"is unreadable or not in the commit-journal shape; "
+                    f"manual recovery required (file preserved — it is "
+                    f"the only record of the crashed mutation)"
                 )
-            with contextlib.suppress(OSError):
-                os.remove(jp)
+            self._rollback(payload)
+            os.remove(os.path.join(self.root, name))
 
-    def _recover_table_swap(self, payload: dict) -> None:
-        final = self.path(payload["table"])
-        stage = os.path.join(self.root, payload["stage"])
-        backup = os.path.join(self.root, payload["backup"])
-        if not os.path.isdir(stage):
-            # the stage→final rename (the commit point) happened: roll
-            # forward — only the backup cleanup remained
-            shutil.rmtree(backup, ignore_errors=True)
-            return
-        # commit point not reached: restore the pre-state
-        if not os.path.isdir(final) and os.path.isdir(backup):
-            os.replace(backup, final)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    def _recover_partition_swap(self, payload: dict) -> None:
-        final = self.path(payload["table"])
-        token = payload["token"]
-        if not os.path.isdir(final):
-            return
-        if payload.get("committed"):
-            # all move-ins landed; only backup cleanup remained
-            for e in payload["dirs"]:
-                bak = os.path.join(final, f".{e['name']}.__bak_{token}")
-                shutil.rmtree(bak, ignore_errors=True)
-            return
-        # not committed: every backed-up dir still has its backup
-        # (backups are only dropped AFTER the committed mark), so the
-        # exact pre-state is restorable
-        for e in payload["dirs"]:
-            d = os.path.join(final, e["name"])
-            bak = os.path.join(final, f".{e['name']}.__bak_{token}")
-            if os.path.isdir(bak):
-                shutil.rmtree(d, ignore_errors=True)
-                os.replace(bak, d)
-            elif not e["existed"]:
-                # a brand-new partition moved in before the kill
-                shutil.rmtree(d, ignore_errors=True)
-            # else: existed and never backed up -> untouched pre-state
-
-    @staticmethod
-    def _restore_meta(final: str, payload: dict) -> None:
-        """Roll the append's meta files back to their journaled
-        pre-state: delete ones that did not exist, rewrite priors
-        (tmp+rename, same atomicity as the forward write). Also removes
-        any stray ``.{name}_tmp`` left by a kill between the forward
-        path's tmp write and its os.replace — recovery owns cleanup for
-        JOURNALED meta names (this path); vacuum()'s table-dir sweep
-        covers the journal-less writers (write_meta) and skips tables
-        with a live journal precisely so the two never race."""
-        for name, prior in (payload.get("meta_prior") or {}).items():
-            target = os.path.join(final, name)
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(final, f".{name}_tmp"))
-            if prior is None:
-                with contextlib.suppress(OSError):
-                    os.remove(target)
-            else:
-                tmp = os.path.join(final, f".{name}_tmp")
-                with open(tmp, "w") as fh:
-                    fh.write(prior)
-                os.replace(tmp, target)
-
-    def _recover_append(self, payload: dict) -> None:
-        final = self.path(payload["table"])
-        if payload.get("committed") or not os.path.isdir(final):
-            return
-        # not committed: delete the files this append moved in (part
-        # file names are writer-UUID-unique, so the listed names can
-        # only have come from this append) and restore any meta files
-        # that were to commit with them
-        self._restore_meta(final, payload)
-        for rel in payload["files"]:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(final, rel))
-        if payload.get("created"):
-            # the append CREATED the table directory; pre-state is "no
-            # table" — an empty leftover dir would flip exists() to
-            # True and crash read() on schema inference
-            shutil.rmtree(final, ignore_errors=True)
-
-    def _swap_in(self, stage: str, table: str) -> None:
-        """Replace the table directory with ``stage`` via backup-rename:
-        the old table is RENAMED aside (atomic, cheap), the stage renamed
-        in, then the backup dropped. A failure between the two renames
-        restores the backup — at no point is the only copy of the data
-        mid-``rmtree`` (the destroy-then-rename pattern loses the table
-        if the process dies between the two steps). Journaled: a process
-        kill at ANY step is repaired by ``_recover`` on next access —
-        pre-state if the stage→final rename (the commit point) had not
-        happened, post-state otherwise."""
-        final = self.path(table)
-        token = os.path.basename(stage)
-        backup = os.path.join(self.root, f".{table}_backup_{token}")
-        payload = {
-            "kind": "table_swap",
-            "table": table,
-            "stage": token,
-            "backup": os.path.basename(backup),
-        }
+    def _commit(self, table: str, entries: list[tuple[str, str | None]]) -> None:
+        """Apply ``entries`` — (dst, src) paths: put ``src`` at ``dst``,
+        or remove ``dst`` when ``src`` is None — as one all-or-nothing
+        commit (the protocol above). Returns with every entry applied or
+        raises with none applied; after a kill at any step the next
+        access recovers the one or the other. A dst that exists is
+        renamed aside, never deleted, until the committed mark: no step
+        holds the only copy of the data mid-delete."""
+        token = f".{table}_{uuid.uuid4().hex[:12]}"
+        journal = []
+        for dst, src in entries:
+            d = os.path.relpath(dst, self.root)
+            bak = None
+            if os.path.lexists(dst):
+                bak = os.path.join(os.path.dirname(d), f".{os.path.basename(d)}.__bak_{token}")
+            journal.append([d, src and os.path.relpath(src, self.root), bak])
+        payload = {"table": table, "entries": journal, "committed": False}
         jp = self._journal_path(table, token)
         self._journal_write(jp, payload)
-        _crash_point("table_swap:journaled")
+        at = functools.partial(os.path.join, self.root)
         try:
-            if os.path.isdir(final):
-                os.replace(final, backup)
-            _crash_point("table_swap:backed_up")
-            os.replace(stage, final)
-        except Exception:
-            if not os.path.isdir(final) and os.path.isdir(backup):
-                os.replace(backup, final)
-            shutil.rmtree(stage, ignore_errors=True)
-            with contextlib.suppress(OSError):
-                os.remove(jp)
-            raise
-        _crash_point("table_swap:swapped")
-        shutil.rmtree(backup, ignore_errors=True)
-        with contextlib.suppress(OSError):
+            _crash_point("commit:journaled")
+            for d, _src, bak in journal:
+                if bak:
+                    os.replace(at(d), at(bak))
+                    _crash_point("commit:backed_up")
+            for d, src, _bak in journal:
+                if src:
+                    os.replace(at(src), at(d))
+                    _crash_point("commit:moved")
+            payload["committed"] = True
+            self._journal_write(jp, payload)
+            _crash_point("commit:committed")
+        except Exception as exc:
+            if _CRASH_HOOK is not None and getattr(exc, "simulate_kill", False):
+                # Test seam (streaming kill sweep): a BaseException-based
+                # simulated kill deadlocks py4j's foreachBatch callback
+                # thread, so the streaming tests raise a plain Exception
+                # MARKED simulate_kill — skip the in-process rollback
+                # exactly as a real kill would, leaving the journal for
+                # _recover. Gated on the hook being installed so a
+                # production exception that happens to carry the
+                # attribute can never suppress rollback.
+                raise
+            if payload["committed"]:
+                # the caller gets an error, so it must find the
+                # pre-state; the backups still exist — un-mark first,
+                # so a kill during the undo still rolls back
+                payload["committed"] = False
+                self._journal_write(jp, payload)
+            self._rollback(payload)
             os.remove(jp)
+            raise
+        self._rollback(payload)
+        os.remove(jp)
+
+    def _rollback(self, payload: dict) -> None:
+        """Undo an uncommitted journal's entries, last first: a dst with
+        a backup gets it back (whatever moved in is removed first); a
+        src moved onto a dst that did not exist is removed; a dst not
+        yet renamed aside is still the pre-state. For a committed
+        journal only the backups are dropped. Idempotent, so a kill
+        mid-rollback is repaired by the next access."""
+        for dst, src, bak in reversed(payload["entries"]):
+            d = os.path.join(self.root, dst)
+            b = bak and os.path.join(self.root, bak)
+            if payload["committed"]:
+                if b:
+                    _remove(b)
+            elif b and os.path.lexists(b):
+                _remove(d)
+                os.replace(b, d)
+            elif src and not b:
+                _remove(d)
 
     def insert(
         self,
@@ -605,9 +553,8 @@ class ParquetStore:
         One plan execution: stage (row count observed on the write) →
         append into the table directory.
 
-        ``meta_files`` commit ATOMICALLY with the appended rows (written
-        inside the same journaled mutation, rolled back together on a
-        kill) — the streaming ingest's ``_LAST_INGEST_EPOCH`` replay
+        ``meta_files`` commit ATOMICALLY with the appended rows (entries
+        of the same commit, rolled back together on a kill) — the streaming ingest's ``_LAST_INGEST_EPOCH`` replay
         marker uses this so there is NO window where rows are committed
         but the marker is not (the round-8 code documented that window
         as the at-least-once residual; round 9 closed it). On an empty
@@ -635,13 +582,11 @@ class ParquetStore:
         disable inference session-wide."""
         self._recover(table)
         self._check_layout(table, partition_by)
-        stage, n = self._stage(df, table)
         files = nbytes = 0
-        try:
+        with self._scratch(table, "stage") as stage:
+            n = self._stage(df, table, stage)
             if n:
                 files, nbytes = self._land(stage, df.schema, table, partition_by, meta_files)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
         self.last_landed = Landed(n, n, files, nbytes)
         return n
 
@@ -655,148 +600,76 @@ class ParquetStore:
     ) -> tuple[int, int]:
         """Append the rows staged in ``stage`` (written with ``schema``)
         to the table: flat part files move in as they are; a hive
-        layout is first rewritten from the stage into a second tmp dir
-        (a file scan of the staged snapshot, not a plan re-run). The
-        move-in is journaled (``_append_files``): a direct
-        ``mode("append")`` into the live table would leave a PARTIAL
-        append visible if the process died mid-write. Returns the
-        (files, bytes) that landed."""
+        layout is first rewritten from the stage into a second scratch
+        dir (a file scan of the staged snapshot, not a plan re-run).
+        Returns the (files, bytes) that landed."""
         if not partition_by:
-            rels = sorted(name for name in os.listdir(stage) if name.endswith(".parquet"))
-            landed = _data_files(stage, rels)
-            self._append_files(stage, table, rels, meta_files)
-            return landed
-        lay = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_ins_")
-        try:
+            return self._append(stage, table, meta_files)
+        with self._scratch(table, "ins") as lay:
             (
                 self.spark.read.schema(schema).parquet(stage)
                 .write.mode("overwrite")
                 .partitionBy(*partition_by)
                 .parquet(lay)
             )
-            rels = [
-                os.path.relpath(os.path.join(r, fname), lay)
-                for r, _dirs, files in os.walk(lay)
-                for fname in files
-                if fname.endswith(".parquet")
-            ]
-            landed = _data_files(lay, rels)
-            self._append_files(lay, table, sorted(rels), meta_files)
-            return landed
-        finally:
-            shutil.rmtree(lay, ignore_errors=True)
+            return self._append(lay, table, meta_files)
 
-    def _append_files(
-        self,
-        src_root: str,
-        table: str,
-        rels: list[str],
-        meta_files: dict[str, str] | None = None,
-    ) -> None:
-        """Journaled all-or-nothing file append: move ``rels`` (parquet
-        files under ``src_root``, writer-UUID-unique names) into the
-        table directory, then write ``meta_files`` — all before the
-        committed mark, so rows and meta commit together. A kill
-        mid-move (or mid-meta) is rolled back by ``_recover``
-        (uncommitted journal → the listed files are deleted and each
-        meta file restored to the journaled prior value; an empty
-        ``col=value`` dir a rolled-back move may leave behind holds no
-        rows and is rewritten by the next append)."""
+    def _append(
+        self, src_root: str, table: str, meta_files: dict[str, str] | None
+    ) -> tuple[int, int]:
+        """Commit the parquet files under ``src_root`` into the table,
+        with ``meta_files`` (rows and meta commit together, so a replay
+        marker never advances without its rows). A missing table is the
+        whole ``src_root`` moved in; otherwise each file is an entry
+        (writer-UUID-unique names), a partition dir the table lacks
+        moves in whole, and each meta file is an entry that replaces
+        the stored one. A direct ``mode("append")`` into the live table
+        would leave a PARTIAL append visible if the process died
+        mid-write. Returns the (files, bytes) that landed."""
         for name in meta_files or {}:
             self._check_meta_name(name)
+        for name, contents in (meta_files or {}).items():
+            with open(os.path.join(src_root, name), "w") as fh:
+                fh.write(contents)
+        landed = _data_files(src_root)
         final = self.path(table)
-        token = os.path.basename(src_root)
-        payload = {
-            "kind": "append",
-            "table": table,
-            "files": rels,
-            # root-level staging dir holding the not-yet-moved files:
-            # vacuum() must not delete it while this journal is live
-            # (recovery never reads it, but a concurrent-with-crash
-            # vacuum deleting mid-mutation state contradicts vacuum's
-            # "journaled dirs are preserved" contract)
-            "src": token,
-            # pre-state marker: a rolled-back append that CREATED the
-            # table must remove the directory again, not leave an empty
-            # husk that flips exists()
-            "created": not os.path.isdir(final),
-            # meta files committing WITH this append + their pre-state
-            # (None = absent), so rollback/recovery restores them with
-            # the rows. Without meta_prior a kill after the meta write
-            # but before the committed mark would roll the rows back
-            # and LEAVE the advanced marker — the streaming replay
-            # would then skip the epoch: silent data loss (caught by
-            # the round-9 review's live repro).
-            "meta": meta_files or {},
-            "meta_prior": {
-                name: self.read_meta(table, name) for name in (meta_files or {})
-            },
-        }
-        jp = self._journal_path(table, token)
-        self._journal_write(jp, payload)
-        _crash_point("append:journaled")
-        os.makedirs(final, exist_ok=True)
-        try:
-            for rel in rels:
-                dst = os.path.join(final, rel)
-                os.makedirs(os.path.dirname(dst) or final, exist_ok=True)
-                os.replace(os.path.join(src_root, rel), dst)
-                _crash_point("append:moved")
-            for name, contents in (meta_files or {}).items():
-                tmp = os.path.join(final, f".{name}_tmp")
-                with open(tmp, "w") as fh:
-                    fh.write(contents)
-                os.replace(tmp, os.path.join(final, name))
-                _crash_point("append:meta")
-        except Exception as exc:
-            if _CRASH_HOOK is not None and getattr(exc, "simulate_kill", False):
-                # Test seam (streaming kill sweep): a BaseException-based
-                # simulated kill deadlocks py4j's foreachBatch callback
-                # thread, so the streaming tests raise a plain Exception
-                # MARKED simulate_kill — skip the in-process rollback
-                # exactly as a real kill would, leaving the journal for
-                # _recover. Gated on the hook being installed so a
-                # production exception that happens to carry the
-                # attribute can never suppress rollback.
-                raise
-            self._restore_meta(final, payload)
-            for rel in rels:
-                with contextlib.suppress(OSError):
-                    os.remove(os.path.join(final, rel))
-            if payload["created"]:
-                # same rule as _recover_append: an append that CREATED
-                # the table must remove the directory again on rollback,
-                # not leave an empty husk that flips exists()
-                shutil.rmtree(final, ignore_errors=True)
-            with contextlib.suppress(OSError):
-                os.remove(jp)
-            raise
-        payload["committed"] = True
-        self._journal_write(jp, payload)
-        _crash_point("append:committed")
-        with contextlib.suppress(OSError):
-            os.remove(jp)
+        if not os.path.isdir(final):
+            self._commit(table, [(final, src_root)])
+            return landed
+
+        def head(rel: str) -> str:
+            # the shallowest part of ``rel`` the table lacks
+            parts = rel.split(os.sep)
+            for i in range(1, len(parts)):
+                if not os.path.isdir(os.path.join(final, *parts[:i])):
+                    return os.path.join(*parts[:i])
+            return rel
+
+        rels = list(dict.fromkeys(head(r) for r in _parquet_files(src_root))) + list(meta_files or {})
+        self._commit(table, [(os.path.join(final, r), os.path.join(src_root, r)) for r in rels])
+        return landed
 
     def overwrite(
         self, df: DataFrame, table: str, meta_files: dict[str, str] | None = None
     ) -> int:
-        """Replace the table with ``df`` atomically (stage → backup-
-        rename swap). The primitive under rollup maintenance: the
-        replacement is computed BEFORE the old table is touched, and the
-        swap never holds the only copy mid-delete (see _swap_in).
+        """Replace the table with ``df`` atomically: a one-entry commit
+        of the staged dir over the table dir. The primitive under rollup
+        maintenance: the replacement is computed BEFORE the old table is
+        touched, and the commit never holds the only copy mid-delete.
 
         ``meta_files`` (name → contents) land inside the staged dir
-        before the swap, so table data and metadata (e.g. the rollup's
-        last-applied epoch marker) commit in the SAME atomic rename —
+        before the commit, so table data and metadata (e.g. the rollup's
+        last-applied epoch marker) commit in the SAME rename —
         underscore-prefixed names are ignored by parquet readers."""
         self._recover(table)
         for name in meta_files or {}:
             self._check_meta_name(name)
-        stage, n = self._stage(df, table)
-        for name, contents in (meta_files or {}).items():
-            with open(os.path.join(stage, name), "w") as fh:
-                fh.write(contents)
-        self._swap_in(stage, table)
+        with self._scratch(table, "stage") as stage:
+            n = self._stage(df, table, stage)
+            for name, contents in (meta_files or {}).items():
+                with open(os.path.join(stage, name), "w") as fh:
+                    fh.write(contents)
+            self._commit(table, [(self.path(table), stage)])
         return n
 
     def read_meta(self, table: str, name: str) -> str | None:
@@ -811,18 +684,19 @@ class ParquetStore:
 
     def write_meta(self, table: str, name: str, contents: str) -> None:
         """Atomically write/replace one metadata file on an EXISTING
-        table (tmp file + rename — readers never see a partial write).
+        table (a one-entry commit — readers never see a partial write).
         Not transactional with any data write: when metadata must commit
-        with the data in one rename, use overwrite(meta_files=...)."""
+        with the data, use overwrite(meta_files=...) or
+        insert(meta_files=...)."""
         self._recover(table)
         final = self.path(table)
         if not os.path.isdir(final):
             raise FileNotFoundError(table)
         self._check_meta_name(name)
-        tmp = os.path.join(final, f".{name}_tmp")
-        with open(tmp, "w") as fh:
-            fh.write(contents)
-        os.replace(tmp, os.path.join(final, name))
+        with self._scratch(table, "meta") as tmp:
+            with open(os.path.join(tmp, name), "w") as fh:
+                fh.write(contents)
+            self._commit(table, [(os.path.join(final, name), os.path.join(tmp, name))])
 
     def _copy_meta_files(self, table: str, dst: str) -> None:
         """Carry user meta files (underscore-prefixed top-level files,
@@ -853,31 +727,21 @@ class ParquetStore:
     ):
         """Shared maintenance-rewrite discipline (upsert fallback,
         compact, cluster_rewrite, delete_rows): write ``out`` into a
-        fresh tmp dir (hive layout when ``part_cols``), carry the
-        table's meta files over, run ``pre_swap(tmp)`` INSIDE the
-        guarded region (so a failing post-write read still cleans tmp
-        up), then backup-rename swap. Returns pre_swap's result."""
-        tmp = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_{prefix}_")
-        try:
+        scratch dir (hive layout when ``part_cols``), carry the table's
+        meta files over, run ``pre_swap(tmp)``, then commit the dir over
+        the table. Returns pre_swap's result."""
+        with self._scratch(table, prefix) as tmp:
             writer = out.write.mode("overwrite")
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(tmp)
             self._copy_meta_files(table, tmp)
             result = pre_swap(tmp) if pre_swap is not None else None
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        self._swap_in(tmp, table)
+            self._commit(table, [(self.path(table), tmp)])
         return result
 
     def _parquet_file_count(self, table: str) -> int:
-        return sum(
-            1
-            for _root, _dirs, files in os.walk(self.path(table))
-            for name in files
-            if name.endswith(".parquet")
-        )
+        return len(_parquet_files(self.path(table)))
 
     def compact(
         self, table: str, target_files: int, partition_by: list[str] | None = None
@@ -1046,10 +910,10 @@ class ParquetStore:
         unchanged key would delete and re-add the same rows, so leaving
         it alone gives the same table. Then:
 
-        - **No changed key**: nothing else runs — no swap, and no file
+        - **No changed key**: nothing else runs — no commit, and no file
           of the table is touched (a master sheet re-upserted unchanged).
-        - **Only new keys**: the staged rows are appended through the
-          journaled ``_land`` path, in the table's own layout.
+        - **Only new keys**: the staged rows are appended (``_land``:
+          one commit entry per new file), in the table's own layout.
         - **Changed keys**: the merge below runs on the staged rows only.
 
           - *Partition-scoped merge* (hive-partitioned table, single
@@ -1059,26 +923,26 @@ class ParquetStore:
             partitions holding a colliding PK (covers rows whose
             partition value changes). Kept rows of affected partitions
             are anti-joined against the staged PKs, unioned with them,
-            written to a temp dir and swapped in per partition via
-            backup-rename. Untouched partition directories are never
+            written to a temp dir and committed with one entry per
+            affected partition dir. Untouched partition directories are never
             rewritten; the plain-parquet analogue of Delta/Iceberg
             MERGE file pruning.
           - *Full rewrite* (flat table, multi-level layouts, or a
             partition-name roundtrip mismatch): anti-join keeps the
             non-colliding stored rows, union with the staged rows, write
-            to a temp dir and atomically swap — O(table) write cost.
+            to a temp dir and commit it over the table — O(table) write
+            cost.
 
-        A failed write never corrupts the table on any path (temp dir +
-        journaled append or backup-rename; no step holds the only copy
-        mid-delete).
+        A failed write never corrupts the table on any path: every path
+        ends in one ``_commit``, which never holds the only copy
+        mid-delete.
         """
         self._recover(table)
         part_cols = self._detect_partition_cols(table)
         stored = self._read_stored(table, df.schema)
         delta, obs = _changed_rows(df, stored, pk)
-        stage = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_stage_")
         files = nbytes = 0
-        try:
+        with self._scratch(table, "stage") as stage:
             delta.write.mode("overwrite").parquet(stage)
             d = obs.get
             if d["delta_rows"] and not d["changed_keys"]:
@@ -1086,8 +950,6 @@ class ParquetStore:
             elif d["delta_rows"]:
                 staged = self.spark.read.schema(delta.schema).parquet(stage)
                 files, nbytes = self._merge(staged, stored, table, pk, part_cols)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
         self.last_landed = Landed(d["rows"], d["delta_rows"], files, nbytes)
         return d["rows"]
 
@@ -1162,8 +1024,7 @@ class ParquetStore:
         # Partition-pruned read: only affected directories are scanned.
         kept = current.filter(pred).join(in_keys, pk, "left_anti")
         merged = kept.unionByName(incoming)
-        tmp = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_pmerge_")
-        try:
+        with self._scratch(table, "pmerge") as tmp:
             merged.write.mode("overwrite").partitionBy(pc).parquet(tmp)
             tmp_dirs = {
                 d for d in os.listdir(tmp)
@@ -1174,89 +1035,16 @@ class ParquetStore:
                 # dir we did not predict. Fall back before touching final.
                 return None
             landed = _data_files(tmp)
-            self._swap_partitions(tmp, table, sorted(want | tmp_dirs))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            # one entry per affected partition: rewritten dirs move in,
+            # an affected dir the merge emptied is removed; untouched
+            # partition dirs are never renamed — their files stay
+            # byte-identical (pinned by tests/test_operators.py and
+            # tests/test_round7.py)
+            self._commit(table, [
+                (os.path.join(final, d), os.path.join(tmp, d) if d in tmp_dirs else None)
+                for d in sorted(want | tmp_dirs)
+            ])
         return landed
-
-    def _swap_partitions(
-        self, tmp: str, table: str, affected_dirs: list[str]
-    ) -> None:
-        """Per-partition backup-rename swap: affected dirs in ``final``
-        are renamed aside, the rewritten dirs moved in from ``tmp``
-        (an affected dir absent from ``tmp`` was emptied by the merge
-        and stays removed), backups dropped on success, restored on
-        failure. Untouched partition directories are never renamed or
-        rewritten — their files stay byte-identical (pinned by
-        tests/test_operators.py and tests/test_round7.py).
-
-        Rollback removes every dir already moved in from ``tmp`` —
-        including NEW partitions that had no backup to restore —
-        before restoring backups, so a mid-swap failure leaves the
-        exact pre-upsert state (no PK left duplicated across its old
-        and new partition).
-
-        Journaled: the journal (affected dirs + existed-before flags)
-        is written before the first rename and marked committed only
-        after EVERY move-in — backups are dropped strictly after the
-        committed mark, so a process kill at any step is repaired by
-        ``_recover``: uncommitted → every renamed dir still has its
-        backup, restore the exact pre-state; committed → only backup
-        cleanup remained, finish it."""
-        final = self.path(table)
-        token = os.path.basename(tmp)
-        tmp_dirs = sorted(
-            d
-            for d in os.listdir(tmp)
-            if "=" in d and os.path.isdir(os.path.join(tmp, d))
-        )
-        payload = {
-            "kind": "partition_swap",
-            "table": table,
-            "token": token,
-            "dirs": [
-                {
-                    "name": d,
-                    "existed": os.path.isdir(os.path.join(final, d)),
-                }
-                for d in sorted(set(affected_dirs) | set(tmp_dirs))
-            ],
-        }
-        jp = self._journal_path(table, token)
-        self._journal_write(jp, payload)
-        _crash_point("partition_swap:journaled")
-        backups: list[tuple[str, str]] = []
-        moved_in: list[str] = []
-        try:
-            for d in affected_dirs:
-                src = os.path.join(final, d)
-                if os.path.isdir(src):
-                    bak = os.path.join(final, f".{d}.__bak_{token}")
-                    os.replace(src, bak)
-                    backups.append((src, bak))
-                    _crash_point("partition_swap:backed_up")
-            for d in tmp_dirs:
-                p = os.path.join(tmp, d)
-                dst = os.path.join(final, d)
-                os.replace(p, dst)
-                moved_in.append(dst)
-                _crash_point("partition_swap:moved_in")
-        except Exception:
-            for dst in moved_in:
-                shutil.rmtree(dst, ignore_errors=True)
-            for src, bak in backups:
-                if not os.path.isdir(src):
-                    os.replace(bak, src)
-            with contextlib.suppress(OSError):
-                os.remove(jp)
-            raise
-        payload["committed"] = True
-        self._journal_write(jp, payload)
-        _crash_point("partition_swap:committed")
-        for _src, bak in backups:
-            shutil.rmtree(bak, ignore_errors=True)
-        with contextlib.suppress(OSError):
-            os.remove(jp)
 
     def delete_rows(self, table: str, key: str, keys: DataFrame) -> int:
         """Targeted deletion — the right-to-be-forgotten / takedown
@@ -1265,7 +1053,7 @@ class ParquetStore:
         partition layout. Returns the number of rows removed.
 
         Plain-parquet emulation of ``DELETE FROM t WHERE key IN (...)``:
-        anti-join rewrite + backup-rename swap (same discipline as
+        anti-join rewrite + one-entry commit (same discipline as
         upsert — no step holds the only copy mid-delete). The delete-key
         set is request-sized (a takedown list, not a table), so the
         anti-join broadcasts it; the rewrite cost is O(table), which is

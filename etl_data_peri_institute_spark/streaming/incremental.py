@@ -44,7 +44,7 @@ def incremental_ingest(
         # foreachBatch is at-least-once; INSERT is not idempotent, so an
         # epoch marker makes replays no-ops. The marker commits
         # ATOMICALLY with the appended rows (insert(meta_files=...) —
-        # one journaled mutation, rolled back together by crash
+        # entries of one store commit, rolled back together by crash
         # recovery), so a kill at ANY step leaves either rows+marker or
         # neither: exactly-once with no residual window (the round-8
         # code wrote the marker after the insert and documented the gap

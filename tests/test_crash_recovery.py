@@ -1,23 +1,29 @@
-"""Crash-consistency sweep for ParquetStore's journaled mutations.
+"""Crash-consistency sweeps for ParquetStore's commit protocol.
 
-Simulates a process kill BETWEEN every pair of steps of every journaled
-directory mutation (whole-table swap, partition swap, append file
-moves) by raising a BaseException subclass from the ``_CRASH_HOOK``
-test seam — BaseException skips the ``except Exception`` in-process
-rollbacks exactly like a real kill, leaving the journal and any
-half-applied renames on disk. The next store access must then repair
-the table to EXACTLY the pre-mutation state (crash before the commit
-point) or EXACTLY the post-mutation state (crash after), never a mix,
-never missing rows, never a visible backup dir.
+Every mutation is one ``_commit`` (journal, backups, moves, committed
+mark). The sweeps stop a mutation at every step of its commit in two
+ways, through the ``_CRASH_HOOK`` test seam:
+
+- a simulated process KILL (a BaseException subclass, which skips the
+  ``except Exception`` in-process rollback exactly like a real kill,
+  leaving the journal and any half-applied renames on disk): the next
+  store access must repair the table to EXACTLY the pre-mutation state
+  (killed before the committed mark) or EXACTLY the post-mutation state
+  (killed after), never a mix, never missing rows, never a visible
+  backup;
+- an ordinary EXCEPTION: the in-process rollback must leave exactly the
+  pre-state, with no journal, backup or staging dir left behind.
 
 This is the systematic version of the point-wise rollback tests in
 tests/test_operators.py: those pin one failure site each; this sweeps
-every site, so a new step added to a swap is automatically covered.
+every site, so a new step added to a commit is automatically covered.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import unittest.mock as mock
 
 import pytest
 
@@ -29,12 +35,32 @@ class _SimulatedCrash(BaseException):
     """Not an Exception: must bypass in-process rollback like a kill."""
 
 
+class _StepFailed(Exception):
+    """An ordinary error: must be rolled back in-process."""
+
+
 def _rows(store: ParquetStore, table: str) -> list[tuple]:
     """MULTISET of rows (sorted list, not a set): a recovery bug that
     leaves the same row visible twice (partition restored from backup
     while a moved-in copy also survives) must fail the compare."""
     df = store.read(table)
     return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _state(store: ParquetStore):
+    """Table ``t``'s rows (None when there is no table) and its
+    ``_LAST_EPOCH`` marker; reading it runs recovery first."""
+    rows = _rows(store, "t") if store.exists("t") else None
+    return rows, store.read_meta("t", "_LAST_EPOCH")
+
+
+def _leftovers(store: ParquetStore) -> list[str]:
+    """Journals, staging dirs and backups: every dot-prefixed name in
+    the store root, and every ``.__bak_`` name below it."""
+    out = [n for n in os.listdir(store.root) if n.startswith(".")]
+    for base, dirs, files in os.walk(store.root):
+        out += [os.path.join(base, n) for n in dirs + files if ".__bak_" in n]
+    return out
 
 
 def _crash_labels(spark, tmp_path, monkeypatch, seed, mutate, sub) -> list[str]:
@@ -51,63 +77,61 @@ def _crash_labels(spark, tmp_path, monkeypatch, seed, mutate, sub) -> list[str]:
 
 
 # labels AFTER which the mutation is committed (the hook fires after
-# its step completes, so crashing AT these labels leaves post-state)
-_COMMIT_LABELS = {
-    "table_swap:swapped",
-    "partition_swap:committed",
-    "append:committed",
-}
+# its step completes, so a kill AT this label leaves post-state)
+_COMMIT_LABELS = {"commit:committed"}
 
 
-def _sweep(spark, tmp_path, monkeypatch, seed, mutate, sub) -> list[str]:
-    """Crash at every step index; assert exact pre/post recovery."""
+def _stop_at(monkeypatch, k: int, exc: type[BaseException]) -> None:
+    """Install a hook that raises ``exc`` at the k-th crash point."""
+    calls = {"n": 0}
+
+    def hook(lbl):
+        if calls["n"] == k:
+            raise exc(lbl)
+        calls["n"] += 1
+
+    monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
+
+
+def _sweep(spark, tmp_path, monkeypatch, seed, mutate, sub, changes=True) -> list[str]:
+    """Kill, then raise, at every step index; assert exact pre/post
+    recovery after a kill and exact pre-state after a raise."""
     labels = _crash_labels(spark, tmp_path, monkeypatch, seed, mutate, sub)
     assert labels, "mutation passed no crash points — seam not wired"
 
-    # reference pre/post row sets from clean runs
+    # reference pre/post states from clean runs
     ref = ParquetStore(spark, str(tmp_path / f"{sub}_ref"))
     seed(ref)
-    pre = _rows(ref, "t")
+    pre = _state(ref)
     mutate(ref)
-    post = _rows(ref, "t")
-    assert pre != post, "mutation must change the table or the sweep is vacuous"
+    post = _state(ref)
+    if changes:
+        assert pre != post, "mutation must change the table or the sweep is vacuous"
 
-    for k, label in enumerate(labels):
-        store = ParquetStore(spark, str(tmp_path / f"{sub}_k{k}"))
-        seed(store)
-
-        calls = {"n": 0}
-
-        def hook(lbl, _k=k):
-            if calls["n"] == _k:
-                raise _SimulatedCrash(lbl)
-            calls["n"] += 1
-
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
-        try:
-            with pytest.raises(_SimulatedCrash):
-                mutate(store)
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-
-        expected = post if label in _COMMIT_LABELS else pre
-        got = _rows(store, "t")  # read() runs recovery first
-        assert got == expected, (
-            f"crash at step {k} ({label}): recovered rows are neither "
-            f"exact pre nor the expected state"
-        )
-        # recovery must consume the journal and leave no visible backups
-        root = store.root
-        leftovers = [
-            n for n in os.listdir(root) if n.startswith(".__journal_")
-        ]
-        assert leftovers == [], (k, label, leftovers)
-        tdir = store.path("t")
-        if os.path.isdir(tdir):
-            baks = [n for n in os.listdir(tdir) if ".__bak_" in n]
-            assert baks == [], (k, label, baks)
-        # recovery is idempotent: a second read sees the same rows
-        assert _rows(store, "t") == expected
+    for mode, exc in (("kill", _SimulatedCrash), ("raise", _StepFailed)):
+        for k, label in enumerate(labels):
+            store = ParquetStore(spark, str(tmp_path / f"{sub}_{mode}{k}"))
+            seed(store)
+            _stop_at(monkeypatch, k, exc)
+            try:
+                with pytest.raises(exc):
+                    mutate(store)
+            finally:
+                monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+            if mode == "raise":
+                # rolled back in-process, before any further access
+                assert _leftovers(store) == [], (k, label, _leftovers(store))
+                expected = pre
+            else:
+                expected = post if label in _COMMIT_LABELS else pre
+            assert _state(store) == expected, (
+                f"{mode} at step {k} ({label}): recovered state is neither "
+                f"exact pre nor the expected state"
+            )
+            # recovery consumes the journal and leaves no backups
+            assert _leftovers(store) == [], (mode, k, label, _leftovers(store))
+            # and is idempotent: a second read sees the same state
+            assert _state(store) == expected
     return labels
 
 
@@ -126,11 +150,25 @@ def _seed_partitioned(store: ParquetStore) -> None:
     store.insert(df, "t", partition_by=["dt"])
 
 
+def _seed_flat_epoch(store: ParquetStore) -> None:
+    _seed_flat(store)
+    store.write_meta("t", "_LAST_EPOCH", "7")
+
+
+def _seed_partitioned_epoch(store: ParquetStore) -> None:
+    _seed_partitioned(store)
+    store.write_meta("t", "_LAST_EPOCH", "7")
+
+
+_SWAP = ["commit:journaled", "commit:backed_up", "commit:moved", "commit:committed"]
+
+
 def test_crash_sweep_partition_scoped_upsert(spark, tmp_path, monkeypatch):
-    """Partition-swap journal: the upsert touches an existing partition
-    (update), moves a PK across partitions, and creates a brand-new
-    partition — all three recovery cases (backed-up dir, moved-in dir
-    with backup, moved-in dir with NO backup) are in one sweep."""
+    """One entry per affected partition: the upsert touches an existing
+    partition (update), moves a PK across partitions, and creates a
+    brand-new partition — all three rollback cases (backed-up dir,
+    moved-in dir with backup, moved-in dir with NO backup) are in one
+    sweep."""
 
     def mutate(store: ParquetStore) -> None:
         inc = store.spark.createDataFrame(
@@ -141,11 +179,13 @@ def test_crash_sweep_partition_scoped_upsert(spark, tmp_path, monkeypatch):
     labels = _sweep(
         spark, tmp_path, monkeypatch, _seed_partitioned, mutate, "pswap"
     )
-    assert any(lbl.startswith("partition_swap:") for lbl in labels)
+    assert labels.count("commit:backed_up") == 2  # d1 and d2, not d3
+    assert labels.count("commit:moved") == 3
 
 
 def test_crash_sweep_overwrite_table_swap(spark, tmp_path, monkeypatch):
-    """Table-swap journal: overwrite() replaces the whole directory."""
+    """Whole-table swap: overwrite() is one entry, the staged dir put
+    at the table dir."""
 
     def mutate(store: ParquetStore) -> None:
         out = store.spark.createDataFrame(
@@ -154,12 +194,12 @@ def test_crash_sweep_overwrite_table_swap(spark, tmp_path, monkeypatch):
         store.overwrite(out, "t")
 
     labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "tswap")
-    assert "table_swap:swapped" in labels
+    assert labels == _SWAP
 
 
 def test_crash_sweep_delete_rows_rewrite(spark, tmp_path, monkeypatch):
-    """_rewrite_and_swap path (delete_rows) rides the same table-swap
-    journal; the partitioned layout must survive pre-state recovery."""
+    """_rewrite_and_swap path (delete_rows) rides the same whole-table
+    commit; the partitioned layout must survive pre-state recovery."""
 
     def mutate(store: ParquetStore) -> None:
         keys = store.spark.createDataFrame([(1,)], "pk int")
@@ -169,10 +209,10 @@ def test_crash_sweep_delete_rows_rewrite(spark, tmp_path, monkeypatch):
 
 
 def test_crash_sweep_partitioned_append(spark, tmp_path, monkeypatch):
-    """Append journal: a partitioned insert that extends an existing
-    partition AND creates a new one must be all-or-nothing — the old
-    direct ``mode("append")`` write could leave a partial append
-    visible after a kill."""
+    """Append: a partitioned insert that extends an existing partition
+    (a file entry) AND creates a new one (a dir entry) must be
+    all-or-nothing — the old direct ``mode("append")`` write could leave
+    a partial append visible after a kill."""
 
     def mutate(store: ParquetStore) -> None:
         inc = store.spark.createDataFrame(
@@ -183,7 +223,7 @@ def test_crash_sweep_partitioned_append(spark, tmp_path, monkeypatch):
     labels = _sweep(
         spark, tmp_path, monkeypatch, _seed_partitioned, mutate, "papp"
     )
-    assert "append:committed" in labels
+    assert "commit:backed_up" not in labels and labels.count("commit:moved") >= 2
 
 
 def test_crash_sweep_flat_append(spark, tmp_path, monkeypatch):
@@ -194,8 +234,19 @@ def test_crash_sweep_flat_append(spark, tmp_path, monkeypatch):
     _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "fapp")
 
 
+def test_crash_sweep_write_meta(spark, tmp_path, monkeypatch):
+    """write_meta is a one-entry commit: the marker is replaced whole or
+    not at all, and no temp file is ever written into the table dir."""
+
+    def mutate(store: ParquetStore) -> None:
+        store.write_meta("t", "_LAST_EPOCH", "8")
+
+    labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat_epoch, mutate, "wmeta")
+    assert labels == _SWAP
+
+
 def test_upsert_no_op_passes_no_crash_point(spark, tmp_path, monkeypatch):
-    """Change-first upsert, no changed key: nothing is journaled, so there
+    """Change-first upsert, no changed key: nothing is committed, so there
     is no step to kill — the table's files stay byte-identical and no
     staging dir is left behind (flat and hive layouts)."""
     import hashlib
@@ -229,7 +280,8 @@ def test_upsert_no_op_passes_no_crash_point(spark, tmp_path, monkeypatch):
 
 def test_crash_sweep_upsert_append_only(spark, tmp_path, monkeypatch):
     """Change-first upsert, only new keys (beside an unchanged one): the
-    rows take the journaled append path, flat and hive."""
+    rows are appended — nothing stored is renamed aside — flat and
+    hive."""
 
     def mutate_flat(store: ParquetStore) -> None:
         inc = store.spark.createDataFrame([(1, "a"), (4, "d")], "pk int, v string")
@@ -246,19 +298,19 @@ def test_crash_sweep_upsert_append_only(spark, tmp_path, monkeypatch):
         (_seed_partitioned, mutate_hive, "uapp_hive"),
     ):
         labels = _sweep(spark, tmp_path, monkeypatch, seed, mutate, sub)
-        assert labels and all(lbl.startswith("append:") for lbl in labels), labels
+        assert "commit:moved" in labels and "commit:backed_up" not in labels, labels
 
 
 def test_crash_sweep_upsert_changed_key_flat(spark, tmp_path, monkeypatch):
     """Change-first upsert, a changed key on a flat table: the merge of
-    the changed rows rides the table-swap journal."""
+    the changed rows is a whole-table commit."""
 
     def mutate(store: ParquetStore) -> None:
         inc = store.spark.createDataFrame([(1, "a"), (2, "B2"), (4, "d")], "pk int, v string")
         store.upsert(inc, "t", pk="pk")
 
     labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "uchg")
-    assert "table_swap:swapped" in labels
+    assert labels == _SWAP
 
 
 def test_recovery_ignores_foreign_and_half_written_journals(
@@ -272,10 +324,10 @@ def test_recovery_ignores_foreign_and_half_written_journals(
     before = _rows(store, "t")
     other = os.path.join(store.root, ".__journal_other_tok.json")
     with open(other, "w") as fh:
-        fh.write('{"kind": "table_swap", "table": "other", "stage": "x", "backup": "y"}')
+        json.dump({"table": "other", "entries": [["other", ".x", ".other.__bak_y"]], "committed": False}, fh)
     half = os.path.join(store.root, ".__journal_t_tok.json.tmp")
     with open(half, "w") as fh:
-        fh.write('{"kind": "append", "table"')  # truncated JSON
+        fh.write('{"table": "t", "entries"')  # truncated JSON
     assert _rows(store, "t") == before
     assert os.path.isfile(other), "foreign journal must not be consumed"
     assert os.path.isfile(half), ".tmp file must not be consumed"
@@ -284,43 +336,18 @@ def test_recovery_ignores_foreign_and_half_written_journals(
 def test_crash_sweep_first_ever_insert_restores_no_table(
     spark, tmp_path, monkeypatch
 ):
-    """Self-review finding (confirmed live): a killed FIRST-EVER insert
-    must recover to 'no table at all' — _append_files created the table
-    dir before moving files, and deleting only the files left an empty
-    husk that flipped exists() to True and crashed read() on schema
-    inference. Pre-state here is the ABSENCE of the table."""
-    labels = []
-    dry = ParquetStore(spark, str(tmp_path / "first_dry"))
-    df = spark.createDataFrame([(1, "a", "d1")], "pk int, v string, dt string")
-    monkeypatch.setattr(sinks, "_CRASH_HOOK", labels.append)
-    try:
-        dry.insert(df, "t", partition_by=["dt"])
-    finally:
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-    post = _rows(dry, "t")
+    """A killed FIRST-EVER insert must recover to 'no table at all' — an
+    empty leftover dir would flip exists() to True and crash read() on
+    schema inference. The insert is one entry, the staged dir put at the
+    missing table dir, so rollback removes what moved in. Pre-state
+    here is the ABSENCE of the table (``_state`` reads it as None)."""
 
-    for k, label in enumerate(labels):
-        store = ParquetStore(spark, str(tmp_path / f"first_k{k}"))
-        calls = {"n": 0}
+    def mutate(store: ParquetStore) -> None:
+        df = store.spark.createDataFrame([(1, "a", "d1")], "pk int, v string, dt string")
+        store.insert(df, "t", partition_by=["dt"])
 
-        def hook(lbl, _k=k):
-            if calls["n"] == _k:
-                raise _SimulatedCrash(lbl)
-            calls["n"] += 1
-
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
-        try:
-            with pytest.raises(_SimulatedCrash):
-                store.insert(df, "t", partition_by=["dt"])
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-        if label in _COMMIT_LABELS:
-            assert store.exists("t") and _rows(store, "t") == post, (k, label)
-        else:
-            # recovery must restore "no table", not an empty directory
-            assert not store.exists("t"), (k, label)
-            with pytest.raises(FileNotFoundError):
-                store.read("t")
+    labels = _sweep(spark, tmp_path, monkeypatch, lambda store: None, mutate, "first")
+    assert labels == ["commit:journaled", "commit:moved", "commit:committed"]
 
 
 def test_recovery_owns_by_payload_not_filename_prefix(
@@ -338,10 +365,8 @@ def test_recovery_owns_by_payload_not_filename_prefix(
 
     # crash t_x's overwrite right after its backup-rename: t_x is
     # renamed aside, journal left behind
-    calls = {"n": 0}
-
     def hook(lbl):
-        if lbl == "table_swap:backed_up":
+        if lbl == "commit:backed_up":
             raise _SimulatedCrash(lbl)
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
@@ -370,110 +395,75 @@ def test_recovery_owns_by_payload_not_filename_prefix(
 
 
 def test_recovery_preserves_unknown_journal_kind(spark, tmp_path):
-    """Self-review finding: an unrecognized journal kind (version skew,
-    mangled field) must NOT be silently deleted — it is the only repair
-    record for whatever half-applied state is on disk. The store
-    surfaces it loudly and preserves the file."""
+    """A journal not in the commit shape (version skew: here one of the
+    earlier per-kind journals; or a mangled field) must NOT be silently
+    deleted — it is the only repair record for whatever half-applied
+    state is on disk. The store surfaces it loudly and preserves the
+    file."""
     store = ParquetStore(spark, str(tmp_path / "unk"))
     _seed_flat(store)
     jp = os.path.join(store.root, ".__journal_t_tok.json")
     with open(jp, "w") as fh:
-        fh.write('{"kind": "future_thing", "table": "t"}')
-    with pytest.raises(RuntimeError, match="unrecognized kind"):
+        fh.write('{"kind": "table_swap", "table": "t", "stage": "x", "backup": "y"}')
+    with pytest.raises(RuntimeError, match="commit-journal shape"):
         store.read("t")
     assert os.path.isfile(jp), "journal must be preserved for manual repair"
+    # an entry reaching outside its table is not in the shape either
+    with open(jp, "w") as fh:
+        json.dump({"table": "t", "entries": [["u/x", None, "u/.x.__bak_y"]], "committed": False}, fh)
+    with pytest.raises(RuntimeError, match="commit-journal shape"):
+        store.read("t")
+    assert os.path.isfile(jp)
 
 
 def test_crash_sweep_compact_preserves_meta(spark, tmp_path, monkeypatch):
-    """compact() rides the table-swap journal via _rewrite_and_swap and
-    must carry user meta files through EVERY crash outcome: pre-state
+    """compact() rides the whole-table commit via _rewrite_and_swap and
+    must carry user meta files through EVERY outcome: pre-state
     recovery keeps the original meta, post-state recovery keeps the
     carried copy — losing the rollup's _LAST_EPOCH replay guard
-    re-enables a double-merge (the round-8 meta-loss bug class, now
-    swept under kills too)."""
-    labels = []
-    dry = ParquetStore(spark, str(tmp_path / "cm_dry"))
-    _seed_partitioned(dry)
-    dry.write_meta("t", "_LAST_EPOCH", "7")
-    monkeypatch.setattr(sinks, "_CRASH_HOOK", labels.append)
-    try:
-        dry.compact("t", target_files=1)
-    finally:
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-    post = _rows(dry, "t")
+    re-enables a double-merge (the round-8 meta-loss bug class, swept
+    here). Compaction keeps the rows, so pre and post states agree."""
 
-    for k, label in enumerate(labels):
-        store = ParquetStore(spark, str(tmp_path / f"cm_k{k}"))
-        _seed_partitioned(store)
-        store.write_meta("t", "_LAST_EPOCH", "7")
-        pre = _rows(store, "t")
-        calls = {"n": 0}
+    def mutate(store: ParquetStore) -> None:
+        store.compact("t", target_files=1)
 
-        def hook(lbl, _k=k):
-            if calls["n"] == _k:
-                raise _SimulatedCrash(lbl)
-            calls["n"] += 1
-
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
-        try:
-            with pytest.raises(_SimulatedCrash):
-                store.compact("t", target_files=1)
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-        expected = post if label in _COMMIT_LABELS else pre
-        assert _rows(store, "t") == expected, (k, label)
-        # the replay guard must survive EVERY outcome
-        assert store.read_meta("t", "_LAST_EPOCH") == "7", (k, label)
+    _sweep(
+        spark, tmp_path, monkeypatch, _seed_partitioned_epoch, mutate, "cm", changes=False
+    )
 
 
 def test_crash_sweep_overwrite_meta_files_atomic(spark, tmp_path, monkeypatch):
     """overwrite(meta_files=...) commits data + meta in ONE rename:
     pre-state recovery must show the OLD meta with the OLD rows,
     post-state the NEW meta with the NEW rows — never a cross pairing
-    (a new epoch marker on old rows would permanently skip a merge)."""
-    labels = []
-    dry = ParquetStore(spark, str(tmp_path / "om_dry"))
-    _seed_flat(dry)
-    dry.write_meta("t", "_LAST_EPOCH", "7")
-    new_df = spark.createDataFrame([(9, "z")], "pk int, v string")
-    monkeypatch.setattr(sinks, "_CRASH_HOOK", labels.append)
-    try:
-        dry.overwrite(new_df, "t", meta_files={"_LAST_EPOCH": "8"})
-    finally:
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-    post = _rows(dry, "t")
+    (a new epoch marker on old rows would permanently skip a merge).
+    ``_state`` holds rows and marker together."""
 
-    for k, label in enumerate(labels):
-        store = ParquetStore(spark, str(tmp_path / f"om_k{k}"))
-        _seed_flat(store)
-        store.write_meta("t", "_LAST_EPOCH", "7")
-        pre = _rows(store, "t")
-        calls = {"n": 0}
+    def mutate(store: ParquetStore) -> None:
+        new_df = store.spark.createDataFrame([(9, "z")], "pk int, v string")
+        store.overwrite(new_df, "t", meta_files={"_LAST_EPOCH": "8"})
 
-        def hook(lbl, _k=k):
-            if calls["n"] == _k:
-                raise _SimulatedCrash(lbl)
-            calls["n"] += 1
+    _sweep(spark, tmp_path, monkeypatch, _seed_flat_epoch, mutate, "om")
 
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
-        try:
-            with pytest.raises(_SimulatedCrash):
-                store.overwrite(new_df, "t", meta_files={"_LAST_EPOCH": "8"})
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-        if label in _COMMIT_LABELS:
-            assert _rows(store, "t") == post, (k, label)
-            assert store.read_meta("t", "_LAST_EPOCH") == "8", (k, label)
-        else:
-            assert _rows(store, "t") == pre, (k, label)
-            assert store.read_meta("t", "_LAST_EPOCH") == "7", (k, label)
+
+def test_crash_sweep_append_with_meta_files(spark, tmp_path, monkeypatch):
+    """insert(meta_files=...) on an existing table: the new files and
+    the replaced marker are entries of one commit — the rows never land
+    without the marker, nor the marker without the rows."""
+
+    def mutate(store: ParquetStore) -> None:
+        inc = store.spark.createDataFrame([(4, "d")], "pk int, v string")
+        store.insert(inc, "t", meta_files={"_LAST_EPOCH": "8"})
+
+    labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat_epoch, mutate, "ameta")
+    assert labels.count("commit:backed_up") == 1  # the marker
 
 
 def test_exception_rollback_of_first_insert_removes_created_dir(
     spark, tmp_path, monkeypatch
 ):
-    """Second-review finding: the EXCEPTION rollback in _append_files
-    (not just the kill-recovery path) must remove a table directory the
+    """Second-review finding: the EXCEPTION rollback of an append (not
+    just the kill-recovery path) must remove a table directory the
     failed append created — otherwise exists() flips True on an empty
     dir, read() crashes on schema inference, and the next partitioned
     insert hits a false layout-mismatch."""
@@ -481,8 +471,8 @@ def test_exception_rollback_of_first_insert_removes_created_dir(
     df = spark.createDataFrame([(1, "a", "d1")], "pk int, v string, dt string")
 
     def hook(lbl):
-        if lbl == "append:moved":
-            raise RuntimeError("disk full")  # ordinary Exception, mid-move
+        if lbl == "commit:moved":
+            raise RuntimeError("disk full")  # ordinary Exception, after the move
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
     try:
@@ -541,9 +531,9 @@ def test_vacuum_reclaims_orphans_preserves_journaled_dirs(
     stray = os.path.join(store.root, ".__journal_t_x.json.tmp")
     with open(stray, "w") as fh:
         fh.write("{")
-    # a crashed swap: journal + backup present (uncommitted)
+    # a crashed swap: journal + table renamed aside (uncommitted)
     def hook(lbl):
-        if lbl == "table_swap:backed_up":
+        if lbl == "commit:backed_up":
             raise _SimulatedCrash(lbl)
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
@@ -555,66 +545,60 @@ def test_vacuum_reclaims_orphans_preserves_journaled_dirs(
     finally:
         monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
     removed = store.vacuum()
-    assert ".t_stage_orphan123" in removed
-    assert ".__journal_t_x.json.tmp" in removed
-    # the journal and its referenced backup/stage survived vacuum
+    assert removed == [".__journal_t_x.json.tmp", ".t_stage_orphan123"]
+    # the journal and the backup it names survived vacuum
     assert any(n.startswith(".__journal_t_") for n in os.listdir(store.root))
+    assert any(".__bak_" in n for n in os.listdir(store.root))
     # ... so recovery still restores the table afterwards
     assert _rows(store, "t") == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_vacuum_preserves_append_and_pswap_staging_dirs(spark, tmp_path):
-    """Round-9 advisor finding: append journals carry no 'stage' field,
-    so the staging dir of a crashed uncommitted append (holding its
-    not-yet-moved parquet files) was vacuum-deletable before recovery
-    ran. The journal now records the staging dir under 'src' (and the
-    partition-swap journal's 'token' names ITS staging tmp dir); vacuum
-    must treat both as live. Hand-crafts the exact post-kill state —
-    a live uncommitted journal plus its root-level staging dir — since
-    an in-process simulated crash unwinds the callers' cleanup
-    ``finally`` blocks, which a real kill would not."""
-    import json as _json
-
+    """Round-9 advisor finding: the staging dir of a crashed uncommitted
+    append (holding its not-yet-moved parquet files) was
+    vacuum-deletable before recovery ran. vacuum must pin every
+    root-level name a live journal's entries mention: the staging dirs
+    of a file append and of a partition swap, and a table-level
+    backup. Hand-crafts the exact post-kill state — a live uncommitted
+    journal plus its root-level dirs — since an in-process simulated
+    crash unwinds the callers' cleanup ``finally`` blocks, which a real
+    kill would not."""
     store = ParquetStore(spark, str(tmp_path / "vac2"))
     _seed_flat(store)
-    for kind, field, token in (
-        ("append", "src", ".t_ins_killed1"),
-        ("partition_swap", "token", ".t_pmerge_killed2"),
+    for token, entry in (
+        (".t_ins_killed1", ["t/part-9.parquet", ".t_ins_killed1/part-9.parquet", None]),
+        (".t_pmerge_killed2", ["t/dt=a", ".t_pmerge_killed2/dt=a", "t/.dt=a.__bak_k2"]),
+        (".t_stage_killed3", ["t", ".t_stage_killed3", ".t.__bak_k3"]),
     ):
-        src = os.path.join(store.root, token)
-        os.makedirs(src)
-        with open(os.path.join(src, "part-0.parquet"), "w") as fh:
+        os.makedirs(os.path.join(store.root, token))
+        with open(os.path.join(store.root, token, "part-0.parquet"), "w") as fh:
             fh.write("staged")
-        payload = {"kind": kind, "table": "t", "files": [], "dirs": [], field: token}
-        with open(
-            os.path.join(store.root, f".__journal_t_{token}.json"), "w"
-        ) as fh:
-            _json.dump(payload, fh)
+        with open(store._journal_path("t", token), "w") as fh:
+            json.dump({"table": "t", "entries": [entry], "committed": False}, fh)
+    os.makedirs(os.path.join(store.root, ".t.__bak_k3"))
     # plus one genuine orphan to prove vacuum still reclaims
     orphan = os.path.join(store.root, ".t_stage_orphan456")
     os.makedirs(orphan)
     removed = store.vacuum()
     assert removed == [".t_stage_orphan456"]
-    assert os.path.isdir(os.path.join(store.root, ".t_ins_killed1"))
-    assert os.path.isdir(os.path.join(store.root, ".t_pmerge_killed2"))
+    for name in (".t_ins_killed1", ".t_pmerge_killed2", ".t_stage_killed3", ".t.__bak_k3"):
+        assert os.path.isdir(os.path.join(store.root, name)), name
 
 
 def test_append_journal_records_src_staging_dir(spark, tmp_path, monkeypatch):
     """The live append journal written before any file move must name
     its staging dir (vacuum live-set contract above)."""
-    import json as _json
-
     store = ParquetStore(spark, str(tmp_path / "vac3"))
     _seed_flat(store)
 
     seen: dict = {}
 
     def hook(lbl):
-        if lbl == "append:journaled":
+        if lbl == "commit:journaled":
             for name in os.listdir(store.root):
                 if name.startswith(".__journal_t_") and name.endswith(".json"):
                     with open(os.path.join(store.root, name)) as fh:
-                        seen.update(_json.load(fh))
+                        seen.update(json.load(fh))
             raise _SimulatedCrash(lbl)
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
@@ -625,8 +609,95 @@ def test_append_journal_records_src_staging_dir(spark, tmp_path, monkeypatch):
             )
     finally:
         monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
-    assert seen.get("kind") == "append"
-    assert seen.get("src") and seen["src"].startswith(".t_")
+    assert seen.get("table") == "t" and seen.get("committed") is False
+    assert seen["entries"] and all(
+        dst.startswith("t/") and src.startswith(".t_stage_") and bak is None
+        for dst, src, bak in seen["entries"]
+    )
+
+
+def test_simulate_kill_seam_inactive_without_hook(spark, tmp_path):
+    """ADVICE round-9: an exception object carrying a truthy
+    simulate_kill attribute must NOT skip the commit's in-process
+    rollback when no crash hook is installed — the test seam may never
+    be reachable from production exceptions. With the seam closed, a
+    failing first insert rolls back cleanly: no journal left, table
+    absent again (the insert created it)."""
+
+    class _ProdError(Exception):
+        simulate_kill = True  # hostile/accidental attribute
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    df = spark.createDataFrame([(1, "a")], "pk int, v string")
+    assert sinks._CRASH_HOOK is None
+
+    orig_replace = os.replace
+    calls = {"n": 0}
+
+    def failing_replace(src, dst):
+        # fail the move of the staged dir onto the table dir, once
+        if dst == store.path("t") and calls["n"] == 0:
+            calls["n"] += 1
+            raise _ProdError("disk full")
+        return orig_replace(src, dst)
+
+    with mock.patch.object(sinks.os, "replace", failing_replace):
+        with pytest.raises(_ProdError):
+            store.insert(df, "t")
+    assert calls["n"] == 1
+    # rollback ran: no journal, no half-created table
+    assert [n for n in os.listdir(store.root) if n.startswith(".__journal_")] == []
+    assert not store.exists("t")
+
+
+def test_vacuum_corrupt_journal_shields_root_level_dirs(spark, tmp_path):
+    """Self-review hardening of the corrupt-journal shield: the root
+    sweep must not rmtree the crashed mutation's staging dirs or its
+    table-level backup (a backup can hold the ONLY copy of the table's
+    data — a parseable journal pins them through its entries, an
+    unreadable one must shield by owner prefix)."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    df = spark.createDataFrame([(1, "a")], "pk int, v string")
+    store.insert(df, "t")
+    backup = os.path.join(store.root, ".t.__bak_.t_xyz")
+    stage = os.path.join(store.root, ".t_stage_abc")
+    os.makedirs(backup)
+    os.makedirs(stage)
+    jp = store._journal_path("t", ".t_stage_abc")
+    with open(jp, "w") as fh:
+        fh.write("{ corrupt")
+    removed = store.vacuum()
+    assert os.path.isdir(backup), "backup dir may be the only data copy"
+    assert os.path.isdir(stage)
+    assert not any(r.startswith(".t") for r in removed)
+    # an unrelated orphan is still reclaimed in the same pass
+    orphan = os.path.join(store.root, ".u_stage_orphan")
+    os.makedirs(orphan)
+    assert ".u_stage_orphan" in store.vacuum()
+    # once the corrupt journal is gone the dirs become ordinary orphans
+    os.remove(jp)
+    got = store.vacuum()
+    assert ".t.__bak_.t_xyz" in got and ".t_stage_abc" in got
+
+
+def test_recover_raises_loudly_on_own_corrupt_journal(spark, tmp_path):
+    """Self-review: _recover used to `continue` past a corrupt journal
+    — the table's half-applied state would be served forever with no
+    diagnostic. It must now raise for the table's OWN unreadable
+    journal (the only repair record), while a corrupt journal of a
+    prefix-sibling (`.__journal_t_x_*` prefix-matches table `t`) stays
+    that sibling's problem."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    df = spark.createDataFrame([(1, "a")], "pk int, v string")
+    store.insert(df, "t")
+    store.insert(df, "t_x")
+    # corrupt journal owned by the SIBLING t_x
+    with open(store._journal_path("t_x", ".t_x_stage_a"), "w") as fh:
+        fh.write("{ corrupt")
+    # t's recovery skips the sibling's journal (ownership by filename)
+    assert store.read("t").count() == 1
+    with pytest.raises(RuntimeError, match="unreadable"):
+        store.read("t_x")
 
 
 def test_resharding_previous_export_replaces_hash_col(spark):

@@ -326,8 +326,8 @@ def test_detect_partition_cols_nesting_order(spark, tmp_path):
 
 
 def test_swap_partitions_rollback_removes_new_dirs(spark, tmp_path, monkeypatch):
-    """Mid-swap failure rollback must remove NEW partition dirs already
-    moved in from tmp (they have no backup entry) before restoring
+    """Mid-commit failure rollback must remove NEW partition dirs already
+    moved in from tmp (they have no backup) as well as restore the
     backups — otherwise a PK whose partition changed exists in both its
     restored old partition and the new dir (round-8 fix)."""
     store = ParquetStore(spark, str(tmp_path / "db"))
@@ -346,18 +346,18 @@ def test_swap_partitions_rollback_removes_new_dirs(spark, tmp_path, monkeypatch)
             fh.write(b"x")
 
     real_replace = os.replace
-    real_listdir = os.listdir
 
     def failing_replace(src, dst, **kw):
         if str(dst).endswith("dt=d"):
             raise OSError("disk full")
         return real_replace(src, dst, **kw)
 
-    # deterministic move-in order: dt=a, dt=c succeed, dt=d fails
-    monkeypatch.setattr(os, "listdir", lambda p: sorted(real_listdir(p)))
+    # move-in order is the entry order: dt=a, dt=c succeed, dt=d fails
     monkeypatch.setattr(os, "replace", failing_replace)
     with pytest.raises(OSError, match="disk full"):
-        store._swap_partitions(tmp, "t", ["dt=a", "dt=c", "dt=d"])
+        store._commit("t", [
+            (os.path.join(final, d), os.path.join(tmp, d)) for d in ("dt=a", "dt=c", "dt=d")
+        ])
     monkeypatch.undo()
 
     # exact pre-upsert state: moved-in dirs gone, backups restored

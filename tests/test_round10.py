@@ -310,10 +310,10 @@ def test_lsh_band_retraction_physical_delete(spark, tmp_path, monkeypatch):
         )
         return {r["doc_id"]: (r["nr"], r["nd"], r["nx"]) for r in probed.collect()}
 
-    # kill at the swap's backed-up boundary: journal written, table
+    # kill at the commit's backed-up boundary: journal written, table
     # renamed aside, replacement NOT yet in place — the worst spot
     def hook(lbl):
-        if lbl == "table_swap:backed_up":
+        if lbl == "commit:backed_up":
             raise _SimulatedCrash(lbl)
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
@@ -350,97 +350,6 @@ def test_lsh_band_retraction_physical_delete(spark, tmp_path, monkeypatch):
         and post.get(doc_id, (0, 0, 0))[:2] == (0, 0)
         for doc_id, r in gate.items()
     )
-
-
-def test_simulate_kill_seam_inactive_without_hook(spark, tmp_path):
-    """ADVICE round-9: an exception object carrying a truthy
-    simulate_kill attribute must NOT skip the journaled append's
-    in-process rollback when no crash hook is installed — the test seam
-    may never be reachable from production exceptions. With the seam
-    closed, a failing append rolls back cleanly: no journal left, table
-    absent again (the append created it)."""
-
-    class _ProdError(Exception):
-        simulate_kill = True  # hostile/accidental attribute
-
-    store = ParquetStore(spark, str(tmp_path / "db"))
-    df = spark.createDataFrame([(1, "a")], "pk int, v string")
-    assert sinks._CRASH_HOOK is None
-
-    orig_replace = os.replace
-    calls = {"n": 0}
-
-    def failing_replace(src, dst):
-        # fail the FIRST data-file move into the table dir
-        if "/db/t/" in str(dst) and calls["n"] == 0:
-            calls["n"] += 1
-            raise _ProdError("disk full")
-        return orig_replace(src, dst)
-
-    import unittest.mock as mock
-
-    with mock.patch.object(sinks.os, "replace", failing_replace):
-        with pytest.raises(_ProdError):
-            store.insert(df, "t")
-    # rollback ran: no journal, no half-created table
-    assert [n for n in os.listdir(store.root) if n.startswith(".__journal_")] == []
-    assert not store.exists("t")
-
-
-def test_vacuum_reclaims_orphaned_meta_tmp_files(spark, tmp_path):
-    """ADVICE round-9: a kill between a meta tmp write and its rename
-    leaves `._{name}_tmp` inside the table dir with no journal (e.g.
-    write_meta); parquet readers ignore dot-files but nothing ever
-    reclaimed them. vacuum() now sweeps them — while leaving tables
-    with a LIVE journal untouched (their repair belongs to _recover)."""
-    store = ParquetStore(spark, str(tmp_path / "db"))
-    df = spark.createDataFrame([(1, "a")], "pk int, v string")
-    store.insert(df, "t")
-    stray = os.path.join(store.path("t"), "._LAST_EPOCH_tmp")
-    with open(stray, "w") as fh:
-        fh.write("3")
-    # second table with a live journal: its stray must be preserved
-    store.insert(df, "u")
-    stray_u = os.path.join(store.path("u"), "._LAST_EPOCH_tmp")
-    with open(stray_u, "w") as fh:
-        fh.write("9")
-    jp = store._journal_path("u", "tok1")
-    store._journal_write(jp, {"kind": "append", "table": "u", "files": [], "src": "x"})
-
-    removed = store.vacuum()
-    assert "t/._LAST_EPOCH_tmp" in removed
-    assert not os.path.exists(stray)
-    assert os.path.exists(stray_u), "journaled table must be left to _recover"
-    os.remove(jp)
-    assert "u/._LAST_EPOCH_tmp" in store.vacuum()
-
-
-def test_restore_meta_removes_stray_tmp(spark, tmp_path, monkeypatch):
-    """A kill between the forward meta tmp write and its os.replace
-    (append:moved fired, append:meta not yet) leaves `.{name}_tmp` in
-    the table dir; recovery's meta rollback must remove it along with
-    restoring the journaled pre-state."""
-    store = ParquetStore(spark, str(tmp_path / "db"))
-    df = spark.createDataFrame([(1, "a")], "pk int, v string")
-    store.insert(df, "t", meta_files={"_M": "0"})
-
-    orig_replace = os.replace
-
-    def kill_on_meta_rename(src, dst):
-        if str(src).endswith("._M_tmp"):
-            raise _SimulatedCrash("between tmp write and rename")
-        return orig_replace(src, dst)
-
-    import unittest.mock as mock
-
-    with mock.patch.object(sinks.os, "replace", kill_on_meta_rename):
-        with pytest.raises(_SimulatedCrash):
-            store.insert(df, "t", meta_files={"_M": "1"})
-
-    # recovery: rows rolled back, meta restored to prior, tmp GONE
-    assert store.read("t").count() == 1
-    assert store.read_meta("t", "_M") == "0"
-    assert not os.path.exists(os.path.join(store.path("t"), "._M_tmp"))
 
 
 def test_embedding_band_retraction_invariants(spark):

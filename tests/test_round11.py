@@ -4,7 +4,7 @@ of maintained band/fingerprint tables.
 
 The hash oracles pin cross-engine value equality; these tests pin the
 operational properties round 11 adds — a journal that fails to parse
-still shields its table from the stray-meta sweep, N chained
+still shields its table's root-level dirs from vacuum, N chained
 fold-in/retract epochs equal a one-shot rebuild (counts exactly, csum
 within stated float tolerance), and compacting a maintained table
 between lifecycle days leaves every probe verdict unchanged.
@@ -31,50 +31,41 @@ def _q(name):
 
 
 def test_vacuum_corrupt_journal_still_shields_table(spark, tmp_path):
-    """ADVICE round-10: a journal that fails json.load was skipped with
-    `continue`, so its table never entered journaled_tables and the
-    stray-meta sweep could delete `._X_tmp` inside a table whose (live
-    but unreadable) journal still owns its repair. vacuum() must parse
-    the table name from the journal FILENAME in that case and shield
-    the dir — over-shielding defers cleanup, under-shielding destroys
-    recovery inputs."""
+    """ADVICE round-10: a journal that fails json.load must still shield
+    its table: vacuum() parses the owner from the journal FILENAME,
+    keeps the journal (repair belongs to _recover) and leaves the
+    owner's root-level staging and backup dirs alone — over-shielding
+    defers cleanup, under-shielding destroys recovery inputs."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     df = spark.createDataFrame([(1, "a")], "pk int, v string")
     store.insert(df, "t")
-    stray = os.path.join(store.path("t"), "._LAST_EPOCH_tmp")
-    with open(stray, "w") as fh:
-        fh.write("3")
-    # corrupt journal for "t": token format matches the real mkdtemp
-    # basename shape `.{table}_{kind}_XXXX`
+    # corrupt journal for "t": token format matches the real token
+    # shape `.{table}_XXXX`
     jp = store._journal_path("t", ".t_stage_abc123")
     with open(jp, "w") as fh:
         fh.write("{ not json")
+    os.makedirs(os.path.join(store.root, ".t_stage_abc123"))
     removed = store.vacuum()
-    assert os.path.exists(stray), (
-        "stray meta tmp inside a corrupt-journaled table must survive"
-    )
-    assert not any(r.startswith("t/") for r in removed)
+    assert removed == []
     # journal itself is never vacuum's to consume
     assert os.path.exists(jp)
-    # once the corrupt journal is gone the stray becomes reclaimable
-    os.remove(jp)
-    assert "t/._LAST_EPOCH_tmp" in store.vacuum()
+    assert os.path.isdir(os.path.join(store.root, ".t_stage_abc123"))
 
 
 def test_vacuum_foreign_journal_name_shields_conservatively(spark, tmp_path):
     """A journal-like filename with no `_.` separator (not produced by
     any writer, but conceivable from manual tampering) must not crash
-    vacuum and must not unshield anything it might name."""
+    vacuum, is kept, and shields every root name it might own."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     df = spark.createDataFrame([(1, "a")], "pk int, v string")
     store.insert(df, "weird")
-    stray = os.path.join(store.path("weird"), "._M_tmp")
-    with open(stray, "w") as fh:
-        fh.write("x")
-    with open(os.path.join(store.root, ".__journal_weird.json"), "w") as fh:
+    jp = os.path.join(store.root, ".__journal_weird.json")
+    with open(jp, "w") as fh:
         fh.write("not json at all")
-    store.vacuum()
-    assert os.path.exists(stray)
+    os.makedirs(os.path.join(store.root, ".weird_stage_x"))
+    assert store.vacuum() == []
+    assert os.path.exists(jp)
+    assert os.path.isdir(os.path.join(store.root, ".weird_stage_x"))
 
 
 def _churn_frames(spark, sf=SF):
@@ -301,7 +292,7 @@ def test_exact_fingerprint_refcount_table_physical_twin(spark, tmp_path):
     assert n_zero >= 1, "retracted-only fingerprints must exist"
 
     def hook(lbl):
-        if lbl == "table_swap:backed_up":
+        if lbl == "commit:backed_up":
             raise _Round11Crash(lbl)
 
     orig = sinks._CRASH_HOOK
@@ -344,54 +335,3 @@ def test_exact_fingerprint_refcount_table_physical_twin(spark, tmp_path):
 
 class _Round11Crash(BaseException):
     """Not an Exception: bypasses in-process rollback like a kill."""
-
-
-def test_vacuum_corrupt_journal_shields_root_level_dirs(spark, tmp_path):
-    """Self-review hardening of the corrupt-journal shield: the FIRST
-    version protected only the in-table meta-tmp sweep; the root sweep
-    would still rmtree the crashed mutation's `.{table}_backup_*` /
-    `.{table}_stage_*` dirs (a backup dir can hold the ONLY copy of
-    the table's data — a parseable journal pins them via the `live`
-    set, an unreadable one must shield by owner prefix)."""
-    store = ParquetStore(spark, str(tmp_path / "db"))
-    df = spark.createDataFrame([(1, "a")], "pk int, v string")
-    store.insert(df, "t")
-    backup = os.path.join(store.root, ".t_backup_xyz")
-    stage = os.path.join(store.root, ".t_stage_abc")
-    os.makedirs(backup)
-    os.makedirs(stage)
-    jp = store._journal_path("t", ".t_stage_abc")
-    with open(jp, "w") as fh:
-        fh.write("{ corrupt")
-    removed = store.vacuum()
-    assert os.path.isdir(backup), "backup dir may be the only data copy"
-    assert os.path.isdir(stage)
-    assert not any(r.startswith(".t_") for r in removed)
-    # an unrelated orphan is still reclaimed in the same pass
-    orphan = os.path.join(store.root, ".u_stage_orphan")
-    os.makedirs(orphan)
-    assert ".u_stage_orphan" in store.vacuum()
-    # once the corrupt journal is gone the dirs become ordinary orphans
-    os.remove(jp)
-    got = store.vacuum()
-    assert ".t_backup_xyz" in got and ".t_stage_abc" in got
-
-
-def test_recover_raises_loudly_on_own_corrupt_journal(spark, tmp_path):
-    """Self-review: _recover used to `continue` past a corrupt journal
-    — the table's half-applied state would be served forever with no
-    diagnostic. It must now raise for the table's OWN unreadable
-    journal (the only repair record), while a corrupt journal of a
-    prefix-sibling (`.__journal_t_x_*` prefix-matches table `t`) stays
-    that sibling's problem."""
-    store = ParquetStore(spark, str(tmp_path / "db"))
-    df = spark.createDataFrame([(1, "a")], "pk int, v string")
-    store.insert(df, "t")
-    store.insert(df, "t_x")
-    # corrupt journal owned by the SIBLING t_x
-    with open(store._journal_path("t_x", ".t_x_stage_a"), "w") as fh:
-        fh.write("{ corrupt")
-    # t's recovery skips the sibling's journal (ownership by filename)
-    assert store.read("t").count() == 1
-    with pytest.raises(RuntimeError, match="unreadable"):
-        store.read("t_x")

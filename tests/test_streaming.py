@@ -530,15 +530,15 @@ def test_incremental_rollup_detects_checkpoint_recreation(spark, tmp_path):
 def test_incremental_ingest_kill_mid_batch_sweep(spark, tmp_path, monkeypatch):
     """Round-9 (round-8 verdict item 5b): kill-point sweep THROUGH the
     streaming checkpoint path. test_incremental_ingest_exactly_once
-    covers clean restarts; this kills the journaled append at every
-    step boundary DURING a foreachBatch epoch (journal written, each
-    file moved, the epoch-marker meta written, committed-marked) and
-    asserts that restarting the stream on the same checkpoint yields
-    exactly-once: 500 rows, no duplicates, no skips, marker == epoch —
-    including the kill between the data move and the marker write,
-    the window the round-8 code documented as at-least-once residual
-    (closed by insert(meta_files=...): rows and marker commit in ONE
-    journaled mutation)."""
+    covers clean restarts; this kills the insert's commit at every step
+    DURING a foreachBatch epoch (journal written, the stored epoch
+    marker renamed aside, rows moved in, marker moved in, committed
+    mark) and asserts that restarting the stream on the same checkpoint
+    yields exactly-once: 500 rows, no duplicates, no skips, marker ==
+    epoch — including the kill between the data move and the marker
+    move, the window the round-8 code documented as at-least-once
+    residual (closed by insert(meta_files=...): rows and marker are
+    entries of ONE commit)."""
     from etl_data_peri_institute_spark import sinks
     from etl_data_peri_institute_spark.sinks import ParquetStore
     from etl_data_peri_institute_spark.streaming.incremental import (
@@ -548,21 +548,27 @@ def test_incremental_ingest_kill_mid_batch_sweep(spark, tmp_path, monkeypatch):
     class _SimulatedCrash(Exception):
         """Exception (py4j's foreachBatch callback thread deadlocks on
         BaseException) carrying the simulate_kill marker, which makes
-        the journaled append skip its in-process rollback exactly like
-        a real kill — the journal is left for _recover."""
+        the commit skip its in-process rollback exactly like a real
+        kill — the journal is left for _recover."""
 
         simulate_kill = True
 
     ev = load_table(spark, SF, "events").limit(500)
     expected = sorted(tuple(r) for r in ev.collect())
 
-    for label in (
-        "append:journaled",
-        "append:moved",
-        "append:meta",
-        "append:committed",
+    # (label, occurrence, reached on a fresh table). A first insert is
+    # one entry — the staged dir, marker inside, put at the table dir —
+    # so it has no backup and one move. On the pre-existing table the
+    # batch is one file: the first move is the rows', the second the
+    # marker's, which the commit renamed aside first.
+    for label, nth, on_fresh in (
+        ("commit:journaled", 0, True),
+        ("commit:backed_up", 0, False),
+        ("commit:moved", 0, True),
+        ("commit:moved", 1, False),
+        ("commit:committed", 0, True),
     ):
-        base = tmp_path / label.replace(":", "_")
+        base = tmp_path / f"{label.replace(':', '_')}{nth}"
         src = base / "landing"
         src.mkdir(parents=True)
         ev.coalesce(1).write.parquet(str(src / "batch1"))
@@ -570,20 +576,29 @@ def test_incremental_ingest_kill_mid_batch_sweep(spark, tmp_path, monkeypatch):
         schema = spark.read.parquet(str(src / "batch1")).schema
         ckpt = str(base / "ckpt")
 
-        def hook(lbl, _want=label):
-            if lbl == _want:
-                raise _SimulatedCrash(lbl)
+        def run_killed(_label=label, _nth=nth) -> bool:
+            """Ingest with a kill at the _nth `_label`; whether it fired."""
+            seen = {"n": 0, "fired": False}
 
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
-        try:
-            with pytest.raises(BaseException) as exc_info:
-                incremental_ingest(
-                    spark, str(src / "*"), schema, store, "ev", ckpt
-                )
-            assert not isinstance(exc_info.value, AssertionError)
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+            def hook(lbl):
+                if lbl == _label:
+                    if seen["n"] == _nth:
+                        seen["fired"] = True
+                        raise _SimulatedCrash(lbl)
+                    seen["n"] += 1
 
+            monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
+            raised = None
+            try:
+                incremental_ingest(spark, str(src / "*"), schema, store, "ev", ckpt)
+            except Exception as exc:
+                raised = exc
+            finally:
+                monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+            assert (raised is not None) == seen["fired"], raised
+            return seen["fired"]
+
+        assert run_killed() == on_fresh, (label, nth)
         # restart on the same checkpoint: recovery + replay (or skip, if
         # the kill landed after the committed mark) must land EXACTLY
         # the 500 rows and the epoch marker, at every kill point
@@ -608,26 +623,18 @@ def test_incremental_ingest_kill_mid_batch_sweep(spark, tmp_path, monkeypatch):
 
         # SECOND-EPOCH kill on the now-PRE-EXISTING table: the round-9
         # review's live repro showed the first sweep (epoch 0, freshly
-        # created table) could not catch a missing meta_prior rollback
-        # — the created→rmtree path deletes the marker as a side
-        # effect. Killing while a PRIOR marker exists pins that the
-        # marker rolls back WITH the rows (no meta_prior → the marker
-        # stays advanced → the replay silently SKIPS the epoch).
+        # created table) could not catch a marker left advanced by a
+        # rollback — removing the created table removes the marker as a
+        # side effect. Killing while a PRIOR marker exists pins that the
+        # marker rolls back WITH the rows (an advanced marker would make
+        # the replay silently SKIP the epoch).
         ev3 = load_table(spark, SF, "events").filter(
             (F.col("event_id") >= 50) & (F.col("event_id") < 80)
         )
         n3 = ev3.count()
         assert n3 > 0
         ev3.coalesce(1).write.parquet(str(src / "batch3"))
-        monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)  # same label
-        try:
-            with pytest.raises(BaseException) as exc_info:
-                incremental_ingest(
-                    spark, str(src / "*"), schema, store, "ev", ckpt
-                )
-            assert not isinstance(exc_info.value, AssertionError)
-        finally:
-            monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+        assert run_killed(), (label, nth)
         incremental_ingest(spark, str(src / "*"), schema, store, "ev", ckpt)
         assert store.read("ev").count() == 500 + n2 + n3, (
             f"epoch-2 rows lost or duplicated after kill at {label} "

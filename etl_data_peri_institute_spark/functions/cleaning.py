@@ -5,6 +5,11 @@ builtins — zero Python UDFs (SURVEY.md §2.10: nothing in the reference
 needs one). These stay inside whole-stage codegen and vectorize at any
 scale.
 
+String functions take a column name or Column as it is: Spark casts a
+non-string input to string implicitly, and each ``F.col`` or ``Column``
+method call (``cast``, ``alias``) costs ~1 ms of py4j calls that record
+the Python call site, on every pipeline run.
+
 Documented deviations from pandas semantics (SURVEY.md §7.4):
 - ``astype(str)`` renders NaN as the string "nan" in the reference; here
   NULL stays NULL.
@@ -13,6 +18,8 @@ Documented deviations from pandas semantics (SURVEY.md §7.4):
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -33,7 +40,7 @@ DAYFIRST_FORMATS = (
 
 def parse_date_dayfirst(col: Column | str) -> Column:
     """C10: flexible day-first timestamp parse, invalid → NULL."""
-    c = F.trim(F.col(col) if isinstance(col, str) else col)
+    c = F.trim(col)
     return F.coalesce(*[F.try_to_timestamp(c, F.lit(fmt)) for fmt in DAYFIRST_FORMATS])
 
 
@@ -52,31 +59,24 @@ def extract_project_code(col: Column | str) -> Column:
     """C5 conditional variant (reference extraer_codigo_proyecto,
     etl/transform.py:68-78): if trimmed value starts with 'P' take the
     first token, else pass the trimmed value through; NULL stays NULL."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(c.cast("string"))
-    return F.when(c.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(t.startswith("P"), F.substring_index(t, " ", 1)).otherwise(t)
-    )
+    t = F.trim(col)
+    # NULL input: the startswith test is NULL, so t (NULL) passes through
+    return F.when(t.startswith("P"), F.substring_index(t, " ", 1)).otherwise(t)
 
 
 def normalize_num_cursos(curso_col: Column | str, num_col: Column | str) -> Column:
     """C18 (reference normalizar_num_cursos, etl/transform.py:81-92):
     0 when the course text is NULL or doesn't start with 'P', else the
     original count."""
-    c = F.col(curso_col) if isinstance(curso_col, str) else curso_col
     n = F.col(num_col) if isinstance(num_col, str) else num_col
-    return (
-        F.when(c.isNull(), F.lit(0))
-        .when(F.trim(c.cast("string")).startswith("P"), n)
-        .otherwise(F.lit(0))
-    )
+    # NULL text: the startswith test is NULL, which takes the 0 branch
+    return F.when(F.trim(curso_col).startswith("P"), n).otherwise(F.lit(0))
 
 
 def money(col: Column | str) -> Column:
     """C13 (reference: etl/transform.py:111,182,262):
     to_numeric(errors='coerce').fillna(0).round(2) → try_cast + default 0."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.coalesce(F.trim(c.cast("string")).try_cast("double"), F.lit(0.0)), 2)
+    return F.round(F.coalesce(F.trim(col).try_cast("double"), F.lit(0.0)), 2)
 
 
 # C16: payment-account normalization maps (reference etl/transform.py:156-178
@@ -106,39 +106,55 @@ ACCOUNT_MAP_REGULAR = {
 }
 
 
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_map(entries: dict[str, str]) -> str:
+    """A SQL ``map(...)`` literal of string keys to SQL value expressions.
+    Parsed by the JVM in one call, it folds to a single map literal."""
+    return "map(" + ", ".join(f"{_sql_str(k)}, {v}" for k, v in entries.items()) + ")"
+
+
 def normalize_account(col: Column | str, mapping: dict[str, str]) -> Column:
     """C16: dict lookup on upper(trim(value)) with a title-case fallback;
     falsy input (NULL / empty string) → NULL (reference
     normalize_account, etl/transform.py:173-178).
 
-    A literal when-chain (15-17 entries) stays codegen-friendly; a
-    broadcast join against a lookup table is the pattern past ~100
-    entries.
+    One ``try_element_at`` on a map literal of ``mapping``; a key the map
+    lacks (NULL and "" among them) falls back to ``initcap``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    key = F.upper(F.trim(c.cast("string")))
-    expr = F.initcap(c)  # fallback ≈ value.title(); deviation documented above
-    for k, v in reversed(list(mapping.items())):
-        expr = F.when(key == k, F.lit(v)).otherwise(expr)
-    return F.when(c.isNull() | (c.cast("string") == ""), F.lit(None).cast("string")).otherwise(expr)
+    s = c.cast("string")
+    table = F.expr(_sql_map({k: _sql_str(v) for k, v in mapping.items()}))
+    # fallback ≈ value.title(); deviation documented above
+    return F.coalesce(F.try_element_at(table, F.upper(F.trim(s))), F.initcap(F.nullif(s, F.lit(""))))
+
+
+# C17: currency by the RAW payment-method value, exact match (reference
+# currency_fixed, etl/transform.py:248-256); anything else is PEN.
+CURRENCY_BY_METHOD = {
+    "Banco de México": "MXN",
+    "Banco de Mexico": "MXN",
+    "Banco de México / P": "MXN",
+    "Banco de Ecuador / P": "MXN",
+    "Banco de Ecuador": "USD",
+    "PAYPAL": "USD",
+    "Paypal": "USD",
+    "Banco de Chile": "CLP",
+}
 
 
 def currency_fixed(raw_method: Column | str) -> Column:
-    """C17 (reference currency_fixed, etl/transform.py:248-256): exact-match
-    chain on the RAW payment-method value — deliberately NOT normalized
+    """C17: exact-match lookup of the RAW payment-method value in
+    ``CURRENCY_BY_METHOD``, default PEN — deliberately NOT normalized
     first (the reference applies it to the raw column at
     etl/transform.py:264; mixed-case raw data falls through to PEN — the
     quirk is part of the contract and golden-pinned in tests)."""
     c = F.col(raw_method) if isinstance(raw_method, str) else raw_method
-    return (
-        F.when(
-            c.isin("Banco de México", "Banco de Mexico", "Banco de México / P", "Banco de Ecuador / P"),
-            "MXN",
-        )
-        .when(c.isin("Banco de Ecuador", "PAYPAL", "Paypal"), "USD")
-        .when(c == "Banco de Chile", "CLP")
-        .otherwise("PEN")
-    )
+    table = F.expr(_sql_map({k: _sql_str(v) for k, v in CURRENCY_BY_METHOD.items()}))
+    return F.coalesce(F.try_element_at(table, c.cast("string")), F.lit("PEN"))
 
 
 # C19: ordered phone-prefix rules (reference detectar_pais_telefono,
@@ -164,32 +180,42 @@ PHONE_RULES: tuple[tuple[str, str, str], ...] = (
 
 def digits_only(col: Column | str) -> Column:
     """C7: strip every non-digit (reference: etl/transform.py:300)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c.cast("string"), "[^0-9]", "")
+    return F.regexp_replace(col, "[^0-9]", "")
+
+
+def _phone_lookup(rules: tuple[tuple[str, str, str], ...]) -> tuple[str, str]:
+    """``PHONE_RULES`` as one ordered alternation and a SQL map literal
+    keyed by what it matches.
+
+    Each rule's pattern is ``^`` + a digit prefix + an optional tail
+    condition, which becomes a lookahead, so the match is the prefix
+    alone (``^1.{10}$`` → ``1(?=.{10}$)``). The regex engine tries the
+    alternatives left to right, so the first rule that matches wins, as
+    in the rule list."""
+    alternatives, entries = [], {}
+    for pais, cod, pattern in rules:
+        m = re.fullmatch(r"\^([0-9]+)(.*)", pattern)
+        if m is None or m.group(1) in entries:
+            raise ValueError(f"phone rule {pattern!r}: needs a distinct leading digit prefix")
+        prefix, tail = m.groups()
+        alternatives.append(prefix + (f"(?={tail})" if tail else ""))
+        entries[prefix] = f"named_struct('pais', {_sql_str(pais)}, 'codigo_pais', {_sql_str(cod)})"
+    return "^(" + "|".join(alternatives) + ")", _sql_map(entries)
+
+
+_PHONE_PREFIX_RE, _PHONE_MAP_SQL = _phone_lookup(PHONE_RULES)
 
 
 def phone_country(col: Column | str) -> Column:
     """C19: phone → struct{pais, codigo_pais, numero_e164} via the ordered
-    prefix rules; NULL input and no-match both yield 'Desconocido'."""
-    c = F.col(col) if isinstance(col, str) else col
-    num = digits_only(c)
-    e164 = F.when(num != "", F.concat(F.lit("+"), num)).otherwise(F.lit(None).cast("string"))
-    unknown = F.struct(
-        F.lit("Desconocido").alias("pais"),
-        F.lit(None).cast("string").alias("codigo_pais"),
-        e164.alias("numero_e164"),
+    prefix rules; NULL input and no-match both yield 'Desconocido'.
+
+    The matched prefix keys a map literal of the rules; no match extracts
+    "", which the map lacks."""
+    num = digits_only(col)
+    rule = F.try_element_at(F.expr(_PHONE_MAP_SQL), F.regexp_extract(num, _PHONE_PREFIX_RE, 1))
+    return F.named_struct(
+        F.lit("pais"), F.coalesce(rule.getField("pais"), F.lit("Desconocido")),
+        F.lit("codigo_pais"), rule.getField("codigo_pais"),
+        F.lit("numero_e164"), F.concat(F.lit("+"), F.nullif(num, F.lit(""))),
     )
-    expr = unknown
-    for pais, cod, pattern in reversed(PHONE_RULES):
-        matched = F.struct(
-            F.lit(pais).alias("pais"),
-            F.lit(cod).alias("codigo_pais"),
-            F.concat(F.lit("+"), num).alias("numero_e164"),
-        )
-        expr = F.when(num.rlike(pattern), matched).otherwise(expr)
-    null_case = F.struct(
-        F.lit("Desconocido").alias("pais"),
-        F.lit(None).cast("string").alias("codigo_pais"),
-        F.lit(None).cast("string").alias("numero_e164"),
-    )
-    return F.when(c.isNull(), null_case).otherwise(expr)

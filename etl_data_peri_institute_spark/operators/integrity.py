@@ -32,7 +32,7 @@ def dedupe_keep_last(df: DataFrame, pk: str, order_col: str = ROW_IDX) -> DataFr
     w = W.partitionBy(pk).orderBy(F.desc(order_col))
     return (
         df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        .filter("__rn = 1")
         .drop("__rn")
     )
 

@@ -38,7 +38,7 @@ from .operators.integrity import (
     required_not_null_split,
 )
 from .sinks import ParquetStore, audit_csv
-from .sources.grid import PAGOS_CANONICAL, Grid, grid_to_df
+from .sources.grid import PAGOS_CANONICAL, ROW_IDX, Grid, grid_to_df
 from .transforms import (
     transform_cursos,
     transform_estudiantes,
@@ -69,7 +69,7 @@ def _incremental_filter(df: DataFrame, ts_col: str, target_date: str) -> DataFra
     """F1: keep rows whose parsed timestamp falls on target_date."""
     from .functions.cleaning import parse_date_dayfirst
 
-    return df.filter(F.to_date(parse_date_dayfirst(ts_col)) == F.lit(target_date).cast("date"))
+    return df.filter(F.to_date(parse_date_dayfirst(ts_col)) == F.to_date(F.lit(target_date)))
 
 
 def run_pipeline(
@@ -116,11 +116,12 @@ def run_pipeline(
     cursos = transform_cursos(grid_to_df(spark, grids["cursos"], header_row=2))
     land("cursos", store.upsert(cursos, "cursos", "codigo_curso"), {})
 
-    estudiantes = transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2))
+    # keep-last in sheet order: the sheet's _row_idx, not an id that
+    # encodes the scan's partitioning
     estudiantes = dedupe_keep_last(
-        estudiantes.withColumn("_row_idx", F.monotonically_increasing_id()),
+        transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2)),
         "codigo_estudiante",
-    ).drop("_row_idx")
+    ).drop(ROW_IDX)
     land("estudiantes", store.upsert(estudiantes, "estudiantes", "codigo_estudiante"), {})
 
     # -- matriculas: incremental INSERT with FK → estudiantes ---------------
@@ -173,8 +174,13 @@ def run_pipeline(
         # empty (etl/pipeline.py:194) — quirk preserved
         regulares = regulares.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
 
-    # read by the audits and the insert below: materialized once
-    pagos = primera.unionByName(regulares).localCheckpoint(eager=False)
+    # read by the audits and the insert below: materialized once. Each
+    # branch scans a sheet cut into up to defaultParallelism slices, and
+    # today's rows fill every slice of a sheet folded down to them: the
+    # union is coalesced back to that width, as each non-empty partition
+    # lands as one file of the insert and of the audit
+    width = spark.sparkContext.defaultParallelism
+    pagos = primera.unionByName(regulares).coalesce(width).localCheckpoint(eager=False)
 
     pg_rejected = {}
     if todays_mats_empty:

@@ -470,8 +470,9 @@ def p_phone_country(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Phone strings are synthesized deterministically from customer keys
     (six shapes incl. punctuation and a no-match case); the oracle
-    replays the same rule chain in SQL. The engine implementation is the
-    struct-producing when-chain in functions/cleaning.py:phone_country.
+    replays the same rule chain in SQL. The engine implementation is one
+    ordered-alternation regex whose match keys a map literal of the rules
+    (functions/cleaning.py:phone_country).
     """
     from ..functions.cleaning import phone_country
 

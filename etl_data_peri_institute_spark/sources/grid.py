@@ -17,9 +17,22 @@ by definition; at scale the landing zone is object storage read by
   distributed engine must carry explicitly; SURVEY.md §7.4.2).
 
 Header slicing is positional, which Spark's file readers can't do
-(``option("header")`` only handles row 1), so grid → rows happens on the
-driver; the resulting DataFrame is partitioned and everything after is
-distributed.
+(``option("header")`` only handles row 1), so grid → columns happens on
+the driver. The sheet crosses to the JVM as Arrow record batches (string
+columns plus an int64 ``_row_idx``), not as pickled rows: Spark keeps it
+as a ``LocalRelation`` below ``spark.sql.execution.arrow.
+localRelationThreshold`` (48 MB by default) and as a JVM-side Arrow RDD
+above it, so no scan of a sheet waits on a Python worker. Everything
+after is distributed.
+
+Over a ``LocalRelation`` the optimizer folds deterministic projections
+and filters into a new local relation on the driver
+(``ConvertToLocalRelation``): the ``estudiantes`` shaping select costs
+~0.2 s of driver time on 13k rows in each query that plans it. That rule
+is not to be switched off with a session-wide
+``spark.sql.optimizer.excludedRules``: the same session folds every
+other small local frame, and the fold is what spares those queries a
+scan task.
 """
 
 from __future__ import annotations
@@ -102,22 +115,31 @@ def grid_to_df(
         raise ValueError(
             f"worksheet has {len(grid)} rows; header expected at row {header_row}"
         )
+    import pyarrow as pa
+
     header = repair_header([str(c) for c in grid[header_row - 1]])
     width = len(header)
-    rows = []
+    columns: list[list[str | None]] = [[] for _ in range(width)]
+    row_idx: list[int] = []
     for i, raw in enumerate(grid[header_row:]):
         cells = [str(c) if c not in (None, "") else None for c in raw[:width]]
-        cells += [None] * (width - len(cells))
         if all(v is None for v in cells):
             continue  # F5: all-empty-row drop
-        rows.append((*cells, i))
+        for column, value in zip(columns, cells):
+            column.append(value)
+        for column in columns[len(cells) :]:
+            column.append(None)  # ragged row: missing trailing cells
+        row_idx.append(i)
     schema = T.StructType(
         [T.StructField(name, T.StringType(), True) for name in header]
         + [T.StructField(ROW_IDX, T.LongType(), False)]
     )
-    # every row was built above to fit the schema (string cells or None,
-    # an int index), so PySpark's per-cell type check is skipped
-    df = spark.createDataFrame(rows, schema, verifySchema=False)
+    table = pa.Table.from_arrays(
+        [pa.array(column, pa.string()) for column in columns]
+        + [pa.array(row_idx, pa.int64())],
+        names=[*header, ROW_IDX],
+    )
+    df = spark.createDataFrame(table, schema)
     if canonical:
         renames = fuzzy_rename(header, canonical)
         if renames:

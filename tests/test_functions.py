@@ -4,11 +4,17 @@ money coercion."""
 
 from __future__ import annotations
 
+import re
+
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_data_peri_institute_spark.functions.cleaning import (
     ACCOUNT_MAP_PRIMERA,
     ACCOUNT_MAP_REGULAR,
+    CURRENCY_BY_METHOD,
+    PHONE_RULES,
     currency_fixed,
     digits_only,
     extract_project_code,
@@ -178,3 +184,89 @@ def test_sql_scalar_function_matches_column_expr(spark):
 
     via_col = li.agg(F.sum(_cents("l_extendedprice")).alias("s")).first()["s"]
     assert via_sql == via_col
+
+
+# --- lookup rules against plain-Python models --------------------------------
+
+
+def _phone_model(raw):
+    """First-match-wins over PHONE_RULES, each pattern tried on its own."""
+    if raw is None:
+        return ("Desconocido", None, None)
+    num = re.sub(r"[^0-9]", "", raw)
+    e164 = "+" + num if num else None
+    for pais, cod, pattern in PHONE_RULES:
+        if re.search(pattern, num):
+            return (pais, cod, e164)
+    return ("Desconocido", None, e164)
+
+
+def _initcap(s):
+    """Spark ``initcap``: lower-case, then upper-case each letter that
+    starts the string or follows a space."""
+    return " ".join(w[:1].upper() + w[1:] for w in s.lower().split(" "))
+
+
+def _account_model(raw, mapping):
+    if raw is None or raw == "":
+        return None
+    return mapping.get(raw.strip(" ").upper(), _initcap(raw))
+
+
+def _eval(spark, values, build):
+    """``build(col)`` over ``values`` in one job, in input order."""
+    df = spark.createDataFrame(list(enumerate(values)), "i int, v string")
+    rows = df.select("i", build(F.col("v")).alias("out")).collect()
+    return [r["out"] for r in sorted(rows, key=lambda r: r["i"])]
+
+
+# digit runs that overlap rule prefixes (549/54, 591/59/593, 1…), joined
+# with punctuation; tails make 11- and 12-digit "1…" numbers likely
+_PHONE = st.one_of(
+    st.none(),
+    st.just(""),
+    st.builds(
+        lambda head, tail, sep: sep.join([head, tail]),
+        st.sampled_from(["549", "54", "569", "56", "51", "57", "593", "59", "591",
+                         "507", "50", "52", "521", "55", "1", "+1", "39", "34", "33",
+                         "49", "5", "9", "0", "+"]),
+        st.text(alphabet="0123456789", max_size=12),
+        st.sampled_from(["", " ", "-", " (", ") ", "."]),
+    ),
+    st.text(alphabet="0123456789 +-().x", max_size=16),
+)
+
+
+@given(st.lists(_PHONE, min_size=1, max_size=40))
+@example(["+54 11 5555 4444", "5491155554444", "591 7123 4567", "59 123", "593991234567",
+          "14155550134", "141555501345", "1 415 555 0134", "+1-415-555-01", None, ""])
+@settings(max_examples=20, deadline=None)
+def test_phone_country_matches_first_match_model(spark, phones):
+    got = _eval(spark, phones, phone_country)
+    assert [tuple(g) for g in got] == [_phone_model(p) for p in phones]
+
+
+_ACCOUNT_KEYS = sorted(ACCOUNT_MAP_REGULAR)
+_ACCOUNT = st.one_of(
+    st.none(),
+    st.just(""),
+    st.just("  "),
+    st.builds(
+        lambda key, case, left, right: " " * left + case(key) + " " * right,
+        st.sampled_from(_ACCOUNT_KEYS),
+        st.sampled_from([str.upper, str.lower, str.title]),
+        st.integers(0, 2),
+        st.integers(0, 2),
+    ),
+    st.text(alphabet="abcpyBCPYóÓé /-", max_size=12),
+)
+
+
+@given(st.lists(_ACCOUNT, min_size=1, max_size=40))
+@settings(max_examples=15, deadline=None)
+def test_account_and_currency_rules_match_dict_models(spark, values):
+    for mapping in (ACCOUNT_MAP_PRIMERA, ACCOUNT_MAP_REGULAR):
+        got = _eval(spark, values, lambda c, m=mapping: normalize_account(c, m))
+        assert got == [_account_model(v, mapping) for v in values]
+    got = _eval(spark, values, currency_fixed)
+    assert got == [CURRENCY_BY_METHOD.get(v, "PEN") for v in values]

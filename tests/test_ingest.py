@@ -1,5 +1,6 @@
 """Ingest-layer tests (SURVEY.md §5.4): header offset/repair, fuzzy
-rename, empty-row drop, row-index order, plus property tests."""
+rename, empty-row drop, row-index order, the Arrow-backed scan, plus
+property tests."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ from etl_data_peri_institute_spark.sources.grid import (
     grid_to_df,
     repair_header,
 )
-from tests.fixtures import CURSOS_GRID, PAGOS_GRID
+from tests.fixtures import ALL_GRIDS, CURSOS_GRID, PAGOS_GRID
 
 
 def test_header_at_row_2(spark):
@@ -75,6 +76,69 @@ def test_repair_header_always_unique_nonempty(rows):
     names = repair_header([str(c) for c in rows[0]])
     assert len(set(names)) == len(names)
     assert all(n for n in names)
+
+
+# cells as a worksheet API returns them: text, blanks, None, numbers
+_CELL = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(max_size=4),
+    st.integers(-99, 99),
+    st.floats(allow_nan=False, allow_infinity=False, width=16),
+    st.booleans(),
+)
+
+
+def _grid_model(grid, header_row):
+    """Plain-Python grid_to_df: (column names, rows ordered by _row_idx)."""
+    names = repair_header([str(c) for c in grid[header_row - 1]])
+    rows = []
+    for i, raw in enumerate(grid[header_row:]):
+        cells = [None if c is None or c == "" else str(c) for c in raw[: len(names)]]
+        cells += [None] * (len(names) - len(cells))
+        if any(v is not None for v in cells):
+            rows.append((*cells, i))
+    return [*names, "_row_idx"], rows
+
+
+@given(
+    banner=st.integers(0, 2),
+    header=st.lists(_CELL, min_size=1, max_size=5),
+    body=st.lists(
+        st.one_of(
+            st.lists(_CELL, max_size=7),  # ragged: short and long rows
+            st.lists(st.sampled_from([None, ""]), max_size=5),  # all-empty rows
+        ),
+        max_size=9,  # 0: a header-only grid
+    ),
+)
+@settings(max_examples=30, deadline=None)
+def test_grid_to_df_matches_model(spark, banner, header, body):
+    grid = [["banner"]] * banner + [header] + body
+    names, rows = _grid_model(grid, banner + 1)
+    df = grid_to_df(spark, grid, header_row=banner + 1)
+    assert df.columns == names
+    assert [f.dataType.simpleString() for f in df.schema.fields] == ["string"] * (
+        len(names) - 1
+    ) + ["bigint"]
+    assert df.schema.fields[-1].nullable is False
+    assert sorted((tuple(r) for r in df.collect()), key=lambda r: r[-1]) == rows
+
+
+def test_header_only_grid_gives_empty_frame_with_schema(spark):
+    df = grid_to_df(spark, [["banner"], ["A", "", "A"]], header_row=2)
+    assert df.columns == ["A", "col_1", "A_1", "_row_idx"]
+    assert df.collect() == []
+
+
+def test_grid_scan_needs_no_python_worker(spark):
+    """The sheet crosses as Arrow batches into a LocalRelation: the
+    physical plan scans it locally, with no RDD of pickled Python rows."""
+    for name, header_row in (("cursos", 2), ("estudiantes", 2), ("matriculas", 3), ("pagos", 6)):
+        df = grid_to_df(spark, ALL_GRIDS[name], header_row=header_row)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
 
 
 def test_infer_column_types(spark):

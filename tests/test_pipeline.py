@@ -129,6 +129,35 @@ def test_pipeline_upsert_overwrites(spark, tmp_path):
     assert result2.counts["pagos"] == 0
 
 
+def test_pipeline_estudiantes_keep_last_across_scan_partitions(spark, tmp_path):
+    """A student listed twice, first and last in the sheet, with the two
+    rows in different partitions of the sheet's scan: the upsert keeps
+    the sheet's last row."""
+    import pytest
+
+    from etl_data_peri_institute_spark.sources.grid import grid_to_df
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one task thread: every scan is a single partition")
+    estudiantes = ALL_GRIDS["estudiantes"] + [
+        ["E001", "ana v2", "pérez", "ana@mail.com", "+56 9 1111 2222", "F", "Web", "Superior"]
+    ]
+    # the scan's partitions as rows (over a local relation the optimizer
+    # folds filters and even spark_partition_id() on the driver)
+    scan = grid_to_df(spark, estudiantes, header_row=2).rdd.glom().collect()
+    parts = {p for p, rows in enumerate(scan) for r in rows if r["CODIGO_E"] == "E001"}
+    assert len(parts) == 2, parts
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    result = run_pipeline(
+        spark, {**ALL_GRIDS, "estudiantes": estudiantes}, store, target_date=TARGET_DATE
+    )
+    assert result.counts["estudiantes"] == 5
+    stored = {r["codigo_estudiante"]: r for r in store.read("estudiantes").collect()}
+    assert stored["E001"]["nombres"] == "Ana V2"
+    assert stored["E001"]["pais"] == "Chile"
+
+
 def test_pipeline_same_day_rerun_aborts(spark, tmp_path):
     """J1 PK guard (etl/load.py:59-85): re-running the same target date
     must abort the matriculas insert, not double-insert."""

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from etl_data_peri_institute_spark.sources.grid import PAGOS_CANONICAL, grid_to_df
+from pyspark.sql import functions as F
+
+from etl_data_peri_institute_spark.operators.integrity import dedupe_keep_last
+from etl_data_peri_institute_spark.sources.grid import PAGOS_CANONICAL, ROW_IDX, grid_to_df
 from etl_data_peri_institute_spark.transforms import (
     transform_cursos,
     transform_estudiantes,
@@ -80,3 +83,20 @@ def test_estudiantes_golden(spark):
     assert rows["E003"]["pais"] == "Chile"
     assert rows["E004"]["pais"] == "Desconocido"
     assert rows["E005"]["pais"] == "Estados Unidos / Puerto Rico"
+
+
+def test_estudiantes_keep_last_follows_sheet_order_not_partitions(spark):
+    """Keep-last ranks by the sheet's ``_row_idx``, which
+    ``transform_estudiantes`` carries through. Later sheet rows are put in
+    earlier partitions here: an id built from the partition index (as
+    ``monotonically_increasing_id`` is) would rank the first E001 row
+    last."""
+    grid = ESTUDIANTES_GRID + [
+        ["E001", "ana v2", "pérez", "ana@mail.com", "+51 911", "F", "Web", "Superior"]
+    ]
+    raw = grid_to_df(spark, grid, header_row=2).repartitionByRange(3, F.desc(ROW_IDX))
+    out = dedupe_keep_last(transform_estudiantes(raw), "codigo_estudiante").drop(ROW_IDX)
+    rows = {r["codigo_estudiante"]: r.asDict() for r in out.collect()}
+    assert len(rows) == 5
+    assert rows["E001"]["nombres"] == "Ana V2"
+    assert "_row_idx" not in out.columns

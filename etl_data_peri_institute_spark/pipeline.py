@@ -2,8 +2,10 @@
 
 Masters (cursos, estudiantes → UPSERT) then transactionals (matriculas,
 pagos → incremental date filter + INSERT with FK enforcement), then the
-pagos consolidation union. Order is a hard dependency: matriculas must
-land before pagos' FK check (O1).
+pagos consolidation union. Two orderings are hard dependencies (O1):
+estudiantes land before the matriculas FK check, and matriculas land
+before the pagos semi-filters and FK check. Everything else may overlap,
+so ``run_pipeline`` runs the independent branches concurrently.
 
 Faithful behaviors preserved (SURVEY.md §7.4):
 - incremental filter on date(Marca temporal) == target_date (default
@@ -23,11 +25,13 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from . import schemas
 from .operators.integrity import (
@@ -37,7 +41,7 @@ from .operators.integrity import (
     fk_split,
     required_not_null_split,
 )
-from .sinks import ParquetStore, audit_csv
+from .sinks import Landed, ParquetStore, audit_csv
 from .sources.grid import PAGOS_CANONICAL, ROW_IDX, Grid, grid_to_df
 from .transforms import (
     transform_cursos,
@@ -89,117 +93,152 @@ def run_pipeline(
     pipeline itself launches no counting or schema-inference job. A
     table never written yet reads as empty: on a first day with payments
     but no enrollments, every payment fails the FK and is audited, as
-    the reference's check against an empty table does."""
+    the reference's check against an empty table does.
+
+    The day runs as its DAG, on a thread pool that lives for this call.
+    The calling thread runs estudiantes → matriculas → pagos; beside it
+    run the ``cursos`` branch (nothing reads ``cursos``) and the pagos
+    sheet's ingest from the start, and each insert's audit beside that
+    insert. O1 holds: the FK read of ``estudiantes`` follows its upsert,
+    and everything that reads today's matriculas follows their insert.
+    Every branch started before a transactional insert must succeed
+    before that insert commits (``before_commit``), so a failure leaves
+    the transactional tables as the sequential run would; only a master
+    upsert, which a rerun repeats harmlessly, may have landed beside a
+    failing branch. The call raises only after every started branch has
+    finished. Results (counts, stages, audits) are gathered in the
+    sequential order."""
     target = target_date or (date.today() - timedelta(days=1)).isoformat()
     audit_dir = audit_dir or f"{store.root}/_audit"
-    result = PipelineResult()
+    audits: list[Landed] = []
+    stages: dict[str, dict] = dict.fromkeys(("cursos", "estudiantes", "matriculas", "pagos"))
 
-    def audit(df: DataFrame, reason: str) -> int:
-        landed = audit_csv(df, audit_dir, reason)
-        if landed.path:
-            result.audits.append(landed.path)
-        return landed.rows
-
-    def land(table: str, n: int, rejected: dict[str, int]) -> None:
-        result.counts[table] = n
-        landed = store.last_landed
-        result.stages[table] = {
-            "rows_in": n + sum(rejected.values()),
+    def stage(n: int, landed: Landed, rejected: dict[str, Landed]) -> dict:
+        rows = {reason: a.rows for reason, a in rejected.items()}
+        return {
+            "rows_in": n + sum(rows.values()),
             "rows_kept": n,
-            "rejected": {k: v for k, v in rejected.items() if v},
+            "rejected": {k: v for k, v in rows.items() if v},
             "delta_rows": landed.delta_rows,
             "files": landed.files,
             "bytes": landed.bytes,
         }
 
-    # -- masters: UPSERT ----------------------------------------------------
-    cursos = transform_cursos(grid_to_df(spark, grids["cursos"], header_row=2))
-    land("cursos", store.upsert(cursos, "cursos", "codigo_curso"), {})
+    def cursos_branch() -> tuple[int, Landed]:
+        cursos = transform_cursos(grid_to_df(spark, grids["cursos"], header_row=2))
+        return store.upsert(cursos, "cursos", "codigo_curso"), store.last_landed
 
-    # keep-last in sheet order: the sheet's _row_idx, not an id that
-    # encodes the scan's partitioning
-    estudiantes = dedupe_keep_last(
-        transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2)),
-        "codigo_estudiante",
-    ).drop(ROW_IDX)
-    land("estudiantes", store.upsert(estudiantes, "estudiantes", "codigo_estudiante"), {})
+    def pagos_sheet() -> DataFrame:
+        raw_pagos = grid_to_df(
+            spark,
+            grids["pagos"],
+            header_row=6,
+            canonical=PAGOS_CANONICAL,
+            ensure_columns=("Fecha de pago",),
+        )
+        return transform_regular_pagos(_incremental_filter(raw_pagos, "Marca temporal", target))
 
-    # -- matriculas: incremental INSERT with FK → estudiantes ---------------
-    raw_mats = grid_to_df(spark, grids["matriculas"], header_row=3)
-    todays_raw = _incremental_filter(raw_mats, "Marca temporal", target)  # O2
+    with ThreadPoolExecutor(max_workers=3, thread_name_prefix="daily-dag") as pool:
 
-    matriculas = transform_matriculas(todays_raw)
-    students = store.read("estudiantes", schemas.ESTUDIANTES)
-    split = fk_split(matriculas, students, "codigo_estudiante")
-    if not drop_missing_students and (n := split.missing.count()):
-        raise IntegrityError(f"{n} matriculas reference unknown estudiantes")
-    mat_rejected = {"matriculas_fk_missing": audit(split.missing, "matriculas_fk_missing")}
-    # today's valid matriculas feed the PK guard, the insert and the pagos
-    # semi-filters: materialized once, in the partitions AQE coalesced
-    # them to (a cached plan keeps every shuffle partition, and each
-    # became a small file of the insert)
-    valid = split.valid.localCheckpoint(eager=False)
-    # J1: abort if any incoming PK already exists in the target (reference
-    # etl/load.py:59-85 — re-running the same day must not double-insert)
-    assert_pk_absent(
-        valid, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula", "matriculas"
+        def fork(fn, *args) -> Future:
+            # job groups and local properties follow the caller
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+        # -- masters: UPSERT ------------------------------------------------
+        cursos_f = fork(cursos_branch)
+        regulares_f = fork(pagos_sheet)
+
+        # keep-last in sheet order: the sheet's _row_idx, not an id that
+        # encodes the scan's partitioning
+        estudiantes = dedupe_keep_last(
+            transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2)),
+            "codigo_estudiante",
+        ).drop(ROW_IDX)
+        n = store.upsert(estudiantes, "estudiantes", "codigo_estudiante")
+        stages["estudiantes"] = stage(n, store.last_landed, {})
+
+        # -- matriculas: incremental INSERT with FK → estudiantes -----------
+        raw_mats = grid_to_df(spark, grids["matriculas"], header_row=3)
+        todays_raw = _incremental_filter(raw_mats, "Marca temporal", target)  # O2
+
+        matriculas = transform_matriculas(todays_raw)
+        students = store.read("estudiantes", schemas.ESTUDIANTES)
+        split = fk_split(matriculas, students, "codigo_estudiante")
+        if not drop_missing_students and (n := split.missing.count()):
+            raise IntegrityError(f"{n} matriculas reference unknown estudiantes")
+        mat_audit_f = fork(audit_csv, split.missing, audit_dir, "matriculas_fk_missing")
+        # today's valid matriculas feed the PK guard, the insert and the
+        # pagos semi-filters: materialized once, in the partitions AQE
+        # coalesced them to (a cached plan keeps every shuffle partition,
+        # and each became a small file of the insert)
+        valid = split.valid.localCheckpoint(eager=False)
+        # J1: abort if any incoming PK already exists in the target
+        # (reference etl/load.py:59-85 — re-running the same day must not
+        # double-insert)
+        assert_pk_absent(
+            valid, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula", "matriculas"
+        )
+        n = store.insert(
+            valid, "matriculas", before_commit=lambda: (cursos_f.result(), mat_audit_f.result())
+        )
+        stages["cursos"] = stage(*cursos_f.result(), {})
+        audits.append(mat_audit_f.result())
+        stages["matriculas"] = stage(n, store.last_landed, {"matriculas_fk_missing": audits[-1]})
+
+        # valid matricula keys for the pagos semi-filters (F3); a semi join
+        # needs no distinct build side
+        valid_keys = valid.select("codigo_matricula")
+        todays_mats_empty = n == 0
+
+        # -- pagos: primera cuota + regulares, consolidated -----------------
+        primera = transform_pagos_primera_cuota(todays_raw)
+        regulares = regulares_f.result()
+        if not todays_mats_empty:
+            # reference applies the primera semi-filter only when today's
+            # matriculas are non-empty (etl/pipeline.py:135); otherwise the
+            # rows flow on to the stored-table FK check and its audit. It
+            # skips the regulares filter the same way (etl/pipeline.py:194)
+            # — quirk preserved
+            primera = primera.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
+            regulares = regulares.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
+
+        # read by the audits and the insert below: materialized once. Each
+        # branch scans a sheet cut into up to defaultParallelism slices, and
+        # today's rows fill every slice of a sheet folded down to them: the
+        # union is coalesced back to that width, as each non-empty partition
+        # lands as one file of the insert and of the audit
+        width = spark.sparkContext.defaultParallelism
+        pagos = primera.unionByName(regulares).coalesce(width).localCheckpoint(eager=False)
+
+        pg_rejected = {}
+        if todays_mats_empty:
+            # FK → matriculas (against the full stored table). With
+            # matriculas today, the semi-filters above kept only keys just
+            # inserted into that table, so no payment can fail this check
+            # and it is skipped.
+            pg_split = fk_split(
+                pagos, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula"
+            )
+            if not drop_missing_matriculas and (n := pg_split.missing.count()):
+                raise IntegrityError(f"{n} pagos reference unknown matriculas")
+            audits.append(audit_csv(pg_split.missing, audit_dir, "pagos_fk_missing"))
+            pg_rejected["pagos_fk_missing"] = audits[-1]
+            pagos = pg_split.valid
+
+        # required-not-null (fecha_pago) with audit backup — F4
+        rq = required_not_null_split(pagos, PAGOS_REQUIRED)
+        rq_audit_f = fork(audit_csv, rq.missing, audit_dir, "pagos_required_null")
+        n = store.insert(rq.valid, "pagos", before_commit=rq_audit_f.result)
+        audits.append(rq_audit_f.result())
+        pg_rejected["pagos_required_null"] = audits[-1]
+        stages["pagos"] = stage(n, store.last_landed, pg_rejected)
+
+    return PipelineResult(
+        counts={t: st["rows_kept"] for t, st in stages.items()},
+        audits=[a.path for a in audits if a.path],
+        stages=stages,
+        manifest=_write_manifest(audit_dir, target, stages),
     )
-    land("matriculas", store.insert(valid, "matriculas"), mat_rejected)
-
-    # valid matricula keys for the pagos semi-filters (F3); a semi join
-    # needs no distinct build side
-    valid_keys = valid.select("codigo_matricula")
-    todays_mats_empty = result.counts["matriculas"] == 0
-
-    # -- pagos: primera cuota + regulares, consolidated ---------------------
-    primera = transform_pagos_primera_cuota(todays_raw)
-    if not todays_mats_empty:
-        # reference applies the primera semi-filter only when today's
-        # matriculas are non-empty (etl/pipeline.py:135); otherwise the
-        # rows flow on to the stored-table FK check and its audit
-        primera = primera.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
-
-    raw_pagos = grid_to_df(
-        spark,
-        grids["pagos"],
-        header_row=6,
-        canonical=PAGOS_CANONICAL,
-        ensure_columns=("Fecha de pago",),
-    )
-    regulares = transform_regular_pagos(
-        _incremental_filter(raw_pagos, "Marca temporal", target)
-    )
-    if not todays_mats_empty:
-        # reference skips this filter entirely when today's matriculas are
-        # empty (etl/pipeline.py:194) — quirk preserved
-        regulares = regulares.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
-
-    # read by the audits and the insert below: materialized once. Each
-    # branch scans a sheet cut into up to defaultParallelism slices, and
-    # today's rows fill every slice of a sheet folded down to them: the
-    # union is coalesced back to that width, as each non-empty partition
-    # lands as one file of the insert and of the audit
-    width = spark.sparkContext.defaultParallelism
-    pagos = primera.unionByName(regulares).coalesce(width).localCheckpoint(eager=False)
-
-    pg_rejected = {}
-    if todays_mats_empty:
-        # FK → matriculas (against the full stored table). With matriculas
-        # today, the semi-filters above kept only keys just inserted into
-        # that table, so no payment can fail this check and it is skipped.
-        pg_split = fk_split(pagos, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula")
-        if not drop_missing_matriculas and (n := pg_split.missing.count()):
-            raise IntegrityError(f"{n} pagos reference unknown matriculas")
-        pg_rejected["pagos_fk_missing"] = audit(pg_split.missing, "pagos_fk_missing")
-        pagos = pg_split.valid
-
-    # required-not-null (fecha_pago) with audit backup — F4
-    rq = required_not_null_split(pagos, PAGOS_REQUIRED)
-    pg_rejected["pagos_required_null"] = audit(rq.missing, "pagos_required_null")
-    land("pagos", store.insert(rq.valid, "pagos"), pg_rejected)
-
-    result.manifest = _write_manifest(audit_dir, target, result.stages)
-    return result
 
 
 def _write_manifest(audit_dir: str, target: str, stages: dict[str, dict]) -> str:

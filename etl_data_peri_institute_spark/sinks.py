@@ -31,7 +31,9 @@ import functools
 import json
 import os
 import shutil
+import threading
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -234,15 +236,24 @@ class ParquetStore:
     its tests. At scale each table is a partitioned object-store prefix
     (transactional tables date-partitioned so incremental filters prune).
 
-    ``last_landed`` holds what the most recent ``insert`` or ``upsert``
-    landed (a ``Landed``): the per-stage figures a caller reports
-    without another Spark job."""
+    ``last_landed`` holds what the calling thread's most recent
+    ``insert`` or ``upsert`` landed (a ``Landed``): the per-stage
+    figures a caller reports without another Spark job.
+
+    One writer per table: different tables may be written from
+    different threads at the same time, but a table being written must
+    not be written or read from another thread meanwhile (a read
+    recovers the table, and would undo a commit in flight)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.last_landed: Landed | None = None
+        self._local = threading.local()
         os.makedirs(root, exist_ok=True)
+
+    @property
+    def last_landed(self) -> Landed | None:
+        return getattr(self._local, "landed", None)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -338,8 +349,10 @@ class ParquetStore:
     # never read as data, and the table directory stays the only record
     # of what the table holds: a plain directory read (pyarrow, Spark)
     # sees the pre-state or the post-state.
-    # Cost: one root listdir per public entry call; single-writer
-    # discipline assumed (the store is not concurrent-safe).
+    # Cost: one root listdir per public entry call. Journals, backups
+    # and scratch dirs carry the table's name, so writers of different
+    # tables never touch each other's files; two writers of ONE table
+    # are not safe.
 
     @staticmethod
     def _check_meta_name(name: str) -> None:
@@ -435,6 +448,8 @@ class ParquetStore:
             try:
                 with open(os.path.join(self.root, name)) as fh:
                     payload = json.load(fh)
+            except FileNotFoundError:
+                continue  # another table's commit finished after the listing
             except (OSError, ValueError):
                 payload = None
             owner = payload.get("table") if isinstance(payload, dict) else None
@@ -547,11 +562,15 @@ class ParquetStore:
         table: str,
         partition_by: list[str] | None = None,
         meta_files: dict[str, str] | None = None,
+        before_commit: Callable[[], object] | None = None,
     ) -> int:
         """Append-only INSERT (reference insert mode, etl/load.py:285).
 
         One plan execution: stage (row count observed on the write) →
-        append into the table directory.
+        append into the table directory. ``before_commit`` runs between
+        the two: if it raises, nothing lands (the daily pipeline joins
+        the work that must succeed before these rows may land there,
+        so the stage write overlaps it).
 
         ``meta_files`` commit ATOMICALLY with the appended rows (entries
         of the same commit, rolled back together on a kill) — the streaming ingest's ``_LAST_INGEST_EPOCH`` replay
@@ -585,9 +604,11 @@ class ParquetStore:
         files = nbytes = 0
         with self._scratch(table, "stage") as stage:
             n = self._stage(df, table, stage)
+            if before_commit is not None:
+                before_commit()
             if n:
                 files, nbytes = self._land(stage, df.schema, table, partition_by, meta_files)
-        self.last_landed = Landed(n, n, files, nbytes)
+        self._local.landed = Landed(n, n, files, nbytes)
         return n
 
     def _land(
@@ -950,7 +971,7 @@ class ParquetStore:
             elif d["delta_rows"]:
                 staged = self.spark.read.schema(delta.schema).parquet(stage)
                 files, nbytes = self._merge(staged, stored, table, pk, part_cols)
-        self.last_landed = Landed(d["rows"], d["delta_rows"], files, nbytes)
+        self._local.landed = Landed(d["rows"], d["delta_rows"], files, nbytes)
         return d["rows"]
 
     def _merge(
@@ -1087,6 +1108,12 @@ class ParquetStore:
         return n_before - n_after
 
 
+# audit dir → [calls in flight, whether the dir was absent when the
+# first of them started]
+_AUDITS_IN_FLIGHT: dict[str, list] = {}
+_AUDITS_LOCK = threading.Lock()
+
+
 def audit_csv(df: DataFrame, out_dir: str, reason: str) -> Landed:
     """S8: back up rejected rows to a timestamped CSV (reference
     etl/load.py:114-122,141-151,183-190; artifacts retained by CI —
@@ -1100,23 +1127,38 @@ def audit_csv(df: DataFrame, out_dir: str, reason: str) -> Landed:
     afterwards. Returns the ``Landed`` rows, part files and bytes, with
     ``path`` the output directory, or None when there was nothing to
     audit.
+
+    Audits of different reasons may run at the same time from several
+    threads, into one dir: a dir that no audit in flight found existing
+    is removed when the last of them finishes, and only if it is empty.
     """
-    created = not os.path.isdir(out_dir)
-    # microseconds in the stamp: two same-reason audits within one
-    # second must not overwrite each other's rejected rows
-    stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
-    path = os.path.join(out_dir, f"{reason}_{stamp}.csv")
-    observed, obs = _rows_observed(df, f"audit_{reason}")
-    observed.write.option("header", True).mode("overwrite").csv(path)
-    n = obs.get["rows"]
-    if not n:
-        shutil.rmtree(path, ignore_errors=True)
-        if created:
-            with contextlib.suppress(OSError):
-                os.rmdir(out_dir)
-        return Landed(0)
-    parts = [name for name in os.listdir(path) if name.startswith("part-")]
-    return Landed(n, n, len(parts), sum(os.path.getsize(os.path.join(path, p)) for p in parts), path)
+    key = os.path.abspath(out_dir)
+    with _AUDITS_LOCK:
+        if key not in _AUDITS_IN_FLIGHT:
+            _AUDITS_IN_FLIGHT[key] = [0, not os.path.isdir(out_dir)]
+        _AUDITS_IN_FLIGHT[key][0] += 1
+    try:
+        # microseconds in the stamp: two same-reason audits within one
+        # second must not overwrite each other's rejected rows
+        stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
+        path = os.path.join(out_dir, f"{reason}_{stamp}.csv")
+        observed, obs = _rows_observed(df, f"audit_{reason}")
+        observed.write.option("header", True).mode("overwrite").csv(path)
+        n = obs.get["rows"]
+        if not n:
+            shutil.rmtree(path, ignore_errors=True)
+            return Landed(0)
+        parts = [name for name in os.listdir(path) if name.startswith("part-")]
+        return Landed(n, n, len(parts), sum(os.path.getsize(os.path.join(path, p)) for p in parts), path)
+    finally:
+        with _AUDITS_LOCK:
+            entry = _AUDITS_IN_FLIGHT[key]
+            entry[0] -= 1
+            if not entry[0]:
+                del _AUDITS_IN_FLIGHT[key]
+                if entry[1]:
+                    with contextlib.suppress(OSError):
+                        os.rmdir(out_dir)  # fails, as it should, unless empty
 
 
 def _jdbc_options(

@@ -23,7 +23,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import unittest.mock as mock
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -392,6 +394,73 @@ def test_recovery_owns_by_payload_not_filename_prefix(
     assert not any(
         n.startswith(".__journal_") for n in os.listdir(store.root)
     )
+
+
+def test_writers_of_different_tables_run_concurrently(spark, tmp_path, monkeypatch):
+    """One writer per table: two threads insert and upsert different
+    tables of one store with both commits' journals live at once. Each
+    thread's ``last_landed`` is its own call's, both tables come out
+    right, and no journal or backup is left."""
+    store = ParquetStore(spark, str(tmp_path / "conc"))
+    _seed_flat(store)
+    seeded = store.last_landed
+    both_journaled = threading.Barrier(2, timeout=120)
+    labels: list[tuple[str, str]] = []
+
+    def hook(label: str) -> None:
+        labels.append((threading.current_thread().name, label))
+        if label == "commit:journaled":
+            both_journaled.wait()
+
+    def insert():
+        n = store.insert(spark.range(0, 7).withColumnRenamed("id", "k"), "u")
+        return n, store.last_landed
+
+    def upsert():
+        inc = spark.createDataFrame([(2, "B"), (4, "d")], "pk int, v string")
+        return store.upsert(inc, "t", pk="pk"), store.last_landed
+
+    monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
+    try:
+        with ThreadPoolExecutor(2, thread_name_prefix="writer") as pool:
+            ins, ups = pool.submit(insert), pool.submit(upsert)
+            (n_ins, landed_ins), (n_ups, landed_ups) = ins.result(), ups.result()
+    finally:
+        monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
+
+    assert (n_ins, landed_ins.rows, landed_ins.delta_rows) == (7, 7, 7)
+    assert landed_ins.files > 0
+    # key 2 changed and key 4 is new: a merge of two rows
+    assert (n_ups, landed_ups.rows, landed_ups.delta_rows) == (2, 2, 2)
+    assert store.last_landed is seeded  # this thread's own last insert
+    assert _rows(store, "u") == [(k,) for k in range(7)]
+    assert _rows(store, "t") == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
+    assert len({name for name, label in labels if label == "commit:journaled"}) == 2
+    assert _leftovers(store) == []
+
+
+def test_recover_skips_journal_removed_mid_scan(spark, tmp_path, monkeypatch):
+    """Another thread's commit may finish, removing its journal, between
+    a recovery's listing of the store root and its read of that journal:
+    the vanished journal is skipped, not taken for a corrupt one."""
+    store = ParquetStore(spark, str(tmp_path / "scan"))
+    _seed_flat(store)
+    gone = store._journal_path("u", ".u_0123456789ab")
+    listdir = os.listdir
+
+    def listdir_then_commit_finishes(path):
+        names = listdir(path)
+        if path == store.root:
+            names = sorted(names + [os.path.basename(gone)])  # listed, never there
+        return names
+
+    monkeypatch.setattr(sinks.os, "listdir", listdir_then_commit_finishes)
+    store._recover("t")
+    store._recover("u")
+    assert list(store._journals()) == []
+    assert _rows(store, "t") == [(1, "a"), (2, "b"), (3, "c")]
+    monkeypatch.setattr(sinks.os, "listdir", listdir)
+    assert _leftovers(store) == []
 
 
 def test_recovery_preserves_unknown_journal_kind(spark, tmp_path):

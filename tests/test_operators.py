@@ -395,6 +395,49 @@ def test_audit_csv_roundtrip(spark, tmp_path):
     assert not os.path.exists(tmp_path / "fresh")
 
 
+def test_audit_csv_concurrent_calls_share_fresh_dir(spark, tmp_path):
+    """Audits at once into a dir none of them found, more of them than
+    cores, with thread switches forced often: an empty one must not take
+    the dir from under the others, whose rows survive and read back;
+    when all are empty no dir is left behind."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    df = spark.createDataFrame([("x", None), ("y", "2")], "a string, b string")
+    empty = df.filter(F.col("a") == "zz")
+
+    def together(frames: dict, out: str) -> dict:
+        start = threading.Barrier(len(frames), timeout=120)
+
+        def audit(frame, reason):
+            start.wait()
+            return audit_csv(frame, out, reason)
+
+        with ThreadPoolExecutor(len(frames)) as pool:
+            futures = {r: pool.submit(audit, f, r) for r, f in frames.items()}
+            return {r: f.result(timeout=300) for r, f in futures.items()}
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for i in range(2):
+            out = str(tmp_path / f"fresh{i}")
+            got = together({f"r{j}": empty if j % 2 else df for j in range(6)}, out)
+            kept = sorted(os.path.basename(a.path) for a in got.values() if a.rows)
+            assert [r for r, a in got.items() if a == Landed(0)] == ["r1", "r3", "r5"]
+            assert sorted(os.listdir(out)) == kept and len(kept) == 3
+            for name in kept:
+                assert spark.read.option("header", True).csv(os.path.join(out, name)).count() == 2
+
+        out = str(tmp_path / "fresh_empty")
+        got = together({f"n{j}": empty for j in range(6)}, out)
+        assert set(got.values()) == {Landed(0)}
+        assert not os.path.exists(out)
+    finally:
+        sys.setswitchinterval(switch)
+
+
 def test_jdbc_sink_wrapper(spark, monkeypatch):
     from etl_data_peri_institute_spark.sinks import (
         _jdbc_options,

@@ -5,8 +5,13 @@ quirk."""
 from __future__ import annotations
 
 import json
+import os
+import threading
 
-from etl_data_peri_institute_spark import schemas
+import pytest
+
+from etl_data_peri_institute_spark import pipeline, schemas
+from etl_data_peri_institute_spark.operators.integrity import IntegrityError
 from etl_data_peri_institute_spark.pipeline import run_pipeline
 from etl_data_peri_institute_spark.sinks import ParquetStore
 from tests.fixtures import ALL_GRIDS, TARGET_DATE
@@ -23,13 +28,28 @@ def _names_types(schema) -> list[tuple[str, str]]:
     return [(f.name, f.dataType.simpleString()) for f in schema.fields]
 
 
+def _reason(path: str) -> str:
+    """An audit output's reason: its name without the time stamp."""
+    return path.rsplit("/", 1)[-1].rsplit("_", 3)[0]
+
+
 def _audit_rows(spark, result) -> dict[str, int]:
     """Rejected rows per audit reason, read back from the audit CSVs."""
     out: dict[str, int] = {}
     for path in result.audits:
-        reason = path.rsplit("/", 1)[-1].rsplit("_", 3)[0]
+        reason = _reason(path)
         out[reason] = out.get(reason, 0) + spark.read.option("header", True).csv(path).count()
     return out
+
+
+def _audited(store: ParquetStore) -> list[str]:
+    """The reasons of the audit outputs in the store's audit dir."""
+    audit_dir = os.path.join(store.root, "_audit")
+    return sorted(_reason(p) for p in os.listdir(audit_dir)) if os.path.isdir(audit_dir) else []
+
+
+def _dag_threads() -> list[str]:
+    return [t.name for t in threading.enumerate() if t.name.startswith("daily-dag")]
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -133,8 +153,6 @@ def test_pipeline_estudiantes_keep_last_across_scan_partitions(spark, tmp_path):
     """A student listed twice, first and last in the sheet, with the two
     rows in different partitions of the sheet's scan: the upsert keeps
     the sheet's last row."""
-    import pytest
-
     from etl_data_peri_institute_spark.sources.grid import grid_to_df
 
     if spark.sparkContext.defaultParallelism < 2:
@@ -160,17 +178,102 @@ def test_pipeline_estudiantes_keep_last_across_scan_partitions(spark, tmp_path):
 
 def test_pipeline_same_day_rerun_aborts(spark, tmp_path):
     """J1 PK guard (etl/load.py:59-85): re-running the same target date
-    must abort the matriculas insert, not double-insert."""
-    import pytest
-
-    from etl_data_peri_institute_spark.operators.integrity import IntegrityError
-
+    must abort the matriculas insert, not double-insert; nothing after
+    the guard lands, and no pool thread outlives the call."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    audited = _audited(store)
     examples = r"already present in 'matriculas': e\.g\. \['M001', 'M002'\]"
     with pytest.raises(IntegrityError, match=examples):
         run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    assert _dag_threads() == []
     assert store.read("matriculas").count() == 2  # unchanged
+    assert store.read("pagos").count() == 4
+    # the matriculas audit precedes the guard, as in the reference
+    assert _audited(store) == sorted(audited + ["matriculas_fk_missing"])
+
+
+def test_pipeline_abort_policies_land_nothing_after_the_failing_step(spark, tmp_path):
+    """``drop_missing_*=False`` aborts the day at its FK check: the
+    masters before it have landed, nothing after it has (no insert, no
+    audit of a later step), and no pool thread is left."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    with pytest.raises(IntegrityError, match="1 matriculas reference unknown estudiantes"):
+        run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE, drop_missing_students=False)
+    assert _dag_threads() == []
+    assert store.exists("cursos") and store.exists("estudiantes")
+    assert not store.exists("matriculas") and not store.exists("pagos")
+    assert _audited(store) == []
+
+    # the empty-store day: its one payment fails the FK to matriculas
+    store = ParquetStore(spark, str(tmp_path / "db2"))
+    with pytest.raises(IntegrityError, match="1 pagos reference unknown matriculas"):
+        run_pipeline(spark, ALL_GRIDS, store, target_date="2024-03-12", drop_missing_matriculas=False)
+    assert _dag_threads() == []
+    assert not store.exists("pagos")
+    assert _audited(store) == []
+
+
+def test_pipeline_background_failure_propagates(spark, tmp_path, monkeypatch):
+    """A branch off the calling thread that raises (here the cursos
+    transform) fails the day after every started branch has finished,
+    with no pool thread left. The matriculas insert commits only once
+    the branches started before it have succeeded, so no transactional
+    row lands; what ran beside the failing branch (the estudiantes
+    upsert, the matriculas audit) is repeated harmlessly by a rerun."""
+    transform_cursos = pipeline.transform_cursos
+
+    def unreadable(df):
+        raise RuntimeError("cursos sheet unreadable")
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    monkeypatch.setattr(pipeline, "transform_cursos", unreadable)
+    with pytest.raises(RuntimeError, match="cursos sheet unreadable"):
+        run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    assert _dag_threads() == []
+    assert not store.exists("cursos")
+    assert not store.exists("matriculas") and not store.exists("pagos")
+    # the matriculas audit may have run beside the failing branch; no
+    # later step's did
+    assert set(_audited(store)) <= {"matriculas_fk_missing"}
+
+    monkeypatch.setattr(pipeline, "transform_cursos", transform_cursos)
+    result = run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    assert result.counts == {"cursos": 3, "estudiantes": 5, "matriculas": 2, "pagos": 4}
+
+
+def test_pipeline_runs_are_deterministic(spark, tmp_path):
+    """Three replays of the same two days from fresh stores give the
+    same counts, stages, audit order and stored rows, in whatever order
+    the concurrent branches finish."""
+
+    def replay(i: int):
+        store = ParquetStore(spark, str(tmp_path / f"db{i}"))
+        days = [
+            run_pipeline(spark, ALL_GRIDS, store, target_date=day)
+            for day in (TARGET_DATE, "2024-03-12")
+        ]
+        assert _dag_threads() == []
+        return (
+            [(list(r.counts.items()), list(r.stages.items()), [_reason(p) for p in r.audits]) for r in days],
+            {t: sorted(repr(tuple(row)) for row in store.read(t).collect()) for t in CONTRACTS},
+        )
+
+    first = replay(0)
+    assert first[0][0][2] == ["matriculas_fk_missing", "pagos_required_null"]
+    assert replay(1) == first
+    assert replay(2) == first
+
+
+def test_session_turns_call_site_capture_off(spark):
+    """PySpark's per-call Python call-site capture is off (plan building
+    is driver time on every day); an analysis error still raises."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException):
+        spark.range(1).select(F.col("missing")).collect()
 
 
 def test_pipeline_empty_matriculas_skips_semi_filter(spark, tmp_path):
@@ -240,7 +343,6 @@ def test_store_compact(spark, tmp_path):
     # simulate small-file accretion: many inserts
     for i in range(5):
         store.insert(df.filter((F.col("k") % 5) == i), "t")
-    import os
 
     before = sum(1 for n in os.listdir(store.path("t")) if n.endswith(".parquet"))
     assert before >= 5

@@ -22,6 +22,7 @@ import json
 import os
 import sys
 import time
+from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -349,6 +350,14 @@ def ab_output_changed_vs_baseline(head_root: str) -> dict[str, str]:
     return out
 
 
+def _commit_of(root: str) -> str | None:
+    """The commit checked out at ``root``; None outside a git checkout."""
+    import subprocess
+
+    r = subprocess.run(["git", "rev-parse", "HEAD"], cwd=root, capture_output=True, text=True)
+    return r.stdout.strip() or None
+
+
 def _purge_engine_modules() -> None:
     for mod in list(sys.modules):
         if mod.split(".")[0] == "etl_data_peri_institute_spark":
@@ -612,6 +621,9 @@ def main() -> None:
     # a ~160-entry JSON line mid-stream and records parsed:null — the
     # artifact line must fit a terminal line, the detail ships in-repo.
     detail_payload = {
+        # which code produced these figures, and when
+        "commit": _commit_of(head_root),
+        "utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "metric": "comparable_set_total_time",
         "value": comparable_total,
         "n_comparable": sum(1 for n in COMPARABLE if n in timings),

@@ -113,20 +113,20 @@ def run_pipeline(
     audits: list[Landed] = []
     stages: dict[str, dict] = dict.fromkeys(("cursos", "estudiantes", "matriculas", "pagos"))
 
-    def stage(n: int, landed: Landed, rejected: dict[str, Landed]) -> dict:
+    def stage(landed: Landed, rejected: dict[str, Landed]) -> dict:
         rows = {reason: a.rows for reason, a in rejected.items()}
         return {
-            "rows_in": n + sum(rows.values()),
-            "rows_kept": n,
+            "rows_in": landed.rows + sum(rows.values()),
+            "rows_kept": landed.rows,
             "rejected": {k: v for k, v in rows.items() if v},
             "delta_rows": landed.delta_rows,
             "files": landed.files,
             "bytes": landed.bytes,
         }
 
-    def cursos_branch() -> tuple[int, Landed]:
+    def cursos_branch() -> Landed:
         cursos = transform_cursos(grid_to_df(spark, grids["cursos"], header_row=2))
-        return store.upsert(cursos, "cursos", "codigo_curso"), store.last_landed
+        return store.upsert(cursos, "cursos", "codigo_curso")
 
     def pagos_sheet() -> DataFrame:
         raw_pagos = grid_to_df(
@@ -154,8 +154,7 @@ def run_pipeline(
             transform_estudiantes(grid_to_df(spark, grids["estudiantes"], header_row=2)),
             "codigo_estudiante",
         ).drop(ROW_IDX)
-        n = store.upsert(estudiantes, "estudiantes", "codigo_estudiante")
-        stages["estudiantes"] = stage(n, store.last_landed, {})
+        stages["estudiantes"] = stage(store.upsert(estudiantes, "estudiantes", "codigo_estudiante"), {})
 
         # -- matriculas: incremental INSERT with FK → estudiantes -----------
         raw_mats = grid_to_df(spark, grids["matriculas"], header_row=3)
@@ -178,17 +177,17 @@ def run_pipeline(
         assert_pk_absent(
             valid, store.read("matriculas", schemas.MATRICULAS), "codigo_matricula", "matriculas"
         )
-        n = store.insert(
+        mats_landed = store.insert(
             valid, "matriculas", before_commit=lambda: (cursos_f.result(), mat_audit_f.result())
         )
-        stages["cursos"] = stage(*cursos_f.result(), {})
+        stages["cursos"] = stage(cursos_f.result(), {})
         audits.append(mat_audit_f.result())
-        stages["matriculas"] = stage(n, store.last_landed, {"matriculas_fk_missing": audits[-1]})
+        stages["matriculas"] = stage(mats_landed, {"matriculas_fk_missing": audits[-1]})
 
         # valid matricula keys for the pagos semi-filters (F3); a semi join
         # needs no distinct build side
         valid_keys = valid.select("codigo_matricula")
-        todays_mats_empty = n == 0
+        todays_mats_empty = mats_landed.rows == 0
 
         # -- pagos: primera cuota + regulares, consolidated -----------------
         primera = transform_pagos_primera_cuota(todays_raw)
@@ -228,10 +227,10 @@ def run_pipeline(
         # required-not-null (fecha_pago) with audit backup — F4
         rq = required_not_null_split(pagos, PAGOS_REQUIRED)
         rq_audit_f = fork(audit_csv, rq.missing, audit_dir, "pagos_required_null")
-        n = store.insert(rq.valid, "pagos", before_commit=rq_audit_f.result)
+        pagos_landed = store.insert(rq.valid, "pagos", before_commit=rq_audit_f.result)
         audits.append(rq_audit_f.result())
         pg_rejected["pagos_required_null"] = audits[-1]
-        stages["pagos"] = stage(n, store.last_landed, pg_rejected)
+        stages["pagos"] = stage(pagos_landed, pg_rejected)
 
     return PipelineResult(
         counts={t: st["rows_kept"] for t, st in stages.items()},

@@ -17,11 +17,12 @@ The JDBC variant (the reference's actual Postgres target) is
 ``jdbc_upsert_sql`` MERGE statement for upsert.
 
 Execution discipline: each sink runs the incoming plan EXACTLY ONCE —
-the frame is staged to parquet first, and its row count is an
-``Observation`` on that write (gathered while the rows are written: no
-re-read of the staged files, no second pass). Stored tables are read
-with a known schema wherever the caller or the incoming frame supplies
-one, so a sink launches no schema-inference job.
+every mutation is one write into a scratch dir (``ParquetStore._write``,
+its row count an ``Observation`` on that write: no re-read of the
+written files, no second pass) and then one ``_commit``; the call
+returns what landed as a ``Landed``. Stored tables are read with a known
+schema wherever the caller, the incoming frame or a parquet footer
+supplies one, so a sink launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ import os
 import shutil
 import threading
 import uuid
+from urllib.parse import unquote
 from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -64,9 +66,19 @@ def _crash_point(label: str) -> None:
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def _footer_schema(metadata: dict | None) -> T.StructType | None:
+    """The Spark schema (data columns) a parquet footer's key-value
+    ``metadata`` records; None when it records none."""
+    try:
+        return T.StructType.fromJson(json.loads((metadata or {})[_SPARK_SCHEMA_KEY]))
+    except (KeyError, ValueError):
+        return None
+
+
 @dataclass(frozen=True)
 class Landed:
-    """What one sink call wrote. ``rows``: the rows it was given,
+    """What one sink call wrote, returned by ``insert``, ``upsert``,
+    ``overwrite`` and ``audit_csv``. ``rows``: the rows it was given,
     observed on its single write; ``delta_rows``: the rows that reached
     the target (an upsert writes only the keys whose stored rows
     differ); ``files``/``bytes``: the data files it added to or rewrote
@@ -183,8 +195,8 @@ def _changed_rows(
 ) -> tuple[DataFrame, Observation]:
     """The incoming rows of every key whose stored rows differ — the
     rows an upsert must write — as one lazy plan, observed for ``rows``
-    (incoming rows), ``delta_rows`` and ``changed_keys`` (delta keys
-    that already have stored rows; the rest are new).
+    (incoming rows) and ``changed_keys`` (delta keys that already have
+    stored rows; the rest are new).
 
     A key is unchanged only when its stored and incoming rows are equal
     as multisets, nulls comparing equal: re-upserting it would delete
@@ -204,9 +216,7 @@ def _changed_rows(
     obs = Observation("upsert_delta")
     if not _orderable(incoming.schema):
         n = F.count(F.lit(1))
-        return incoming.observe(
-            obs, n.alias("rows"), n.alias("delta_rows"), n.alias("changed_keys")
-        ), obs
+        return incoming.observe(obs, n.alias("rows"), n.alias("changed_keys")), obs
     cols = incoming.columns
     side = "__upsert_incoming"
     both = stored.withColumn(side, F.lit(False)).unionByName(
@@ -224,7 +234,6 @@ def _changed_rows(
     per_key = per_key.observe(
         obs,
         F.coalesce(F.sum(F.size("__new")), F.lit(0)).alias("rows"),
-        F.coalesce(F.sum(F.when(changed, F.size("__new"))), F.lit(0)).alias("delta_rows"),
         F.count(F.when(changed & (F.size("__old") > 0), 1)).alias("changed_keys"),
     )
     delta = per_key.filter(changed).select(F.explode("__new").alias("__r")).select("__r.*")
@@ -233,12 +242,13 @@ def _changed_rows(
 
 class ParquetStore:
     """Directory-per-table parquet 'database' used by the pipeline and
-    its tests. At scale each table is a partitioned object-store prefix
-    (transactional tables date-partitioned so incremental filters prune).
+    its tests. A table is flat or hive-partitioned, as its first write
+    chose (``insert(partition_by=...)``); the daily pipeline writes its
+    four tables flat.
 
-    ``last_landed`` holds what the calling thread's most recent
-    ``insert`` or ``upsert`` landed (a ``Landed``): the per-stage
-    figures a caller reports without another Spark job.
+    ``insert``, ``upsert`` and ``overwrite`` return what they landed (a
+    ``Landed``): the per-stage figures a caller reports without another
+    Spark job.
 
     One writer per table: different tables may be written from
     different threads at the same time, but a table being written must
@@ -248,12 +258,7 @@ class ParquetStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._local = threading.local()
         os.makedirs(root, exist_ok=True)
-
-    @property
-    def last_landed(self) -> Landed | None:
-        return getattr(self._local, "landed", None)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -295,9 +300,10 @@ class ParquetStore:
         import pyarrow.parquet as pq
 
         try:
-            meta = pq.read_schema(footer).metadata or {}
-            stored = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-        except (KeyError, ValueError, OSError):
+            stored = _footer_schema(pq.read_schema(footer).metadata)
+        except OSError:
+            stored = None
+        if stored is None:
             return self.read(table)
         part_cols = self._detect_partition_cols(table)
 
@@ -325,13 +331,22 @@ class ParquetStore:
         finally:
             shutil.rmtree(path, ignore_errors=True)
 
-    def _stage(self, df: DataFrame, table: str, stage: str) -> int:
-        """Materialize ``df`` once into ``stage``; return its row count,
-        observed on the write itself — one job, no re-read of the staged
-        files."""
-        observed, obs = _rows_observed(df, f"{table}_stage")
-        observed.write.mode("overwrite").parquet(stage)
-        return obs.get["rows"]
+    def _write(
+        self, df: DataFrame, dst: str, partition_by: list[str] | None = None
+    ) -> Landed:
+        """The one write of every mutation: ``df`` runs once into the
+        scratch dir ``dst`` (hive layout when ``partition_by``). Returns
+        its rows, observed on the write itself (no re-read of the
+        written files), and the data files and bytes written."""
+        # the scratch dir's name is unique, so concurrent writers'
+        # observations never share a name
+        observed, obs = _rows_observed(df, os.path.basename(dst))
+        writer = observed.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(dst)
+        n = obs.get["rows"]
+        return Landed(n, n, *_data_files(dst))
 
     # ---- the commit protocol --------------------------------------
     # Every mutation of a table is ONE ``_commit``: a list of entries,
@@ -563,14 +578,15 @@ class ParquetStore:
         partition_by: list[str] | None = None,
         meta_files: dict[str, str] | None = None,
         before_commit: Callable[[], object] | None = None,
-    ) -> int:
+    ) -> Landed:
         """Append-only INSERT (reference insert mode, etl/load.py:285).
 
-        One plan execution: stage (row count observed on the write) →
-        append into the table directory. ``before_commit`` runs between
-        the two: if it raises, nothing lands (the daily pipeline joins
-        the work that must succeed before these rows may land there,
-        so the stage write overlaps it).
+        One plan execution: stage in the table's layout (row count
+        observed on the write) → append into the table directory.
+        ``before_commit`` runs between the two: if it raises, nothing
+        lands (the daily pipeline joins the work that must succeed
+        before these rows may land there, so the stage write overlaps
+        it).
 
         ``meta_files`` commit ATOMICALLY with the appended rows (entries
         of the same commit, rolled back together on a kill) — the streaming ingest's ``_LAST_INGEST_EPOCH`` replay
@@ -601,62 +617,36 @@ class ParquetStore:
         disable inference session-wide."""
         self._recover(table)
         self._check_layout(table, partition_by)
-        files = nbytes = 0
         with self._scratch(table, "stage") as stage:
-            n = self._stage(df, table, stage)
+            landed = self._write(df, stage, partition_by)
             if before_commit is not None:
                 before_commit()
-            if n:
-                files, nbytes = self._land(stage, df.schema, table, partition_by, meta_files)
-        self._local.landed = Landed(n, n, files, nbytes)
-        return n
-
-    def _land(
-        self,
-        stage: str,
-        schema: T.StructType,
-        table: str,
-        partition_by: list[str] | None,
-        meta_files: dict[str, str] | None = None,
-    ) -> tuple[int, int]:
-        """Append the rows staged in ``stage`` (written with ``schema``)
-        to the table: flat part files move in as they are; a hive
-        layout is first rewritten from the stage into a second scratch
-        dir (a file scan of the staged snapshot, not a plan re-run).
-        Returns the (files, bytes) that landed."""
-        if not partition_by:
-            return self._append(stage, table, meta_files)
-        with self._scratch(table, "ins") as lay:
-            (
-                self.spark.read.schema(schema).parquet(stage)
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-                .parquet(lay)
-            )
-            return self._append(lay, table, meta_files)
+            if not landed.rows:
+                return Landed(0)
+            self._append(stage, table, meta_files)
+        return landed
 
     def _append(
-        self, src_root: str, table: str, meta_files: dict[str, str] | None
-    ) -> tuple[int, int]:
-        """Commit the parquet files under ``src_root`` into the table,
-        with ``meta_files`` (rows and meta commit together, so a replay
-        marker never advances without its rows). A missing table is the
-        whole ``src_root`` moved in; otherwise each file is an entry
-        (writer-UUID-unique names), a partition dir the table lacks
-        moves in whole, and each meta file is an entry that replaces
-        the stored one. A direct ``mode("append")`` into the live table
-        would leave a PARTIAL append visible if the process died
-        mid-write. Returns the (files, bytes) that landed."""
+        self, src_root: str, table: str, meta_files: dict[str, str] | None = None
+    ) -> None:
+        """Commit the parquet files under ``src_root`` (written in the
+        table's layout) into the table, with ``meta_files`` (rows and
+        meta commit together, so a replay marker never advances without
+        its rows). A missing table is the whole ``src_root`` moved in;
+        otherwise each file is an entry (writer-UUID-unique names), a
+        partition dir the table lacks moves in whole, and each meta
+        file is an entry that replaces the stored one. A direct
+        ``mode("append")`` into the live table would leave a PARTIAL
+        append visible if the process died mid-write."""
         for name in meta_files or {}:
             self._check_meta_name(name)
         for name, contents in (meta_files or {}).items():
             with open(os.path.join(src_root, name), "w") as fh:
                 fh.write(contents)
-        landed = _data_files(src_root)
         final = self.path(table)
         if not os.path.isdir(final):
             self._commit(table, [(final, src_root)])
-            return landed
+            return
 
         def head(rel: str) -> str:
             # the shallowest part of ``rel`` the table lacks
@@ -668,11 +658,10 @@ class ParquetStore:
 
         rels = list(dict.fromkeys(head(r) for r in _parquet_files(src_root))) + list(meta_files or {})
         self._commit(table, [(os.path.join(final, r), os.path.join(src_root, r)) for r in rels])
-        return landed
 
     def overwrite(
         self, df: DataFrame, table: str, meta_files: dict[str, str] | None = None
-    ) -> int:
+    ) -> Landed:
         """Replace the table with ``df`` atomically: a one-entry commit
         of the staged dir over the table dir. The primitive under rollup
         maintenance: the replacement is computed BEFORE the old table is
@@ -686,12 +675,12 @@ class ParquetStore:
         for name in meta_files or {}:
             self._check_meta_name(name)
         with self._scratch(table, "stage") as stage:
-            n = self._stage(df, table, stage)
+            landed = self._write(df, stage)
             for name, contents in (meta_files or {}).items():
                 with open(os.path.join(stage, name), "w") as fh:
                     fh.write(contents)
             self._commit(table, [(self.path(table), stage)])
-        return n
+        return landed
 
     def read_meta(self, table: str, name: str) -> str | None:
         """Read a metadata file written via overwrite(meta_files=...) or
@@ -739,27 +728,18 @@ class ParquetStore:
                 shutil.copyfile(sp, os.path.join(dst, name))
 
     def _rewrite_and_swap(
-        self,
-        out: DataFrame,
-        table: str,
-        part_cols: list[str] | None,
-        prefix: str,
-        pre_swap=None,
-    ):
-        """Shared maintenance-rewrite discipline (upsert fallback,
-        compact, cluster_rewrite, delete_rows): write ``out`` into a
-        scratch dir (hive layout when ``part_cols``), carry the table's
-        meta files over, run ``pre_swap(tmp)``, then commit the dir over
-        the table. Returns pre_swap's result."""
+        self, out: DataFrame, table: str, part_cols: list[str] | None, prefix: str
+    ) -> Landed:
+        """Shared whole-table rewrite (upsert's full merge, compact,
+        cluster_rewrite, delete_rows): write ``out`` into a scratch dir
+        (hive layout when ``part_cols``), carry the table's meta files
+        over, then commit the dir over the table. Returns what was
+        written."""
         with self._scratch(table, prefix) as tmp:
-            writer = out.write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(tmp)
+            landed = self._write(out, tmp, part_cols)
             self._copy_meta_files(table, tmp)
-            result = pre_swap(tmp) if pre_swap is not None else None
             self._commit(table, [(self.path(table), tmp)])
-        return result
+        return landed
 
     def _parquet_file_count(self, table: str) -> int:
         return len(_parquet_files(self.path(table)))
@@ -901,58 +881,33 @@ class ParquetStore:
             full_breadth = False
         return cols
 
-    # Characters Spark's hive-path writer percent-escapes in partition
-    # directory names (ExternalCatalogUtils.escapePathName, public Spark
-    # source). _hive_part_dirname must produce the EXACT dir name Spark
-    # writes or the scoped swap would miss a partition — a roundtrip
-    # check in _upsert_scoped falls back to the full rewrite whenever
-    # the formatted name disagrees with what is actually on disk.
-    _HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {chr(0x7F)}
-
-    @classmethod
-    def _hive_part_dirname(cls, col: str, value) -> str:
-        if value is None:
-            return f"{col}=__HIVE_DEFAULT_PARTITION__"
-        s = str(value)
-        escaped = "".join(
-            f"%{ord(ch):02X}" if ch in cls._HIVE_ESCAPE else ch for ch in s
-        )
-        return f"{col}={escaped}"
-
-    def upsert(self, df: DataFrame, table: str, pk: str) -> int:
+    def upsert(self, df: DataFrame, table: str, pk: str) -> Landed:
         """Insert-or-update on PK (reference upsert, etl/load.py:283).
-        Returns the incoming row count.
+        Returns the ``Landed``: ``rows`` is the incoming row count,
+        ``delta_rows`` the changed rows written.
 
         Change first: ONE write job reads the stored table (typed, see
         ``_read_stored``) beside the incoming plan, keeps the incoming
         rows of every key whose stored rows differ (``_changed_rows``)
-        and stages only those; the incoming plan runs exactly once and
-        both counts are observed on that write. Re-upserting an
-        unchanged key would delete and re-add the same rows, so leaving
-        it alone gives the same table. Then:
+        and stages only those, in the table's layout; the incoming plan
+        runs exactly once and both counts are observed on that write.
+        Re-upserting an unchanged key would delete and re-add the same
+        rows, so leaving it alone gives the same table. Then:
 
         - **No changed key**: nothing else runs — no commit, and no file
           of the table is touched (a master sheet re-upserted unchanged).
-        - **Only new keys**: the staged rows are appended (``_land``:
-          one commit entry per new file), in the table's own layout.
+        - **Only new keys**: the staged files are appended (``_append``:
+          one commit entry per new file or partition dir).
         - **Changed keys**: the merge below runs on the staged rows only.
 
           - *Partition-scoped merge* (hive-partitioned table, single
             partition level — the layout ``insert(partition_by=...)``
             writes): only the partitions the staged rows TOUCH are
-            rewritten. Affected = partitions a staged row lands in ∪
-            partitions holding a colliding PK (covers rows whose
-            partition value changes). Kept rows of affected partitions
-            are anti-joined against the staged PKs, unioned with them,
-            written to a temp dir and committed with one entry per
-            affected partition dir. Untouched partition directories are never
-            rewritten; the plain-parquet analogue of Delta/Iceberg
-            MERGE file pruning.
-          - *Full rewrite* (flat table, multi-level layouts, or a
-            partition-name roundtrip mismatch): anti-join keeps the
-            non-colliding stored rows, union with the staged rows, write
-            to a temp dir and commit it over the table — O(table) write
-            cost.
+            rewritten (``_upsert_scoped``).
+          - *Full rewrite* (flat table or multi-level layout): anti-join
+            keeps the non-colliding stored rows, union with the staged
+            rows, write to a temp dir and commit it over the table —
+            O(table) write cost.
 
         A failed write never corrupts the table on any path: every path
         ends in one ``_commit``, which never holds the only copy
@@ -962,17 +917,17 @@ class ParquetStore:
         part_cols = self._detect_partition_cols(table)
         stored = self._read_stored(table, df.schema)
         delta, obs = _changed_rows(df, stored, pk)
-        files = nbytes = 0
         with self._scratch(table, "stage") as stage:
-            delta.write.mode("overwrite").parquet(stage)
+            staged = self._write(delta, stage, part_cols)
             d = obs.get
-            if d["delta_rows"] and not d["changed_keys"]:
-                files, nbytes = self._land(stage, delta.schema, table, part_cols)
-            elif d["delta_rows"]:
-                staged = self.spark.read.schema(delta.schema).parquet(stage)
-                files, nbytes = self._merge(staged, stored, table, pk, part_cols)
-        self._local.landed = Landed(d["rows"], d["delta_rows"], files, nbytes)
-        return d["rows"]
+            written = Landed(0)
+            if staged.rows and not d["changed_keys"]:
+                self._append(stage, table)
+                written = staged
+            elif staged.rows:
+                staged_rows = self.spark.read.schema(delta.schema).parquet(stage)
+                written = self._merge(staged_rows, stored, table, pk, part_cols)
+        return Landed(d["rows"], staged.rows, written.files, written.bytes)
 
     def _merge(
         self,
@@ -981,89 +936,69 @@ class ParquetStore:
         table: str,
         pk: str,
         part_cols: list[str],
-    ) -> tuple[int, int]:
+    ) -> Landed:
         """Replace ``current``'s rows of every key in ``delta`` by
-        ``delta``'s rows; returns the (files, bytes) written."""
+        ``delta``'s rows; returns what was written."""
         if len(part_cols) == 1:
-            landed = self._upsert_scoped(delta, current, table, pk, part_cols[0])
-            if landed is not None:
-                return landed
+            return self._upsert_scoped(delta, current, table, pk, part_cols[0])
         # an anti join needs no distinct key side
         kept = current.join(delta.select(pk), pk, "left_anti")
-        return self._rewrite_and_swap(
-            kept.unionByName(delta), table, part_cols, "merge", pre_swap=_data_files
-        )
+        return self._rewrite_and_swap(kept.unionByName(delta), table, part_cols, "merge")
 
     def _upsert_scoped(
         self, incoming: DataFrame, current: DataFrame, table: str, pk: str, pc: str
-    ) -> tuple[int, int] | None:
-        """Partition-scoped merge body. Returns the (files, bytes)
-        written when the scoped swap committed; None to signal 'use the
-        full rewrite' (roundtrip safety check failed — e.g. a partition
-        value whose formatted dir name does not match what Spark
-        wrote)."""
+    ) -> Landed:
+        """Partition-scoped merge: only the partitions the incoming rows
+        touch are rewritten. Affected = partitions an incoming row lands
+        in ∪ partitions holding a colliding PK (covers rows whose
+        partition value changes). Kept rows of affected partitions are
+        anti-joined against the incoming PKs, unioned with them, written
+        to a scratch dir and committed with one entry per affected
+        partition dir: the plain-parquet analogue of Delta/Iceberg MERGE
+        file pruning. Untouched partition dirs are never renamed, so
+        their files stay byte-identical (pinned by tests/test_operators.py
+        and tests/test_round7.py).
+
+        Every directory name comes from disk, never from formatting a
+        value: the dirs the merge wrote, and the dirs the colliding
+        stored rows were read from."""
         final = self.path(table)
         in_keys = incoming.select(pk).distinct()
-        # Affected partition values: where incoming rows land + where
-        # colliding PKs currently live — ONE pass, with each value's
-        # origin tagged, so the colliding-PK semi-join over the current
-        # table runs exactly once. The collect is bounded by the number
-        # of TOUCHED partitions (an operational number — days in the
-        # batch — never table-sized).
-        aff_rows = (
-            incoming.select(F.col(pc).alias("v"), F.lit(False).alias("from_current"))
-            .unionByName(
-                current.join(in_keys, pk, "left_semi")
-                .select(F.col(pc).alias("v"), F.lit(True).alias("from_current"))
-            )
-            .groupBy("v")
-            .agg(F.max("from_current").alias("from_current"))
+        # Affected partition values, with the dir each colliding row was
+        # read from (its file URI's parent, URL-encoded), in ONE pass, so
+        # the colliding-PK semi-join over the current table runs exactly
+        # once. The collect is bounded by the number of TOUCHED
+        # partitions (an operational number — days in the batch — never
+        # table-sized).
+        colliding = (
+            current.withColumn("__file", F.input_file_name())
+            .join(in_keys, pk, "left_semi")
+            .select(F.col(pc).alias("v"), F.element_at(F.split("__file", "/"), -2).alias("dir"))
+        )
+        affected = (
+            incoming.select(F.col(pc).alias("v"), F.lit(None).cast("string").alias("dir"))
+            .unionByName(colliding)
+            .distinct()
             .collect()
         )
-        vals = [r["v"] for r in aff_rows]
-        want = {self._hive_part_dirname(pc, v) for v in vals}
-        on_disk = {
-            d for d in os.listdir(final)
-            if "=" in d and os.path.isdir(os.path.join(final, d))
-        }
-        # Roundtrip check: every affected partition that exists on disk
-        # must be addressable by its formatted name. Values sourced from
-        # `current` were parsed FROM dir names, so a miss means our
-        # formatter disagrees with Spark's writer — fall back.
-        current_vals = {
-            self._hive_part_dirname(pc, r["v"])
-            for r in aff_rows
-            if r["from_current"]
-        }
-        if current_vals - on_disk:
-            return None
-        non_null = [v for v in vals if v is not None]
-        has_null = len(non_null) < len(vals)
-        pred = F.col(pc).isin(non_null) if non_null else F.lit(False)
-        if has_null:
+        vals = [r["v"] for r in affected if r["v"] is not None]
+        pred = F.col(pc).isin(vals) if vals else F.lit(False)
+        if any(r["v"] is None for r in affected):
             pred = pred | F.col(pc).isNull()
         # Partition-pruned read: only affected directories are scanned.
         kept = current.filter(pred).join(in_keys, pk, "left_anti")
-        merged = kept.unionByName(incoming)
         with self._scratch(table, "pmerge") as tmp:
-            merged.write.mode("overwrite").partitionBy(pc).parquet(tmp)
-            tmp_dirs = {
+            landed = self._write(kept.unionByName(incoming), tmp, [pc])
+            written = {
                 d for d in os.listdir(tmp)
                 if "=" in d and os.path.isdir(os.path.join(tmp, d))
             }
-            if tmp_dirs - want:
-                # Formatter/writer disagreement the other way: a written
-                # dir we did not predict. Fall back before touching final.
-                return None
-            landed = _data_files(tmp)
-            # one entry per affected partition: rewritten dirs move in,
-            # an affected dir the merge emptied is removed; untouched
-            # partition dirs are never renamed — their files stay
-            # byte-identical (pinned by tests/test_operators.py and
-            # tests/test_round7.py)
+            # rewritten dirs move in; a colliding row's dir the merge
+            # emptied is removed
+            emptied = {unquote(r["dir"]) for r in affected if r["dir"]} - written
             self._commit(table, [
-                (os.path.join(final, d), os.path.join(tmp, d) if d in tmp_dirs else None)
-                for d in sorted(want | tmp_dirs)
+                (os.path.join(final, d), os.path.join(tmp, d) if d in written else None)
+                for d in sorted(written | emptied)
             ])
         return landed
 
@@ -1074,38 +1009,36 @@ class ParquetStore:
         partition layout. Returns the number of rows removed.
 
         Plain-parquet emulation of ``DELETE FROM t WHERE key IN (...)``:
-        anti-join rewrite + one-entry commit (same discipline as
-        upsert — no step holds the only copy mid-delete). The delete-key
-        set is request-sized (a takedown list, not a table), so the
-        anti-join broadcasts it; the rewrite cost is O(table), which is
-        what plain parquet costs — on Delta/Iceberg this becomes a
-        MERGE/DELETE with file-level pruning, and the surrounding
-        accounting is unchanged. Deletion counts come from parquet
-        footers (no plan re-run), and the caller should audit the count,
-        not the keys (the point is to STOP storing them)."""
+        the delete-key set is request-sized (a takedown list, not a
+        table), so it is collected to the driver (no job when it is a
+        local list: ``VALUES``, a pandas frame) and the table is
+        rewritten once without those keys, in one whole-table commit
+        (no step holds the only copy mid-delete). The rewrite cost is
+        O(table), which is what plain parquet costs — on Delta/Iceberg
+        this becomes a MERGE/DELETE with file-level pruning, and the
+        surrounding accounting is unchanged. The count removed is the
+        table's parquet footer row counts, read on the driver, minus the
+        rows the rewrite observed: no re-read, one Spark job for a local
+        key list. The caller should audit the count, not the keys (the
+        point is to STOP storing them)."""
+        import pyarrow.parquet as pq
+
         self._recover(table)
-        if not os.path.isdir(self.path(table)):
+        final = self.path(table)
+        footers = [pq.read_metadata(os.path.join(final, r)) for r in _parquet_files(final)]
+        n_before = sum(m.num_rows for m in footers)
+        if not n_before:
             return 0
-        current = self.read(table)
-        key_set = keys.select(F.col(keys.columns[0]).alias(key)).distinct()
-        kept = current.join(key_set, key, "left_anti")
-        part_cols = self._detect_partition_cols(table)
-        n_before = current.count()
-        # post-write count INSIDE the rewrite guard, with the schema
-        # passed explicitly: a delete that removes EVERY row writes an
-        # empty dataset (no parquet files to infer from), which must
-        # still commit — the table becomes validly empty, not an error
-        # with a leaked tmp dir
-        n_after = self._rewrite_and_swap(
-            kept,
-            table,
-            part_cols,
-            "delete",
-            pre_swap=lambda tmp: (
-                self.spark.read.schema(current.schema).parquet(tmp).count()
-            ),
+        # a null key matches no row, as in the anti-join this emulates
+        drop = [r[0] for r in keys.collect() if r[0] is not None]
+        if not drop:
+            return 0
+        col = F.col(_q(key))
+        kept = self.read(table, _footer_schema(footers[0].metadata)).filter(
+            col.isNull() | ~col.isin(drop)
         )
-        return n_before - n_after
+        part_cols = self._detect_partition_cols(table)
+        return n_before - self._rewrite_and_swap(kept, table, part_cols, "delete").rows
 
 
 # audit dir → [calls in flight, whether the dir was absent when the

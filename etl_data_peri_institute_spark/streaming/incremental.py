@@ -65,13 +65,13 @@ def incremental_ingest(
             if epoch_id <= int(applied):
                 return  # replayed batch — already ingested
         if upsert_pk is not None:
-            written["n"] += store.upsert(batch_df, table, upsert_pk)
+            written["n"] += store.upsert(batch_df, table, upsert_pk).rows
         else:
             written["n"] += store.insert(
                 batch_df,
                 table,
                 meta_files={"_LAST_INGEST_EPOCH": str(epoch_id)},
-            )
+            ).rows
 
     q = (
         stream.writeStream.foreachBatch(sink)

@@ -272,7 +272,7 @@ def test_upsert_no_op_passes_no_crash_point(spark, tmp_path, monkeypatch):
         seen: list[str] = []
         monkeypatch.setattr(sinks, "_CRASH_HOOK", seen.append)
         try:
-            assert store.upsert(same, "t", pk="pk") == 3
+            assert store.upsert(same, "t", pk="pk").rows == 3
         finally:
             monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
         assert seen == [], sub
@@ -399,11 +399,10 @@ def test_recovery_owns_by_payload_not_filename_prefix(
 def test_writers_of_different_tables_run_concurrently(spark, tmp_path, monkeypatch):
     """One writer per table: two threads insert and upsert different
     tables of one store with both commits' journals live at once. Each
-    thread's ``last_landed`` is its own call's, both tables come out
+    thread's returned ``Landed`` is its own call's, both tables come out
     right, and no journal or backup is left."""
     store = ParquetStore(spark, str(tmp_path / "conc"))
     _seed_flat(store)
-    seeded = store.last_landed
     both_journaled = threading.Barrier(2, timeout=120)
     labels: list[tuple[str, str]] = []
 
@@ -413,26 +412,25 @@ def test_writers_of_different_tables_run_concurrently(spark, tmp_path, monkeypat
             both_journaled.wait()
 
     def insert():
-        n = store.insert(spark.range(0, 7).withColumnRenamed("id", "k"), "u")
-        return n, store.last_landed
+        return store.insert(spark.range(0, 7).withColumnRenamed("id", "k"), "u")
 
     def upsert():
         inc = spark.createDataFrame([(2, "B"), (4, "d")], "pk int, v string")
-        return store.upsert(inc, "t", pk="pk"), store.last_landed
+        return store.upsert(inc, "t", pk="pk")
 
     monkeypatch.setattr(sinks, "_CRASH_HOOK", hook)
     try:
         with ThreadPoolExecutor(2, thread_name_prefix="writer") as pool:
             ins, ups = pool.submit(insert), pool.submit(upsert)
-            (n_ins, landed_ins), (n_ups, landed_ups) = ins.result(), ups.result()
+            landed_ins, landed_ups = ins.result(), ups.result()
     finally:
         monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
 
-    assert (n_ins, landed_ins.rows, landed_ins.delta_rows) == (7, 7, 7)
+    assert (landed_ins.rows, landed_ins.delta_rows) == (7, 7)
     assert landed_ins.files > 0
     # key 2 changed and key 4 is new: a merge of two rows
-    assert (n_ups, landed_ups.rows, landed_ups.delta_rows) == (2, 2, 2)
-    assert store.last_landed is seeded  # this thread's own last insert
+    assert (landed_ups.rows, landed_ups.delta_rows) == (2, 2)
+    assert landed_ups.files > 0
     assert _rows(store, "u") == [(k,) for k in range(7)]
     assert _rows(store, "t") == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
     assert len({name for name, label in labels if label == "commit:journaled"}) == 2
@@ -551,7 +549,7 @@ def test_exception_rollback_of_first_insert_removes_created_dir(
         monkeypatch.setattr(sinks, "_CRASH_HOOK", None)
     assert not store.exists("t")
     # and the table is cleanly creatable afterwards
-    assert store.insert(df, "t", partition_by=["dt"]) == 1
+    assert store.insert(df, "t", partition_by=["dt"]).rows == 1
     assert _rows(store, "t") == [("d1", 1, "a")]  # _rows sorts columns
 
 
@@ -568,7 +566,7 @@ def test_partitioned_insert_into_validly_empty_table(spark, tmp_path):
     keys = spark.createDataFrame([(1,), (2,)], "pk int")
     assert store.delete_rows("t", "pk", keys) == 2
     # table exists, holds nothing — re-ingest partitioned must work
-    assert store.insert(df, "t", partition_by=["dt"]) == 2
+    assert store.insert(df, "t", partition_by=["dt"]).rows == 2
     assert _rows(store, "t") == [("d1", 1, "a"), ("d2", 2, "b")]
 
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from datetime import date, datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -103,8 +104,8 @@ def test_multimodal_real_decode_raises(spark):
 def test_store_insert_append_and_upsert(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "db"))
     df1 = spark.createDataFrame([("a", 1), ("b", 2)], "pk string, v int")
-    assert store.insert(df1, "t") == 2
-    assert store.insert(df1, "t") == 2  # append: now 4 rows
+    assert store.insert(df1, "t").rows == 2
+    assert store.insert(df1, "t").rows == 2  # append: now 4 rows
     assert store.read("t").count() == 4
 
     store2 = ParquetStore(spark, str(tmp_path / "db2"))
@@ -118,7 +119,7 @@ def test_store_insert_append_and_upsert(spark, tmp_path):
 def test_upsert_empty_noop(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "db"))
     empty = spark.createDataFrame([], "pk string, v int")
-    assert store.upsert(empty, "t", "pk") == 0
+    assert store.upsert(empty, "t", "pk").rows == 0
     assert not store.exists("t")
 
 
@@ -157,7 +158,7 @@ def test_upsert_partition_scoped_untouched_bytes(spark, tmp_path):
     up = spark.createDataFrame(
         [(1, "a", 11), (6, "a", 60), (7, "d", 70)], "pk int, dt string, v int"
     )
-    assert store.upsert(up, "t", "pk") == 3
+    assert store.upsert(up, "t", "pk").rows == 3
 
     # untouched partitions b and c: byte-identical, not even re-opened
     assert _file_state(os.path.join(final, "dt=b")) == before_b
@@ -189,44 +190,87 @@ def test_upsert_partition_move_and_empty_dir_removed(spark, tmp_path):
     )
     store.insert(base, "t", partition_by=["dt"])
     up = spark.createDataFrame([(1, "b", 11)], "pk int, dt string, v int")
-    assert store.upsert(up, "t", "pk") == 1
+    assert store.upsert(up, "t", "pk").rows == 1
     rows = {r["pk"]: (r["dt"], r["v"]) for r in store.read("t").collect()}
     assert rows == {1: ("b", 11), 2: ("b", 20)}
     assert not os.path.isdir(os.path.join(store.path("t"), "dt=a"))
 
 
+def _partition_states(root):
+    """(partition dir -> ``_file_state`` of its files) for a table."""
+    return {d: _file_state(os.path.join(root, d)) for d in os.listdir(root) if "=" in d}
+
+
 def test_upsert_partition_scoped_null_and_escaped_values(spark, tmp_path):
     """Null partition values (__HIVE_DEFAULT_PARTITION__) and values
-    Spark percent-escapes in dir names route through the scoped path
-    correctly (or fall back to the full rewrite — either way the table
-    contents must be exact)."""
+    Spark percent-escapes in dir names (space, ':', '%', '/', '#',
+    non-ASCII) route through the scoped path: the table contents are
+    exact, a partition a moved row left is removed, and the untouched
+    escaped partition keeps its files byte-identical."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     base = spark.createDataFrame(
-        [(1, None, 10), (2, "x y:z", 20), (3, "plain", 30)],
+        [(1, None, 10), (2, "x y:z", 20), (3, "plain", 30), (4, "a%b/c#d é", 40)],
         "pk int, dt string, v int",
     )
     store.insert(base, "t", partition_by=["dt"])
+    final = store.path("t")
+    before = _partition_states(final)
     up = spark.createDataFrame(
-        [(1, None, 11), (2, "x y:z", 21)], "pk int, dt string, v int"
+        [(1, None, 11), (2, "x y:z", 21), (3, "ü/#%", 31)], "pk int, dt string, v int"
     )
-    assert store.upsert(up, "t", "pk") == 2
+    assert store.upsert(up, "t", "pk").rows == 3
     rows = {r["pk"]: (r["dt"], r["v"]) for r in store.read("t").collect()}
-    assert rows == {1: (None, 11), 2: ("x y:z", 21), 3: ("plain", 30)}
+    assert rows == {1: (None, 11), 2: ("x y:z", 21), 3: ("ü/#%", 31), 4: ("a%b/c#d é", 40)}
+    after = _partition_states(final)
+    assert "dt=plain" in before and "dt=plain" not in after
+    assert len(after) == 4
+    untouched = [d for d in after if after[d] == before.get(d)]
+    assert len(untouched) == 1 and "é" in untouched[0], untouched
 
 
-def test_upsert_int_partition_scoped(spark, tmp_path):
-    """Integer partition values roundtrip through the dir-name formatter
-    (hive reads them back typed; the formatted name must still match)."""
-    import os
-
+@pytest.mark.parametrize(
+    "ddl, values",
+    [
+        pytest.param("boolean", [True, False, None], id="boolean"),
+        pytest.param("double", [1e20, 0.5, -2.0], id="double"),
+        pytest.param(
+            "timestamp",
+            [datetime(2024, 1, 2, 3, 4, 15, 123000), datetime(2024, 1, 3), datetime(2024, 1, 4, 5, 6, 7)],
+            id="timestamp",
+        ),
+        pytest.param("string", ["a", None, "b"], id="null"),
+        pytest.param("int", [7, 8, 9], id="int"),
+        pytest.param("date", [date(2024, 1, 1), date(2024, 1, 2), date(2024, 1, 3)], id="date"),
+    ],
+)
+def test_upsert_partition_scoped_types(spark, tmp_path, ddl, values):
+    """Partitions an upsert does not touch keep their files
+    byte-identical (same bytes, same mtime: never re-opened) whatever
+    the partition column's type — also where a value's ``str`` is not
+    the dir name Spark writes (``true``, ``1.0E20``, ``...15.123``). A
+    key moved to another partition empties its old one, whose dir is
+    removed, and the third partition is still untouched."""
     store = ParquetStore(spark, str(tmp_path / "db"))
-    base = spark.createDataFrame([(1, 7, 10), (2, 8, 20)], "pk int, b int, v int")
-    store.insert(base, "t", partition_by=["b"])
-    before = _file_state(os.path.join(store.path("t"), "b=8"))
-    store.upsert(spark.createDataFrame([(1, 7, 99)], "pk int, b int, v int"), "t", "pk")
-    assert _file_state(os.path.join(store.path("t"), "b=8")) == before
-    rows = {r["pk"]: r["v"] for r in store.read("t").collect()}
-    assert rows == {1: 99, 2: 20}
+    schema = f"pk int, p {ddl}, v int"
+    rows = [(i, value, i) for i, value in enumerate(values)]
+    store.insert(spark.createDataFrame(rows, schema), "t", partition_by=["p"])
+    final = store.path("t")
+    before = _partition_states(final)
+    assert len(before) == 3
+
+    store.upsert(spark.createDataFrame([(0, values[0], 99)], schema), "t", "pk")
+    after = _partition_states(final)
+    assert sorted(after) == sorted(before)
+    touched = [d for d in before if after[d] != before[d]]
+    assert len(touched) == 1
+
+    store.upsert(spark.createDataFrame([(0, values[2], 98)], schema), "t", "pk")
+    moved = _partition_states(final)
+    assert set(after) - set(moved) == set(touched)
+    assert len([d for d in moved if moved[d] == after[d]]) == 1
+    typed = spark.createDataFrame([], schema).schema
+    got = {r["pk"]: (r["p"], r["v"]) for r in store.read("t", typed).collect()}
+    assert got == {0: (values[2], 98), 1: (values[1], 1), 2: (values[2], 2)}
 
 
 def test_insert_layout_mismatch_raises(spark, tmp_path):
@@ -297,7 +341,7 @@ def test_upsert_nested_partition_layout_full_rewrite(spark, tmp_path):
         [(1, "a", "x", 11), (4, "b", "y", 40)],
         "pk int, l1 string, l2 string, v int",
     )
-    assert store.upsert(up, "t", "pk") == 2
+    assert store.upsert(up, "t", "pk").rows == 2
     # still a clean two-level layout, still readable
     assert store._detect_partition_cols("t") == ["l1", "l2"]
     assert os.path.isdir(os.path.join(store.path("t"), "l1=a", "l2=x"))
@@ -944,6 +988,35 @@ def test_delete_rows_all_rows_partitioned(spark, tmp_path):
     # no leaked tmp/backup dirs
     leftovers = [d for d in os.listdir(str(tmp_path)) if d.startswith(".t_")]
     assert leftovers == [], leftovers
+
+
+@pytest.mark.parametrize("layout", ["flat", "hive"])
+def test_delete_rows_one_job_and_count(spark, tmp_path, layout):
+    """For a local key list, delete_rows launches ONE Spark job, the
+    rewrite: the count removed is the table's footer row counts minus
+    the rows the rewrite observed, with no count before or after. The
+    count is right for a flat and a hive table, for keys that match no
+    row or are null, and for a delete of every row."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    df = spark.createDataFrame([(i, f"d{i % 2}", i) for i in range(6)], "pk int, dt string, v int")
+    store.insert(df, "t", partition_by=["dt"] if layout == "hive" else None)
+    sc = spark.sparkContext
+
+    def delete(keys_sql, group):
+        keys = spark.sql(f"SELECT * FROM VALUES {keys_sql} AS k(pk)")
+        sc.setJobGroup(group, "delete_rows")
+        try:
+            removed = store.delete_rows("t", "pk", keys)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return removed, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert delete("(1), (4), (99), (NULL)", f"del_some_{layout}") == (2, 1)
+    got = sorted(r["pk"] for r in store.read("t", df.schema).collect())
+    assert got == [0, 2, 3, 5]
+    assert delete("(0), (2), (3), (5)", f"del_all_{layout}") == (4, 1)
+    assert store.read("t", df.schema).count() == 0
+    assert store.delete_rows("t", "pk", spark.sql("SELECT 1 AS pk")) == 0
 
 
 def test_write_meta_atomic_and_validated(spark, tmp_path):

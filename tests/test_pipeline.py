@@ -325,8 +325,8 @@ def test_store_partitioned_insert_prunes(spark, tmp_path):
         [(3, "2024-01-02", 30.0), (4, "2024-01-03", 40.0)],
         "id long, dt string, v double",
     )
-    assert store.insert(df1, "facts", partition_by=["dt"]) == 2
-    assert store.insert(df2, "facts", partition_by=["dt"]) == 2  # incremental append
+    assert store.insert(df1, "facts", partition_by=["dt"]).rows == 2
+    assert store.insert(df2, "facts", partition_by=["dt"]).rows == 2  # incremental append
     back = store.read("facts")
     assert back.count() == 4
     one_day = back.filter(F.col("dt") == "2024-01-02")

@@ -86,15 +86,15 @@ def test_upsert_matches_anti_join_union(spark, case):
         existed = store.exists("t")
         before = _file_state(store.path("t")) if existed else None
 
-        n = store.upsert(spark.createDataFrame(incoming, SCHEMA), "t", "pk")
+        landed = store.upsert(spark.createDataFrame(incoming, SCHEMA), "t", "pk")
 
-        assert n == len(incoming)
+        assert landed.rows == len(incoming)
         keys = {r[0] for r in incoming if r[0] is not None}
         want = [r for r in stored if r[0] is None or r[0] not in keys] + list(incoming)
         assert _table_rows(store, "t") == _sorted(want)
         if existed and _unchanged(stored, incoming):
             assert _file_state(store.path("t")) == before
-            assert store.last_landed.delta_rows == 0
+            assert landed.delta_rows == 0
         if existed and layout == "hive":
             # every path keeps the hive layout
             assert store._detect_partition_cols("t") == ["dt"]
@@ -108,28 +108,30 @@ def test_upsert_paths_and_landed(spark, tmp_path):
     files. A changed key: the table is rewritten with the merge."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     base = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], "pk int, v string")
-    assert store.upsert(base, "t", "pk") == 3
+    assert store.upsert(base, "t", "pk").rows == 3
     first = _file_state(store.path("t"))
 
     # the same rows, duplicate key included, in another order
     again = spark.createDataFrame([(2, "b"), (1, "a"), (2, "b")], "pk int, v string")
-    assert store.upsert(again, "t", "pk") == 3
+    landed = store.upsert(again, "t", "pk")
+    assert landed.rows == 3
     assert _file_state(store.path("t")) == first
-    assert store.last_landed.delta_rows == store.last_landed.files == 0
+    assert landed.delta_rows == landed.files == 0
     assert not [n for n in os.listdir(store.root) if n.startswith(".")]
 
     # one key new, one unchanged: appended, old files untouched
-    assert store.upsert(spark.createDataFrame([(1, "a"), (3, "c")], "pk int, v string"), "t", "pk") == 2
+    landed = store.upsert(spark.createDataFrame([(1, "a"), (3, "c")], "pk int, v string"), "t", "pk")
+    assert landed.rows == 2
     after = _file_state(store.path("t"))
     assert {k: v for k, v in after.items() if k in first} == first
-    assert store.last_landed.delta_rows == 1 and store.last_landed.files >= 1
+    assert landed.delta_rows == 1 and landed.files >= 1
     assert len([k for k in after if k.endswith(".parquet")]) > len(
         [k for k in first if k.endswith(".parquet")]
     )
 
     # a changed multiset for key 2 (one copy instead of two)
-    assert store.upsert(spark.createDataFrame([(2, "b")], "pk int, v string"), "t", "pk") == 1
-    assert store.last_landed.delta_rows == 1
+    landed = store.upsert(spark.createDataFrame([(2, "b")], "pk int, v string"), "t", "pk")
+    assert (landed.rows, landed.delta_rows) == (1, 1)
     rows = sorted(tuple(r) for r in store.read("t").collect())
     assert rows == [(1, "a"), (2, "b"), (3, "c")]
 
@@ -140,8 +142,8 @@ def test_upsert_map_column_merges_every_row(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "db"))
     schema = "pk int, m map<string,int>"
     store.upsert(spark.createDataFrame([(1, {"a": 1}), (2, {"b": 2})], schema), "t", "pk")
-    assert store.upsert(spark.createDataFrame([(2, {"b": 3})], schema), "t", "pk") == 1
-    assert store.last_landed.delta_rows == 1
+    landed = store.upsert(spark.createDataFrame([(2, {"b": 3})], schema), "t", "pk")
+    assert (landed.rows, landed.delta_rows) == (1, 1)
     rows = {r["pk"]: r["m"] for r in store.read("t").collect()}
     assert rows == {1: {"a": 1}, 2: {"b": 3}}
 

@@ -12,6 +12,8 @@ given by --sf (default sf0.1 — the bench regime).
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import sys
 from pathlib import Path
 
@@ -35,9 +37,11 @@ def main() -> int:
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in args.queries:
         df = catalog.QUERIES[name].fn(spark, args.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        # explain() prints the plan from Python; capture what it prints
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            df.explain("formatted")
+        plan = out.getvalue()
         path = out_dir / f"{name}_{args.suffix}.txt"
         path.write_text(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")

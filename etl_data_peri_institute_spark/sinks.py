@@ -20,9 +20,10 @@ Execution discipline: each sink runs the incoming plan EXACTLY ONCE —
 every mutation is one write into a scratch dir (``ParquetStore._write``,
 its row count an ``Observation`` on that write: no re-read of the
 written files, no second pass) and then one ``_commit``; the call
-returns what landed as a ``Landed``. Stored tables are read with a known
-schema wherever the caller, the incoming frame or a parquet footer
-supplies one, so a sink launches no schema-inference job.
+returns what landed as a ``Landed``. Every store read is typed: by the
+caller's schema, or else by the Spark schema in the table's first data
+file's footer, read on the driver (``ParquetStore.read``), so no read of
+a table the store wrote launches a schema-inference job.
 """
 
 from __future__ import annotations
@@ -61,16 +62,19 @@ def _crash_point(label: str) -> None:
 
 
 # Spark records a parquet file's Spark schema in this footer key; the
-# typed store reads check it driver-side instead of launching Spark's
-# footer-reading schema-inference job
+# store's reads take it from there on the driver instead of launching
+# Spark's footer-reading schema-inference job
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_schema(metadata: dict | None) -> T.StructType | None:
-    """The Spark schema (data columns) a parquet footer's key-value
-    ``metadata`` records; None when it records none."""
+def _footer_schema(footer) -> T.StructType | None:
+    """The Spark schema (data columns) a parquet footer (a pyarrow
+    ``FileMetaData``) records; None when there is no footer or it
+    records none (a file written outside Spark)."""
+    if footer is None or not footer.metadata:
+        return None
     try:
-        return T.StructType.fromJson(json.loads((metadata or {})[_SPARK_SCHEMA_KEY]))
+        return T.StructType.fromJson(json.loads(footer.metadata[_SPARK_SCHEMA_KEY]))
     except (KeyError, ValueError):
         return None
 
@@ -113,25 +117,32 @@ def _rows_observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
     return observed_stage(df, name, {"rows": F.count(F.lit(1))})
 
 
-def _parquet_files(root: str) -> list[str]:
-    """The visible parquet data files under ``root``, as sorted paths
-    relative to it: what readers read. Dot- and underscore-prefixed
-    names (backups, CRCs, ``_SUCCESS``, meta files) are skipped, and so
-    is everything under such a directory."""
-    rels = []
+def _parquet_files(root: str):
+    """The visible parquet data files under ``root``, as paths relative
+    to it, listed lazily in a fixed order (names sorted at each level):
+    what readers read. Dot- and underscore-prefixed names (backups,
+    CRCs, ``_SUCCESS``, meta files) are skipped, and so is everything
+    under such a directory. A missing ``root`` has none."""
     for base, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        rels += [
-            os.path.relpath(os.path.join(base, name), root)
-            for name in files
-            if name.endswith(".parquet") and not name.startswith((".", "_"))
-        ]
-    return sorted(rels)
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for name in sorted(files):
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                yield os.path.relpath(os.path.join(base, name), root)
+
+
+def _footers(root: str):
+    """The footers (pyarrow ``FileMetaData``) of the visible parquet
+    files under ``root``, each opened on the driver when it is reached,
+    in ``_parquet_files`` order."""
+    import pyarrow.parquet as pq
+
+    for rel in _parquet_files(root):
+        yield pq.read_metadata(os.path.join(root, rel))
 
 
 def _data_files(root: str) -> tuple[int, int]:
     """(count, bytes) of the visible parquet files under ``root``."""
-    rels = _parquet_files(root)
+    rels = list(_parquet_files(root))
     return len(rels), sum(os.path.getsize(os.path.join(root, r)) for r in rels)
 
 
@@ -268,53 +279,46 @@ class ParquetStore:
         return os.path.isdir(self.path(table))
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
+        """``table`` typed as ``schema``, else as the Spark schema in its
+        first data file's footer, read on the driver: no schema-inference
+        job. Partition columns the schema lacks are typed from their dir
+        names. Only files written outside Spark (no Spark schema in the
+        footer) are read by inference. With a schema, a file-less table
+        (``delete_rows`` removed every row) reads, a missing one as empty."""
         self._recover(table)
-        if os.path.isdir(self.path(table)):
-            reader = self.spark.read
-            if schema is not None:
-                # an explicit schema also makes a validly-EMPTY table
-                # readable (e.g. after delete_rows removed every row —
-                # no parquet files left to infer from)
-                reader = reader.schema(schema)
-            return reader.parquet(self.path(table))
+        final = self.path(table)
+        if os.path.isdir(final):
+            if schema is None:
+                schema = _footer_schema(next(_footers(final), None))
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            return reader.parquet(final)
         if schema is None:
             raise FileNotFoundError(table)
         # limit(0) makes the emptiness plain to the optimizer, which then
         # prunes the joins and scans that read this table, jobs included
         return self.spark.createDataFrame([], schema).limit(0)
 
-    def _read_stored(self, table: str, schema: T.StructType) -> DataFrame:
-        """``table`` read typed as ``schema`` when one of its parquet
-        footers records exactly ``schema``'s data columns (names and
-        types; hive partition columns live in directory names and take
-        ``schema``'s types). The footer is read on the driver, so the
-        read launches no schema-inference job. A missing or file-less
-        table reads as empty. Any other footer falls back to the
-        inferred read, so a schema mismatch fails or widens exactly as
-        an untyped read would."""
-        self._recover(table)
-        final = self.path(table)
-        footer = next((os.path.join(final, r) for r in _parquet_files(final)), None)
+    def _read_stored(self, table: str, schema: T.StructType, part_cols: list[str]) -> DataFrame:
+        """``table`` read for an upsert of rows typed ``schema``: as
+        ``schema`` when its footer records exactly ``schema``'s data
+        columns, so the partition columns ``part_cols`` take the incoming
+        types, not those their dir names suggest; else as ``read`` types
+        it. A missing or file-less table reads as empty."""
+        footer = next(_footers(self.path(table)), None)
         if footer is None:
             return self.read(table, schema)
-        import pyarrow.parquet as pq
-
-        try:
-            stored = _footer_schema(pq.read_schema(footer).metadata)
-        except OSError:
-            stored = None
-        if stored is None:
-            return self.read(table)
-        part_cols = self._detect_partition_cols(table)
+        stored = _footer_schema(footer)
 
         def types(fields):
-            return {f.name: f.dataType.simpleString() for f in fields}
+            return {f.name: f.dataType.simpleString() for f in fields if f.name not in part_cols}
 
-        if set(part_cols) <= set(schema.names) and types(stored.fields) == types(
-            f for f in schema.fields if f.name not in part_cols
+        if (
+            stored is not None
+            and set(part_cols) <= set(schema.names)
+            and types(stored.fields) == types(schema.fields)
         ):
             return self.read(table, schema)
-        return self.read(table)
+        return self.read(table, stored)
 
     @contextlib.contextmanager
     def _scratch(self, table: str, kind: str):
@@ -741,9 +745,6 @@ class ParquetStore:
             self._commit(table, [(self.path(table), tmp)])
         return landed
 
-    def _parquet_file_count(self, table: str) -> int:
-        return len(_parquet_files(self.path(table)))
-
     def compact(
         self, table: str, target_files: int, partition_by: list[str] | None = None
     ) -> int:
@@ -766,7 +767,7 @@ class ParquetStore:
         PRESERVES its pruning layout instead of flattening it; rows are
         repartitioned on the partition columns so each partition dir
         compacts to few files. Returns the parquet file count after
-        compaction."""
+        compaction (the files the rewrite wrote)."""
         self._recover(table)
         if partition_by is None:
             partition_by = self._detect_partition_cols(table)
@@ -775,8 +776,7 @@ class ParquetStore:
             out = current.repartition(target_files, *partition_by)
         else:
             out = current.repartition(target_files)
-        self._rewrite_and_swap(out, table, partition_by, "compact")
-        return self._parquet_file_count(table)
+        return self._rewrite_and_swap(out, table, partition_by, "compact").files
 
     def cluster_rewrite(
         self, table: str, by: list[str], files_per_partition: int | None = None
@@ -811,8 +811,7 @@ class ParquetStore:
         else:
             clustered = current.repartitionByRange(*range_cols)
         clustered = clustered.sortWithinPartitions(*(part_cols + by))
-        self._rewrite_and_swap(clustered, table, part_cols, "cluster")
-        return self._parquet_file_count(table)
+        return self._rewrite_and_swap(clustered, table, part_cols, "cluster").files
 
     def _check_layout(self, table: str, partition_by: list[str] | None) -> None:
         """Raise when a write's partition layout disagrees with the
@@ -828,7 +827,7 @@ class ParquetStore:
         # Spark's partition discovery rejects at read time.
         requested = list(partition_by or [])
         if existing != requested:
-            if not existing and self._parquet_file_count(table) == 0:
+            if not existing and next(_parquet_files(self.path(table)), None) is None:
                 # a validly-EMPTY table (delete_rows removed every row:
                 # no parquet files, no col=value dirs) has no layout to
                 # corrupt — accept any requested layout instead of
@@ -915,7 +914,7 @@ class ParquetStore:
         """
         self._recover(table)
         part_cols = self._detect_partition_cols(table)
-        stored = self._read_stored(table, df.schema)
+        stored = self._read_stored(table, df.schema, part_cols)
         delta, obs = _changed_rows(df, stored, pk)
         with self._scratch(table, "stage") as stage:
             staged = self._write(delta, stage, part_cols)
@@ -925,7 +924,11 @@ class ParquetStore:
                 self._append(stage, table)
                 written = staged
             elif staged.rows:
-                staged_rows = self.spark.read.schema(delta.schema).parquet(stage)
+                # by its files: for a root path whose own name starts with
+                # a dot, Spark warns "All paths were ignored" (and reads it)
+                files = [os.path.join(stage, r) for r in _parquet_files(stage)]
+                reader = self.spark.read.schema(delta.schema).option("basePath", stage)
+                staged_rows = reader.parquet(*files)
                 written = self._merge(staged_rows, stored, table, pk, part_cols)
         return Landed(d["rows"], staged.rows, written.files, written.bytes)
 
@@ -1021,12 +1024,8 @@ class ParquetStore:
         rows the rewrite observed: no re-read, one Spark job for a local
         key list. The caller should audit the count, not the keys (the
         point is to STOP storing them)."""
-        import pyarrow.parquet as pq
-
         self._recover(table)
-        final = self.path(table)
-        footers = [pq.read_metadata(os.path.join(final, r)) for r in _parquet_files(final)]
-        n_before = sum(m.num_rows for m in footers)
+        n_before = sum(f.num_rows for f in _footers(self.path(table)))
         if not n_before:
             return 0
         # a null key matches no row, as in the anti-join this emulates
@@ -1034,9 +1033,7 @@ class ParquetStore:
         if not drop:
             return 0
         col = F.col(_q(key))
-        kept = self.read(table, _footer_schema(footers[0].metadata)).filter(
-            col.isNull() | ~col.isin(drop)
-        )
+        kept = self.read(table).filter(col.isNull() | ~col.isin(drop))
         part_cols = self._detect_partition_cols(table)
         return n_before - self._rewrite_and_swap(kept, table, part_cols, "delete").rows
 

@@ -1019,6 +1019,66 @@ def test_delete_rows_one_job_and_count(spark, tmp_path, layout):
     assert store.delete_rows("t", "pk", spark.sql("SELECT 1 AS pk")) == 0
 
 
+@pytest.mark.parametrize(
+    "partition_by, part_ddl",
+    [
+        pytest.param(None, "int", id="flat"),
+        pytest.param(["p"], "int", id="int_partition"),
+        pytest.param(["p"], "string", id="date_string_partition"),
+    ],
+)
+def test_read_typed_from_footer_launches_no_job(spark, tmp_path, partition_by, part_ddl):
+    """``store.read(t)`` without a schema types the read from the Spark
+    schema in a data file's footer: no schema-inference job, and the
+    same schema and rows as Spark's inferred read of the directory,
+    partition columns typed from their dir names (a date-like string
+    partition comes back as ``date`` either way)."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    part = "id % 3" if part_ddl == "int" else "concat('2024-01-0', id % 3 + 1)"
+    df = spark.range(30).selectExpr(
+        "id",
+        f"cast({part} as {part_ddl}) as p",
+        "map('k', id) as m",
+        "array(id, id + 1) as a",
+        "named_struct('x', id, 'y', cast(id as string)) as s",
+        "cast(id / 7 as decimal(12, 3)) as d",
+        "timestamp_seconds(id * 1000) as ts",
+    )
+    store.insert(df.repartition(3), "t", partition_by=partition_by)
+    sc = spark.sparkContext
+    group = f"read_typed_{part_ddl}_{bool(partition_by)}"
+    sc.setJobGroup(group, "store.read")
+    try:
+        got = store.read("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    inferred = spark.read.parquet(store.path("t"))
+    assert got.schema == inferred.schema
+    if partition_by and part_ddl == "string":
+        assert got.schema["p"].dataType.typeName() == "date"
+
+    def rows(frame):
+        return sorted(frame.collect(), key=lambda r: r["id"])
+
+    assert rows(got) == rows(inferred)
+
+
+def test_read_table_without_spark_footer_infers(spark, tmp_path):
+    """A table whose files were written outside Spark (pyarrow: no Spark
+    schema in the footer) still reads, by inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    os.makedirs(store.path("t"))
+    table = pa.table({"id": pa.array([1, 2, 3], pa.int64()), "v": ["a", "b", None]})
+    pq.write_table(table, os.path.join(store.path("t"), "part-0.parquet"))
+    got = store.read("t")
+    assert got.schema.simpleString() == "struct<id:bigint,v:string>"
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (2, "b"), (3, None)]
+
+
 def test_write_meta_atomic_and_validated(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path))
     store.insert(spark.range(3), "m")

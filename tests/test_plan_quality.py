@@ -163,35 +163,11 @@ def test_knn_broadcasts_queries(spark):
     assert "Broadcast" in plan  # query side broadcast, corpus stays partitioned
 
 
-def test_no_cartesian_in_joins(spark):
-    # every equi-join query must avoid CartesianProduct (BroadcastNestedLoop
-    # is expected only for the explicit cross/range joins)
-    for name in [
-        "q5_local_supplier_volume",
-        "q10_returned_items",
-        "j_full_outer",
-        "q21_waiting_supplier_shape",
-        "b_temperature_mixture",
-        "t_quality_percentile_filter",
-    ]:
-        assert "CartesianProduct" not in _plan(spark, name), name
-
-
 def test_new_round2_plans_no_cartesian_no_forced_broadcast(spark):
-    """Round-2 additions: the LSH/IVF candidate joins and the CDC/
-    sessionize shapes must stay equi-join (no CartesianProduct) and must
-    not force-broadcast data-sized frames (scd2's changed-key set, the
-    snapshot-diff sides, the embedding corpus)."""
-    for name in [
-        "d_embedding_neardup",
-        "e_ivf_topk",
-        "p_snapshot_diff",
-        "b_sessionize",
-        "t_tfidf",
-        "a_heavy_hitters",
-    ]:
-        plan = _plan(spark, name)
-        assert "CartesianProduct" not in plan, name
+    """Round-2 additions must not force-broadcast data-sized frames
+    (scd2's changed-key set, the snapshot-diff sides). That they stay
+    equi-join (no CartesianProduct) is checked for every query by
+    ``test_catalog_wide_no_cartesian_products``."""
     # d_embedding_neardup is exempt: its only hint is the hyperplane
     # matrix broadcast — O(dim·bits) constant-size, not data-sized
     for name in ["p_snapshot_diff", "p_scd2_fold"]:
@@ -326,7 +302,8 @@ def test_sq_topk_broadcasts_queries_not_corpus(spark):
 def test_new_plans_no_cartesian_no_forced_broadcast(spark):
     """This round's additions: the cluster-representative component map
     and the interpolation spine join are data-sized — no forced
-    broadcast hints; every join stays equi-keyed."""
+    broadcast hints. That every join stays equi-keyed is checked for
+    every query by ``test_catalog_wide_no_cartesian_products``."""
     for name in [
         "d_cluster_representative",
         "ts_interpolate_linear",
@@ -335,7 +312,6 @@ def test_new_plans_no_cartesian_no_forced_broadcast(spark):
         df = catalog.QUERIES[name].fn(spark, SF)
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed, name
-        assert "CartesianProduct" not in _plan(spark, name), name
 
 
 def test_max_by_is_partial_aggregated(spark):
@@ -360,22 +336,13 @@ def test_interpolation_windows_share_one_shuffle(spark):
 
 
 def test_round5_late_plans_no_cartesian_no_forced_broadcast(spark):
-    """The simhash band self-join, IVF-SQ candidate join, novelty
-    join-back, and shard window must stay equi-keyed with no forced
-    broadcasts of data-sized frames. e_ivf_sq_topk is exempt from the
+    """The simhash band self-join, novelty join-back, and shard window
+    must not force-broadcast data-sized frames. e_ivf_sq_topk has no
     hint check: its only hints are the k×dim centroid table and the
     1-row SQ calibration scalar — bounded frames, not data-sized (the
-    same exemption as d_embedding_neardup's hyperplane matrix)."""
-    for name in [
-        "d_simhash_hamming_pairs",
-        "e_ivf_sq_topk",
-        "t_shingle_novelty",
-        "b_dedup_rate_by_source",
-        "d_containment_pairs",
-        "w_activity_streaks",
-        "b_shard_manifest",
-    ]:
-        assert "CartesianProduct" not in _plan(spark, name), name
+    same exemption as d_embedding_neardup's hyperplane matrix). That
+    they stay equi-keyed is checked for every query by
+    ``test_catalog_wide_no_cartesian_products``."""
     for name in [
         "d_simhash_hamming_pairs",
         "t_shingle_novelty",
@@ -421,10 +388,10 @@ def test_shingle_intersections_single_scan_when_both_sides_shuffle(spark):
 
 
 def test_round4_plans_no_cartesian_no_forced_broadcast(spark):
-    """Round-4 additions: equi-keyed joins only (the band join's
-    inequality is a post-filter over the bucket equi-join; the range
-    search's BroadcastNestedLoop carries the bounded query set, which is
-    the design), and no forced broadcast of data-sized frames."""
+    """Round-4 additions: no forced broadcast of data-sized frames.
+    That their joins stay equi-keyed (the band join's inequality is a
+    post-filter over the bucket equi-join) is checked for every query
+    by ``test_catalog_wide_no_cartesian_products``."""
     for name in [
         "t_contamination_check",
         "d_decontaminate_apply",
@@ -436,8 +403,6 @@ def test_round4_plans_no_cartesian_no_forced_broadcast(spark):
         "g_triangle_count",
         "p_pseudonymize_kanon",
     ]:
-        plan = _plan(spark, name)
-        assert "CartesianProduct" not in plan, name
         df = catalog.QUERIES[name].fn(spark, SF)
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed, name

@@ -12,7 +12,9 @@ Each session runs the query list twice and keeps the best-of-2 per
 query (the bench's own convention); the per-side statistic is the
 median across that side's sessions of the per-session totals. Sessions
 are separate OS processes (spawned via this script's --child mode) so
-no JVM state leaks between settings.
+no JVM state leaks between settings. A child writes its per-query
+times as JSON to the file named by ``--out``, so nothing Spark or a
+query prints to stdout can be taken for the result.
 
     python tools/paired_session_ab.py --knob preferSortMergeJoin
     python tools/paired_session_ab.py --knob zstdShuffle [--repeats 2]
@@ -25,6 +27,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -55,16 +58,19 @@ QUERIES = [
 
 
 def run_child(knob: str, on: bool, sf_dir: str) -> dict[str, float]:
-    out = subprocess.run(
-        [sys.executable, __file__, "--child", "--knob", knob,
-         "--setting", "on" if on else "off", "--sf", sf_dir],
-        capture_output=True, text=True, check=True,
-        cwd=str(Path(__file__).resolve().parent.parent),
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    with tempfile.TemporaryDirectory(prefix="paired-ab-") as tmp:
+        out = os.path.join(tmp, "times.json")
+        subprocess.run(
+            [sys.executable, __file__, "--child", "--knob", knob,
+             "--setting", "on" if on else "off", "--sf", sf_dir, "--out", out],
+            capture_output=True, check=True,
+            cwd=str(Path(__file__).resolve().parent.parent),
+        )
+        with open(out) as fh:
+            return json.load(fh)
 
 
-def child_main(knob: str, on: bool, sf_dir: str) -> None:
+def child_main(knob: str, on: bool, sf_dir: str, out: str) -> None:
     from etl_data_peri_institute_spark.plans import catalog
     from etl_data_peri_institute_spark.session import get_spark
 
@@ -82,7 +88,8 @@ def child_main(knob: str, on: bool, sf_dir: str) -> None:
             catalog.QUERIES[name].fn(spark, sf_dir).collect()
             best = min(best, time.perf_counter() - t0)
         times[name] = round(best, 3)
-    print(json.dumps(times))
+    with open(out, "w") as fh:
+        json.dump(times, fh)
 
 
 def main() -> int:
@@ -93,9 +100,10 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--child", action="store_true")
     ap.add_argument("--setting", choices=["on", "off"])
+    ap.add_argument("--out", help="child mode: file the per-query times go to")
     args = ap.parse_args()
     if args.child:
-        child_main(args.knob, args.setting == "on", args.sf)
+        child_main(args.knob, args.setting == "on", args.sf, args.out)
         return 0
 
     sides: dict[str, list[dict[str, float]]] = {"off": [], "on": []}

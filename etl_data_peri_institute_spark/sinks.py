@@ -7,11 +7,13 @@ parquet writes: Spark's task retries subsume the retry loop, and
 throughput scales with executors instead of an HTTP rate limit.
 
 UPSERT (reference etl/load.py:283 — insert-or-update on PK) without a
-Delta/Iceberg jar in this image is emulated as anti-join + union +
-one journaled commit of renames (``ParquetStore._commit``): target rows
-whose PK collides with incoming are replaced. On a real deployment this
-is one ``MERGE INTO`` against Delta/Iceberg — the surrounding plan
-(dedup → integrity → merge) is identical.
+Delta/Iceberg jar in this image is emulated file by file: the stored
+files that hold a changed key are rewritten without that key's rows,
+beside the incoming rows, and swapped in by one journaled commit of
+renames (``ParquetStore._commit``); every other file is left alone. On
+a real deployment this is one ``MERGE INTO`` against Delta/Iceberg,
+whose file pruning does the same — the surrounding plan (dedup →
+integrity → merge) is identical.
 The JDBC variant (the reference's actual Postgres target) is
 ``write_jdbc`` below: append straight to the table, or stage + the
 ``jdbc_upsert_sql`` MERGE statement for upsert.
@@ -35,8 +37,8 @@ import os
 import shutil
 import threading
 import uuid
-from urllib.parse import unquote
-from collections.abc import Callable
+from urllib.parse import unquote, urlparse
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -206,46 +208,47 @@ def _changed_rows(
 ) -> tuple[DataFrame, Observation]:
     """The incoming rows of every key whose stored rows differ — the
     rows an upsert must write — as one lazy plan, observed for ``rows``
-    (incoming rows) and ``changed_keys`` (delta keys that already have
-    stored rows; the rest are new).
+    (incoming rows) and ``files`` (the URIs, percent-encoded, of the
+    stored files that hold a row of a changed key: the files the upsert
+    replaces).
 
     A key is unchanged only when its stored and incoming rows are equal
     as multisets, nulls comparing equal: re-upserting it would delete
     and re-add the same rows. One shuffle on the key gathers both sides'
-    rows per key, each side sorted so the compare ignores row order.
-    A null key never matches a stored row (the upsert's anti-join on
-    the key does not match nulls), so its incoming rows are always new.
-    ``operators.scd.snapshot_diff`` compares one row per key, so it
-    cannot decide multiset equality and is not used here.
+    rows per key, each stored row tagged with the file it was read from,
+    and each side sorted so the compare ignores row order. Rows holding
+    maps cannot be sorted or compared, so then every incoming key counts
+    as changed, which is the plain merge. A null key never matches a
+    stored row (the merge's anti-join on the key does not match nulls),
+    so its incoming rows are always new. ``operators.scd.snapshot_diff``
+    compares one row per key, so it cannot decide multiset equality and
+    is not used here.
 
     The observation sits above the per-key aggregate: an observation
     below a union the optimizer proves empty is dropped with it, and
-    would never report.
-
-    Rows holding maps cannot be sorted or compared; then every incoming
-    row counts as changed, which is the plain merge."""
+    would never report."""
     obs = Observation("upsert_delta")
-    if not _orderable(incoming.schema):
-        n = F.count(F.lit(1))
-        return incoming.observe(obs, n.alias("rows"), n.alias("changed_keys")), obs
-    cols = incoming.columns
-    side = "__upsert_incoming"
-    both = stored.withColumn(side, F.lit(False)).unionByName(
-        incoming.withColumn(side, F.lit(True))
+    orderable = _orderable(incoming.schema)
+    side, file = "__upsert_incoming", "__upsert_file"
+    both = stored.withColumns({file: F.input_file_name(), side: F.lit(False)}).unionByName(
+        incoming.withColumns({file: F.lit(None).cast("string"), side: F.lit(True)})
     )
-    row = F.struct(*[F.col(_q(c)) for c in cols])
     key = F.col(_q(pk))
-    per_key = both.groupBy(key.alias("__k")).agg(
-        F.sort_array(F.collect_list(F.when(F.col(side), row))).alias("__new"),
-        F.sort_array(
-            F.collect_list(F.when(~F.col(side) & key.isNotNull(), row))
-        ).alias("__old"),
-    )
-    changed = (F.size("__new") > 0) & ~F.col("__new").eqNullSafe(F.col("__old"))
-    per_key = per_key.observe(
+    row = F.struct(*[F.col(_q(c)) for c in incoming.columns])
+    old = ~F.col(side) & key.isNotNull()
+    new = F.collect_list(F.when(F.col(side), row))
+    aggs = [
+        (F.sort_array(new) if orderable else new).alias("__new"),
+        F.collect_set(F.when(old, F.col(file))).alias("__files"),
+    ]
+    changed = F.size("__new") > 0
+    if orderable:
+        aggs.append(F.sort_array(F.collect_list(F.when(old, row))).alias("__old"))
+        changed = changed & ~F.col("__new").eqNullSafe(F.col("__old"))
+    per_key = both.groupBy(key.alias("__k")).agg(*aggs).observe(
         obs,
         F.coalesce(F.sum(F.size("__new")), F.lit(0)).alias("rows"),
-        F.count(F.when(changed & (F.size("__old") > 0), 1)).alias("changed_keys"),
+        F.array_distinct(F.flatten(F.collect_list(F.when(changed, F.col("__files"))))).alias("files"),
     )
     delta = per_key.filter(changed).select(F.explode("__new").alias("__r")).select("__r.*")
     return delta, obs
@@ -259,7 +262,10 @@ class ParquetStore:
 
     ``insert``, ``upsert`` and ``overwrite`` return what they landed (a
     ``Landed``): the per-stage figures a caller reports without another
-    Spark job.
+    Spark job. Appends and upserts commit file by file (an upsert
+    replaces only the files that hold a changed key, in every layout);
+    ``overwrite``, ``compact``, ``cluster_rewrite`` and ``delete_rows``
+    swap the whole table dir.
 
     One writer per table: different tables may be written from
     different threads at the same time, but a table being written must
@@ -631,17 +637,27 @@ class ParquetStore:
         return landed
 
     def _append(
-        self, src_root: str, table: str, meta_files: dict[str, str] | None = None
+        self,
+        src_root: str,
+        table: str,
+        meta_files: dict[str, str] | None = None,
+        replaced: list[str] | None = None,
     ) -> None:
         """Commit the parquet files under ``src_root`` (written in the
         table's layout) into the table, with ``meta_files`` (rows and
         meta commit together, so a replay marker never advances without
-        its rows). A missing table is the whole ``src_root`` moved in;
-        otherwise each file is an entry (writer-UUID-unique names), a
-        partition dir the table lacks moves in whole, and each meta
-        file is an entry that replaces the stored one. A direct
-        ``mode("append")`` into the live table would leave a PARTIAL
-        append visible if the process died mid-write."""
+        its rows), removing the table's files ``replaced`` (paths
+        relative to the table) in the same commit. A missing table is
+        the whole ``src_root`` moved in; otherwise each file is an entry
+        (writer-UUID-unique names), a partition dir the table lacks
+        moves in whole, each meta file is an entry that replaces the
+        stored one, and each replaced file is a removal entry together
+        with its ``.crc`` sidecar — or, when the commit leaves a dir with
+        no file, that dir is removed, at its shallowest emptied ancestor,
+        so no empty partition dir is left for partition discovery and
+        ``_detect_partition_cols`` to read. A direct ``mode("append")``
+        into the live table would leave a PARTIAL append visible if the
+        process died mid-write."""
         for name in meta_files or {}:
             self._check_meta_name(name)
         for name, contents in (meta_files or {}).items():
@@ -651,17 +667,39 @@ class ParquetStore:
         if not os.path.isdir(final):
             self._commit(table, [(final, src_root)])
             return
+        added = list(_parquet_files(src_root))
+        gone = set()
+        for rel in replaced or []:
+            crc = os.path.join(os.path.dirname(rel), f".{os.path.basename(rel)}.crc")
+            gone.update(r for r in (rel, crc) if os.path.lexists(os.path.join(final, r)))
+
+        def dirs(rel: str):
+            # the dirs ``rel`` lies in, below the table dir, shallowest first
+            parts = rel.split(os.sep)
+            return (os.path.join(*parts[:i]) for i in range(1, len(parts)))
+
+        @functools.cache
+        def emptied(d: str) -> bool:
+            # no file stays in the table dir ``d`` and none lands in it
+            if any(a.startswith(d + os.sep) for a in added):
+                return False
+            return all(
+                os.path.relpath(os.path.join(base, n), final) in gone
+                for base, _dirs, files in os.walk(os.path.join(final, d))
+                for n in files
+            )
 
         def head(rel: str) -> str:
-            # the shallowest part of ``rel`` the table lacks
-            parts = rel.split(os.sep)
-            for i in range(1, len(parts)):
-                if not os.path.isdir(os.path.join(final, *parts[:i])):
-                    return os.path.join(*parts[:i])
-            return rel
+            # the shallowest part of an added ``rel`` the table lacks
+            return next((d for d in dirs(rel) if not os.path.isdir(os.path.join(final, d))), rel)
 
-        rels = list(dict.fromkeys(head(r) for r in _parquet_files(src_root))) + list(meta_files or {})
-        self._commit(table, [(os.path.join(final, r), os.path.join(src_root, r)) for r in rels])
+        removed = list(dict.fromkeys(next((d for d in dirs(r) if emptied(d)), r) for r in sorted(gone)))
+        moved = list(dict.fromkeys(head(r) for r in added)) + list(meta_files or {})
+        self._commit(
+            table,
+            [(os.path.join(final, r), None) for r in removed]
+            + [(os.path.join(final, r), os.path.join(src_root, r)) for r in moved],
+        )
 
     def overwrite(
         self, df: DataFrame, table: str, meta_files: dict[str, str] | None = None
@@ -716,7 +754,7 @@ class ParquetStore:
         """Carry user meta files (underscore-prefixed top-level files,
         e.g. the rollup's ``_LAST_EPOCH`` replay guard) from the live
         table into a rewrite staging dir, so maintenance rewrites
-        (compact / cluster / upsert / delete) PRESERVE them — dropping
+        (compact / cluster / delete) PRESERVE them — dropping
         the epoch marker would silently re-enable a replay double-merge.
         ``_SUCCESS`` is Spark's own marker; the staged dir has its own."""
         src = self.path(table)
@@ -734,8 +772,8 @@ class ParquetStore:
     def _rewrite_and_swap(
         self, out: DataFrame, table: str, part_cols: list[str] | None, prefix: str
     ) -> Landed:
-        """Shared whole-table rewrite (upsert's full merge, compact,
-        cluster_rewrite, delete_rows): write ``out`` into a scratch dir
+        """Shared whole-table rewrite (compact, cluster_rewrite,
+        delete_rows): write ``out`` into a scratch dir
         (hive layout when ``part_cols``), carry the table's meta files
         over, then commit the dir over the table. Returns what was
         written."""
@@ -845,13 +883,16 @@ class ParquetStore:
         RECURSING through nested layouts so a table written with
         ``insert(partition_by=["l1", "l2"])`` reports ``["l1", "l2"]``
         in NESTING order (the order ``partitionBy`` must replay to
-        preserve the layout on a rewrite). Accuracy here is what keeps
-        the partition-scoped upsert honest: it engages only when
-        ``len(part_cols) == 1``, and a nested table mis-detected as
-        single-level would be flattened by the scoped rewrite. A level
-        that mixes more than one column name (a layout no Spark write
-        produces) is reported with every name appended, so the result
-        length > 1 routes such tables to the full rewrite too."""
+        preserve the layout on a rewrite). Every write replays it: an
+        upsert's staged and re-staged files, the layout guard of
+        ``insert`` and the whole-table rewrites, so a nested table
+        mis-detected as single-level would get data files where its
+        inner level's dirs are — a mixed layout no reader accepts. The
+        one directory read per deeper level is why no write may leave
+        an empty ``col=value`` dir behind (``_append`` removes a dir its
+        commit empties). A level that mixes more than one column name (a
+        layout no Spark write produces, nor reads) is reported with
+        every name appended."""
         final = self.path(table)
         if not os.path.isdir(final):
             return []
@@ -883,127 +924,64 @@ class ParquetStore:
     def upsert(self, df: DataFrame, table: str, pk: str) -> Landed:
         """Insert-or-update on PK (reference upsert, etl/load.py:283).
         Returns the ``Landed``: ``rows`` is the incoming row count,
-        ``delta_rows`` the changed rows written.
+        ``delta_rows`` the changed rows written, ``files``/``bytes``
+        what the commit added to the table.
 
         Change first: ONE write job reads the stored table (typed, see
         ``_read_stored``) beside the incoming plan, keeps the incoming
         rows of every key whose stored rows differ (``_changed_rows``)
         and stages only those, in the table's layout; the incoming plan
-        runs exactly once and both counts are observed on that write.
+        runs exactly once, and the incoming row count and the stored
+        files that hold a changed key are observed on that write.
         Re-upserting an unchanged key would delete and re-add the same
         rows, so leaving it alone gives the same table. Then:
 
-        - **No changed key**: nothing else runs — no commit, and no file
-          of the table is touched (a master sheet re-upserted unchanged).
-        - **Only new keys**: the staged files are appended (``_append``:
-          one commit entry per new file or partition dir).
-        - **Changed keys**: the merge below runs on the staged rows only.
-
-          - *Partition-scoped merge* (hive-partitioned table, single
-            partition level — the layout ``insert(partition_by=...)``
-            writes): only the partitions the staged rows TOUCH are
-            rewritten (``_upsert_scoped``).
-          - *Full rewrite* (flat table or multi-level layout): anti-join
-            keeps the non-colliding stored rows, union with the staged
-            rows, write to a temp dir and commit it over the table —
-            O(table) write cost.
+        - **No changed or new key**: nothing else runs — no commit, and
+          no file of the table is touched (a master sheet re-upserted
+          unchanged).
+        - **No stored file holds a changed key** (only new keys): the
+          staged files are appended (``_append``).
+        - **Otherwise**: one write re-stages the staged rows plus the
+          rows of those files whose key is not staged, in the table's
+          layout, and one commit replaces those files by the re-staged
+          ones (``_append`` with ``replaced``). Every other file keeps
+          its bytes and mtime, in every layout: flat, single-level or
+          nested hive. The work follows the files a change touches, not
+          the table.
 
         A failed write never corrupts the table on any path: every path
         ends in one ``_commit``, which never holds the only copy
         mid-delete.
         """
         self._recover(table)
+        final = self.path(table)
         part_cols = self._detect_partition_cols(table)
         stored = self._read_stored(table, df.schema, part_cols)
         delta, obs = _changed_rows(df, stored, pk)
-        with self._scratch(table, "stage") as stage:
+        with self._scratch(table, "stage") as stage, self._scratch(table, "merge") as merged:
             staged = self._write(delta, stage, part_cols)
             d = obs.get
-            written = Landed(0)
-            if staged.rows and not d["changed_keys"]:
-                self._append(stage, table)
-                written = staged
-            elif staged.rows:
-                # by its files: for a root path whose own name starts with
-                # a dot, Spark warns "All paths were ignored" (and reads it)
-                files = [os.path.join(stage, r) for r in _parquet_files(stage)]
-                reader = self.spark.read.schema(delta.schema).option("basePath", stage)
-                staged_rows = reader.parquet(*files)
-                written = self._merge(staged_rows, stored, table, pk, part_cols)
+            if not staged.rows:
+                return Landed(d["rows"])
+            # input_file_name() gives percent-encoded URIs
+            top = os.path.abspath(final)
+            replaced = [os.path.relpath(unquote(urlparse(u).path), top) for u in sorted(d["files"])]
+            written, src = staged, stage
+            if replaced:
+                staged_rows = self._read_files(stage, delta.schema, _parquet_files(stage))
+                kept = self._read_files(final, stored.schema, replaced)
+                kept = kept.join(staged_rows.select(pk), pk, "left_anti")
+                written, src = self._write(kept.unionByName(staged_rows), merged, part_cols), merged
+            self._append(src, table, replaced=replaced)
         return Landed(d["rows"], staged.rows, written.files, written.bytes)
 
-    def _merge(
-        self,
-        delta: DataFrame,
-        current: DataFrame,
-        table: str,
-        pk: str,
-        part_cols: list[str],
-    ) -> Landed:
-        """Replace ``current``'s rows of every key in ``delta`` by
-        ``delta``'s rows; returns what was written."""
-        if len(part_cols) == 1:
-            return self._upsert_scoped(delta, current, table, pk, part_cols[0])
-        # an anti join needs no distinct key side
-        kept = current.join(delta.select(pk), pk, "left_anti")
-        return self._rewrite_and_swap(kept.unionByName(delta), table, part_cols, "merge")
-
-    def _upsert_scoped(
-        self, incoming: DataFrame, current: DataFrame, table: str, pk: str, pc: str
-    ) -> Landed:
-        """Partition-scoped merge: only the partitions the incoming rows
-        touch are rewritten. Affected = partitions an incoming row lands
-        in ∪ partitions holding a colliding PK (covers rows whose
-        partition value changes). Kept rows of affected partitions are
-        anti-joined against the incoming PKs, unioned with them, written
-        to a scratch dir and committed with one entry per affected
-        partition dir: the plain-parquet analogue of Delta/Iceberg MERGE
-        file pruning. Untouched partition dirs are never renamed, so
-        their files stay byte-identical (pinned by tests/test_operators.py
-        and tests/test_round7.py).
-
-        Every directory name comes from disk, never from formatting a
-        value: the dirs the merge wrote, and the dirs the colliding
-        stored rows were read from."""
-        final = self.path(table)
-        in_keys = incoming.select(pk).distinct()
-        # Affected partition values, with the dir each colliding row was
-        # read from (its file URI's parent, URL-encoded), in ONE pass, so
-        # the colliding-PK semi-join over the current table runs exactly
-        # once. The collect is bounded by the number of TOUCHED
-        # partitions (an operational number — days in the batch — never
-        # table-sized).
-        colliding = (
-            current.withColumn("__file", F.input_file_name())
-            .join(in_keys, pk, "left_semi")
-            .select(F.col(pc).alias("v"), F.element_at(F.split("__file", "/"), -2).alias("dir"))
-        )
-        affected = (
-            incoming.select(F.col(pc).alias("v"), F.lit(None).cast("string").alias("dir"))
-            .unionByName(colliding)
-            .distinct()
-            .collect()
-        )
-        vals = [r["v"] for r in affected if r["v"] is not None]
-        pred = F.col(pc).isin(vals) if vals else F.lit(False)
-        if any(r["v"] is None for r in affected):
-            pred = pred | F.col(pc).isNull()
-        # Partition-pruned read: only affected directories are scanned.
-        kept = current.filter(pred).join(in_keys, pk, "left_anti")
-        with self._scratch(table, "pmerge") as tmp:
-            landed = self._write(kept.unionByName(incoming), tmp, [pc])
-            written = {
-                d for d in os.listdir(tmp)
-                if "=" in d and os.path.isdir(os.path.join(tmp, d))
-            }
-            # rewritten dirs move in; a colliding row's dir the merge
-            # emptied is removed
-            emptied = {unquote(r["dir"]) for r in affected if r["dir"]} - written
-            self._commit(table, [
-                (os.path.join(final, d), os.path.join(tmp, d) if d in written else None)
-                for d in sorted(written | emptied)
-            ])
-        return landed
+    def _read_files(self, root: str, schema: T.StructType, rels: Iterable[str]) -> DataFrame:
+        """The parquet files ``rels`` (relative to ``root``) read typed
+        ``schema``, partition values from the dirs below ``root``. By
+        file, with ``basePath``: for a root path whose own name starts
+        with a dot Spark warns "All paths were ignored" (and reads it)."""
+        reader = self.spark.read.schema(schema).option("basePath", root)
+        return reader.parquet(*[os.path.join(root, r) for r in rels])
 
     def delete_rows(self, table: str, key: str, keys: DataFrame) -> int:
         """Targeted deletion — the right-to-be-forgotten / takedown

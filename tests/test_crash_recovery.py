@@ -21,6 +21,7 @@ every site, so a new step added to a commit is automatically covered.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -137,19 +138,33 @@ def _sweep(spark, tmp_path, monkeypatch, seed, mutate, sub, changes=True) -> lis
     return labels
 
 
-def _seed_flat(store: ParquetStore) -> None:
+def _seed_flat(store: ParquetStore, one_task: bool = False) -> None:
+    """Table ``t``, flat; written by one task when ``one_task``: then it
+    is one file, with its ``.crc`` sidecar, at any core count."""
     df = store.spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "pk int, v string"
     )
-    store.insert(df, "t")
+    store.insert(df.coalesce(1) if one_task else df, "t")
 
 
-def _seed_partitioned(store: ParquetStore) -> None:
+def _seed_partitioned(store: ParquetStore, one_task: bool = False) -> None:
+    """Table ``t`` partitioned by ``dt`` (d1: keys 1 and 2, d2: key 3);
+    one file per dir when ``one_task``."""
     df = store.spark.createDataFrame(
         [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2")],
         "pk int, v string, dt string",
     )
-    store.insert(df, "t", partition_by=["dt"])
+    store.insert(df.coalesce(1) if one_task else df, "t", partition_by=["dt"])
+
+
+def _seed_nested(store: ParquetStore) -> None:
+    """Table ``t`` partitioned by l1, l2 in one task: one file in each
+    of l1=a/l2=x (key 1), l1=a/l2=y (key 2) and l1=b/l2=x (key 3)."""
+    df = store.spark.createDataFrame(
+        [(1, "a", "a", "x"), (2, "b", "a", "y"), (3, "c", "b", "x")],
+        "pk int, v string, l1 string, l2 string",
+    )
+    store.insert(df.coalesce(1), "t", partition_by=["l1", "l2"])
 
 
 def _seed_flat_epoch(store: ParquetStore) -> None:
@@ -166,10 +181,12 @@ _SWAP = ["commit:journaled", "commit:backed_up", "commit:moved", "commit:committ
 
 
 def test_crash_sweep_partition_scoped_upsert(spark, tmp_path, monkeypatch):
-    """One entry per affected partition: the upsert touches an existing
-    partition (update), moves a PK across partitions, and creates a
-    brand-new partition — all three rollback cases (backed-up dir,
-    moved-in dir with backup, moved-in dir with NO backup) are in one
+    """One entry per replaced file, staged file or new partition dir:
+    key 2 moves from d1 to d2 and key 4 opens d3. The seed's d1 file
+    (keys 1 and 2) is replaced, so the commit backs up that file and its
+    ``.crc`` and moves in the re-staged d1 file (key 1), a new d2 file
+    beside the untouched one, and the new dir d3 — a backed-up file, a
+    moved-in file and a moved-in dir, each with NO backup, in one
     sweep."""
 
     def mutate(store: ParquetStore) -> None:
@@ -178,11 +195,10 @@ def test_crash_sweep_partition_scoped_upsert(spark, tmp_path, monkeypatch):
         )
         store.upsert(inc, "t", pk="pk")
 
-    labels = _sweep(
-        spark, tmp_path, monkeypatch, _seed_partitioned, mutate, "pswap"
-    )
-    assert labels.count("commit:backed_up") == 2  # d1 and d2, not d3
-    assert labels.count("commit:moved") == 3
+    seed = functools.partial(_seed_partitioned, one_task=True)
+    labels = _sweep(spark, tmp_path, monkeypatch, seed, mutate, "pswap")
+    assert labels.count("commit:backed_up") == 2  # d1's file and its .crc
+    assert labels.count("commit:moved") == 3  # d1/part, d2/part, d3
 
 
 def test_crash_sweep_overwrite_table_swap(spark, tmp_path, monkeypatch):
@@ -304,15 +320,42 @@ def test_crash_sweep_upsert_append_only(spark, tmp_path, monkeypatch):
 
 
 def test_crash_sweep_upsert_changed_key_flat(spark, tmp_path, monkeypatch):
-    """Change-first upsert, a changed key on a flat table: the merge of
-    the changed rows is a whole-table commit."""
+    """Change-first upsert, a changed key on a flat table: the file that
+    holds it is replaced, not the table. The seed is one file; the
+    commit backs up that file and its ``.crc`` and moves in the two
+    re-staged files (its surviving keys 1 and 3; the staged keys 2
+    and 4)."""
 
     def mutate(store: ParquetStore) -> None:
         inc = store.spark.createDataFrame([(1, "a"), (2, "B2"), (4, "d")], "pk int, v string")
         store.upsert(inc, "t", pk="pk")
 
-    labels = _sweep(spark, tmp_path, monkeypatch, _seed_flat, mutate, "uchg")
-    assert labels == _SWAP
+    seed = functools.partial(_seed_flat, one_task=True)
+    labels = _sweep(spark, tmp_path, monkeypatch, seed, mutate, "uchg")
+    assert labels == (
+        ["commit:journaled"] + ["commit:backed_up"] * 2 + ["commit:moved"] * 2 + ["commit:committed"]
+    )
+
+
+def test_crash_sweep_upsert_changed_key_nested(spark, tmp_path, monkeypatch):
+    """Change-first upsert on a two-level table: key 2 changes in place,
+    key 3 leaves l1=b/l2=x (the sole leaf under l1=b) for l1=a/l2=x,
+    and key 4 opens l1=c. The commit backs up the dir l1=b (emptied, so
+    removed at its shallowest emptied ancestor) and l1=a/l2=y's file
+    and ``.crc``, and moves in a file in each of l1=a/l2=x and
+    l1=a/l2=y and the new dir l1=c; l1=a/l2=x's own file is untouched."""
+
+    def mutate(store: ParquetStore) -> None:
+        inc = store.spark.createDataFrame(
+            [(2, "B2", "a", "y"), (3, "c", "a", "x"), (4, "d", "c", "z")],
+            "pk int, v string, l1 string, l2 string",
+        )
+        store.upsert(inc, "t", pk="pk")
+
+    labels = _sweep(spark, tmp_path, monkeypatch, _seed_nested, mutate, "unest")
+    assert labels == (
+        ["commit:journaled"] + ["commit:backed_up"] * 3 + ["commit:moved"] * 3 + ["commit:committed"]
+    )
 
 
 def test_recovery_ignores_foreign_and_half_written_journals(

@@ -325,11 +325,10 @@ def test_upsert_preserves_partition_layout(spark, tmp_path):
 
 
 def test_upsert_nested_partition_layout_full_rewrite(spark, tmp_path):
-    """A multi-level hive layout must NOT take the partition-scoped
-    path (a single-partition-column rewrite would flatten the inner
-    level into data files, leaving a mixed, unreadable layout).
-    Detection recurses (round-8 fix), the upsert falls back to the
-    full rewrite, and the nested layout survives byte-for-layout."""
+    """A multi-level hive layout is detected whole (detection recurses),
+    and the upsert writes its files in both levels: replaying only the
+    first level would put data files beside the inner level's dirs, a
+    mixed, unreadable layout. The nested layout survives, readable."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     base = spark.createDataFrame(
         [(1, "a", "x", 10), (2, "a", "y", 20), (3, "b", "x", 30)],
@@ -350,6 +349,43 @@ def test_upsert_nested_partition_layout_full_rewrite(spark, tmp_path):
         1: ("a", "x", 11), 2: ("a", "y", 20),
         3: ("b", "x", 30), 4: ("b", "y", 40),
     }
+
+
+def test_upsert_nested_replaces_only_touched_leaf(spark, tmp_path):
+    """Two-level table: an update in one leaf dir leaves every other
+    leaf dir byte-identical; moving the only row out of the sole leaf
+    under l1=b removes l1=b whole (no empty dir is left), and detection
+    still reads both levels."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    schema = "pk int, l1 string, l2 string, v int"
+    base = spark.createDataFrame(
+        [(1, "a", "x", 10), (2, "a", "y", 20), (3, "b", "x", 30), (4, "c", "x", 40)], schema
+    )
+    store.insert(base, "t", partition_by=["l1", "l2"])
+    final = store.path("t")
+
+    def leaves():
+        return {
+            os.path.join(d, sub): _file_state(os.path.join(final, d, sub))
+            for d in os.listdir(final) if "=" in d
+            for sub in os.listdir(os.path.join(final, d)) if "=" in sub
+        }
+
+    before = leaves()
+    store.upsert(spark.createDataFrame([(2, "a", "y", 21)], schema), "t", "pk")
+    after = leaves()
+    assert sorted(after) == sorted(before)
+    assert [leaf for leaf in before if after[leaf] != before[leaf]] == ["l1=a/l2=y"]
+
+    store.upsert(spark.createDataFrame([(3, "a", "x", 31)], schema), "t", "pk")
+    moved = leaves()
+    assert not os.path.exists(os.path.join(final, "l1=b"))
+    assert sorted(moved) == ["l1=a/l2=x", "l1=a/l2=y", "l1=c/l2=x"]
+    assert moved["l1=a/l2=y"] == after["l1=a/l2=y"]
+    assert moved["l1=c/l2=x"] == before["l1=c/l2=x"]
+    assert store._detect_partition_cols("t") == ["l1", "l2"]
+    rows = {r["pk"]: (r["l1"], r["l2"], r["v"]) for r in store.read("t").collect()}
+    assert rows == {1: ("a", "x", 10), 2: ("a", "y", 21), 3: ("a", "x", 31), 4: ("c", "x", 40)}
 
 
 def test_detect_partition_cols_nesting_order(spark, tmp_path):

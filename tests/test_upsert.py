@@ -2,10 +2,11 @@
 differ from the incoming rows are written.
 
 The property test holds the upsert to the plain anti-join + union it
-replaces (every stored row whose key arrives is replaced by the incoming
-rows of that key; null keys never match), over flat and single-level
-hive tables, missing tables, nullable columns, duplicate incoming keys
-and empty batches."""
+emulates (every stored row whose key arrives is replaced by the incoming
+rows of that key; null keys never match), over flat, single-level and
+nested hive tables, missing tables, nullable columns, duplicate incoming
+keys and empty batches; and holds every stored file that has no row of
+a changed key to its bytes and mtime."""
 
 from __future__ import annotations
 
@@ -17,6 +18,8 @@ from collections import Counter
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+import pyarrow.parquet as pq
 
 from etl_data_peri_institute_spark.sinks import ParquetStore
 
@@ -52,13 +55,35 @@ def _file_state(root: str) -> dict[str, tuple[int, int, str]]:
     return out
 
 
+def _changed_keys(stored: list[tuple], incoming: list[tuple]) -> set:
+    """The incoming keys whose stored rows differ from their incoming
+    rows as multisets (a null key is always new, never changed)."""
+    return {
+        k for k in {r[0] for r in incoming} - {None}
+        if Counter(r for r in stored if r[0] == k) != Counter(r for r in incoming if r[0] == k)
+    }
+
+
 def _unchanged(stored: list[tuple], incoming: list[tuple]) -> bool:
     """Every incoming key already holds exactly the incoming rows."""
-    keys = {r[0] for r in incoming}
-    return None not in keys and all(
-        Counter(r for r in stored if r[0] == k) == Counter(r for r in incoming if r[0] == k)
-        for k in keys
-    )
+    return not _changed_keys(stored, incoming) and None not in {r[0] for r in incoming}
+
+
+def _keys_in(path: str) -> set:
+    return set(pq.read_table(path, columns=["pk"]).column("pk").to_pylist())
+
+
+def _orphan_crcs(root: str) -> list[str]:
+    """``.crc`` sidecars whose parquet file is gone."""
+    return [
+        os.path.join(base, n)
+        for base, _dirs, files in os.walk(root)
+        for n in files
+        if n.startswith(".") and n.endswith(".crc") and n[1:-4] not in files
+    ]
+
+
+_LAYOUTS = {"flat": None, "hive": ["dt"], "nested": ["dt", "v"]}
 
 
 @st.composite
@@ -68,7 +93,7 @@ def upsert_case(draw):
     # (changed keys) or bring new ones; duplicates and nulls included
     reused = draw(st.lists(st.sampled_from(stored), max_size=4)) if stored else []
     incoming = reused + draw(st.lists(_ROW, max_size=4))
-    return stored, draw(st.permutations(incoming)), draw(st.sampled_from(["flat", "hive"]))
+    return stored, draw(st.permutations(incoming)), draw(st.sampled_from(sorted(_LAYOUTS)))
 
 
 @given(upsert_case())
@@ -79,12 +104,16 @@ def test_upsert_matches_anti_join_union(spark, case):
     try:
         store = ParquetStore(spark, root)
         # an empty seed creates no table: the missing-table case
-        store.insert(
-            spark.createDataFrame(stored, SCHEMA), "t",
-            partition_by=["dt"] if layout == "hive" else None,
-        )
+        store.insert(spark.createDataFrame(stored, SCHEMA), "t", partition_by=_LAYOUTS[layout])
         existed = store.exists("t")
         before = _file_state(store.path("t")) if existed else None
+        changed = _changed_keys(stored, incoming)
+        # the stored files that hold no changed key: the upsert must not
+        # touch them
+        untouched = {
+            rel: state for rel, state in (before or {}).items()
+            if rel.endswith(".parquet") and not _keys_in(os.path.join(store.path("t"), rel)) & changed
+        }
 
         landed = store.upsert(spark.createDataFrame(incoming, SCHEMA), "t", "pk")
 
@@ -95,9 +124,12 @@ def test_upsert_matches_anti_join_union(spark, case):
         if existed and _unchanged(stored, incoming):
             assert _file_state(store.path("t")) == before
             assert landed.delta_rows == 0
-        if existed and layout == "hive":
-            # every path keeps the hive layout
-            assert store._detect_partition_cols("t") == ["dt"]
+        if existed:
+            after = _file_state(store.path("t"))
+            assert {rel: after.get(rel) for rel in untouched} == untouched
+            assert _orphan_crcs(store.path("t")) == []
+            # every path keeps the layout
+            assert store._detect_partition_cols("t") == (_LAYOUTS[layout] or [])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -105,7 +137,8 @@ def test_upsert_matches_anti_join_union(spark, case):
 def test_upsert_paths_and_landed(spark, tmp_path):
     """No change: no file of the table is touched and nothing is left
     behind. Only new keys: the rows are appended beside the existing
-    files. A changed key: the table is rewritten with the merge."""
+    files. A changed key: the files that hold it are replaced by the
+    merge of their rows with the changed ones."""
     store = ParquetStore(spark, str(tmp_path / "db"))
     base = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], "pk int, v string")
     assert store.upsert(base, "t", "pk").rows == 3
@@ -161,3 +194,32 @@ def test_upsert_schema_mismatch_still_raises(spark, tmp_path):
     with pytest.raises(AnalysisException):
         store.upsert(spark.createDataFrame([(1, "z")], "pk int, v string"), "t", "pk")
     assert sorted(tuple(r) for r in store.read("t").collect()) == [(1, "a", 5)]
+
+
+def test_upsert_replaces_only_the_file_holding_a_changed_key(spark, tmp_path):
+    """A flat table in two files, a changed key in one of them: the
+    other file keeps its bytes and mtime, the replaced file goes with
+    its ``.crc`` sidecar (no sidecar is left without its parquet file),
+    and what landed is the re-staged file set."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    base = spark.range(4, numPartitions=2).selectExpr("cast(id as int) pk", "concat('v', id) v")
+    store.insert(base, "t")
+    final = store.path("t")
+    before = _file_state(final)
+    files = sorted(r for r in before if r.endswith(".parquet"))
+    assert [_keys_in(os.path.join(final, r)) for r in files] == [{0, 1}, {2, 3}]
+    assert all(f".{r}.crc" in before for r in files)
+
+    landed = store.upsert(spark.createDataFrame([(3, "new")], "pk int, v string"), "t", "pk")
+
+    after = _file_state(final)
+    kept, replaced = files
+    assert after[kept] == before[kept] and after[f".{kept}.crc"] == before[f".{kept}.crc"]
+    assert replaced not in after and f".{replaced}.crc" not in after
+    assert _orphan_crcs(final) == []
+    new = sorted(r for r in after if r.endswith(".parquet") and r != kept)
+    assert (landed.rows, landed.delta_rows, landed.files) == (1, 1, len(new))
+    assert sorted(tuple(r) for r in store.read("t").collect()) == [
+        (0, "v0"), (1, "v1"), (2, "v2"), (3, "new"),
+    ]
+    assert not [n for n in os.listdir(store.root) if n.startswith(".")]

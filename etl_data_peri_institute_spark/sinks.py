@@ -23,9 +23,9 @@ every mutation is one write into a scratch dir (``ParquetStore._write``,
 its row count an ``Observation`` on that write: no re-read of the
 written files, no second pass) and then one ``_commit``; the call
 returns what landed as a ``Landed``. Every store read is typed: by the
-caller's schema, or else by the Spark schema in the table's first data
-file's footer, read on the driver (``ParquetStore.read``), so no read of
-a table the store wrote launches a schema-inference job.
+caller's schema, or else by ``sources.tables.parquet_schema`` — the
+schema the table's first data file's footer records, read on the driver
+— so no read launches a schema-inference job.
 """
 
 from __future__ import annotations
@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sources.tables import _footers, _parquet_files, parquet_schema
+
 # Test seam for the commit protocol (``ParquetStore._commit``): when
 # set, called with a step label after every commit step —
 # ``commit:journaled``, ``commit:backed_up`` (per backup),
@@ -61,24 +63,6 @@ _CRASH_HOOK = None
 def _crash_point(label: str) -> None:
     if _CRASH_HOOK is not None:
         _CRASH_HOOK(label)
-
-
-# Spark records a parquet file's Spark schema in this footer key; the
-# store's reads take it from there on the driver instead of launching
-# Spark's footer-reading schema-inference job
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(footer) -> T.StructType | None:
-    """The Spark schema (data columns) a parquet footer (a pyarrow
-    ``FileMetaData``) records; None when there is no footer or it
-    records none (a file written outside Spark)."""
-    if footer is None or not footer.metadata:
-        return None
-    try:
-        return T.StructType.fromJson(json.loads(footer.metadata[_SPARK_SCHEMA_KEY]))
-    except (KeyError, ValueError):
-        return None
 
 
 @dataclass(frozen=True)
@@ -117,29 +101,6 @@ def observed_stage(
 
 def _rows_observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
     return observed_stage(df, name, {"rows": F.count(F.lit(1))})
-
-
-def _parquet_files(root: str):
-    """The visible parquet data files under ``root``, as paths relative
-    to it, listed lazily in a fixed order (names sorted at each level):
-    what readers read. Dot- and underscore-prefixed names (backups,
-    CRCs, ``_SUCCESS``, meta files) are skipped, and so is everything
-    under such a directory. A missing ``root`` has none."""
-    for base, dirs, files in os.walk(root):
-        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
-        for name in sorted(files):
-            if name.endswith(".parquet") and not name.startswith((".", "_")):
-                yield os.path.relpath(os.path.join(base, name), root)
-
-
-def _footers(root: str):
-    """The footers (pyarrow ``FileMetaData``) of the visible parquet
-    files under ``root``, each opened on the driver when it is reached,
-    in ``_parquet_files`` order."""
-    import pyarrow.parquet as pq
-
-    for rel in _parquet_files(root):
-        yield pq.read_metadata(os.path.join(root, rel))
 
 
 def _data_files(root: str) -> tuple[int, int]:
@@ -285,19 +246,18 @@ class ParquetStore:
         return os.path.isdir(self.path(table))
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
-        """``table`` typed as ``schema``, else as the Spark schema in its
-        first data file's footer, read on the driver: no schema-inference
+        """``table`` typed as ``schema``, else as ``parquet_schema`` types
+        it from its first data file's footer, whoever wrote it: no Spark
         job. Partition columns the schema lacks are typed from their dir
-        names. Only files written outside Spark (no Spark schema in the
-        footer) are read by inference. With a schema, a file-less table
-        (``delete_rows`` removed every row) reads, a missing one as empty."""
+        names. With a schema, a file-less table (``delete_rows`` removed
+        every row) reads, a missing one as empty; without one, either
+        raises ``FileNotFoundError``."""
         self._recover(table)
         final = self.path(table)
         if os.path.isdir(final):
             if schema is None:
-                schema = _footer_schema(next(_footers(final), None))
-            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-            return reader.parquet(final)
+                schema = parquet_schema(final)
+            return self.spark.read.schema(schema).parquet(final)
         if schema is None:
             raise FileNotFoundError(table)
         # limit(0) makes the emptiness plain to the optimizer, which then
@@ -308,21 +268,17 @@ class ParquetStore:
         """``table`` read for an upsert of rows typed ``schema``: as
         ``schema`` when its footer records exactly ``schema``'s data
         columns, so the partition columns ``part_cols`` take the incoming
-        types, not those their dir names suggest; else as ``read`` types
-        it. A missing or file-less table reads as empty."""
-        footer = next(_footers(self.path(table)), None)
-        if footer is None:
+        types, not those their dir names suggest; else as its footer
+        types it. A missing or file-less table reads as empty."""
+        try:
+            stored = parquet_schema(self.path(table))
+        except FileNotFoundError:
             return self.read(table, schema)
-        stored = _footer_schema(footer)
 
         def types(fields):
             return {f.name: f.dataType.simpleString() for f in fields if f.name not in part_cols}
 
-        if (
-            stored is not None
-            and set(part_cols) <= set(schema.names)
-            and types(stored.fields) == types(schema.fields)
-        ):
+        if set(part_cols) <= set(schema.names) and types(stored.fields) == types(schema.fields):
             return self.read(table, schema)
         return self.read(table, stored)
 
@@ -1197,7 +1153,7 @@ def sharded_corpus_manifest(spark: SparkSession, out_dir: str, hash_col: str = "
     loader consumes to address shards. Metadata-scale output (one row
     per file); computed distributed via ``input_file_name``."""
     return (
-        spark.read.parquet(out_dir)
+        spark.read.schema(parquet_schema(out_dir)).parquet(out_dir)
         .groupBy(F.input_file_name().alias("file"))
         .agg(
             F.count("*").alias("n_docs"),

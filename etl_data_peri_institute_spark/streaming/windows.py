@@ -17,36 +17,25 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import _normalize_ts, parquet_schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a bounded stream (schema from the batch reader,
-    including the nanos→micros ts normalization)."""
-    batch = load_table(spark, sf_dir, "events")
+    """events.parquet as a bounded stream, typed and ts-normalized as
+    ``load_table`` reads it."""
     path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(parquet_schema(path))
     if os.path.isdir(path):
         # the production layout: the table IS a directory of part
         # files — stream it directly (a pathGlobFilter on the parent
         # would match nothing and silently stream 0 rows; caught by
         # the round-8 full replay against Spark-written 3x copies)
-        stream = spark.readStream.schema(raw_schema).parquet(path)
+        stream = reader.parquet(path)
     else:
         # driver testdata layout: single file per table inside a dir
         # of other tables; glob-filter down to this one
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    # re-apply the batch reader's ts normalization on the stream
-    dt = dict(stream.dtypes)["ts"]
-    if dt == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dt == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream.select(*batch.columns)
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return _normalize_ts(stream, "events")
 
 
 def run_to_completion(agg: DataFrame, output_mode: str = "complete") -> DataFrame:

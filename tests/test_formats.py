@@ -2,8 +2,17 @@
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import glob
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_data_peri_institute_spark.sources.formats import (
     read_table,
@@ -11,9 +20,16 @@ from etl_data_peri_institute_spark.sources.formats import (
     write_partitioned,
     write_table,
 )
-from etl_data_peri_institute_spark.sources.tables import load_table
+from etl_data_peri_institute_spark.sources.tables import (
+    TABLES,
+    load_table,
+    parquet_schema,
+    register_views,
+)
+from etl_data_peri_institute_spark.streaming.windows import run_to_completion, stream_events
 
 SF = "/root/testdata/sf0.001"
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
@@ -28,53 +44,177 @@ def test_roundtrip(spark, tmp_path, fmt):
     assert a == b
 
 
+_WALL = [
+    datetime.datetime(2024, 1, 5, 12, 30, 15, 123456),
+    datetime.datetime(2024, 2, 9, 0, 0, 1, 500000),
+]
+
+
+def _events_dir(tmp_path, unit: str) -> str:
+    """A dir holding one pyarrow-written ``events.parquet`` whose ``ts``
+    is ``timestamp[unit]``: TIMESTAMP(NANOS) for ns, TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) for us."""
+    d = tmp_path / unit
+    d.mkdir()
+    table = pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "user_id": pa.array([10, 20], pa.int64()),
+        "event_type": pa.array(["view", "click"]),
+        "value": pa.array([1.0, 2.0]),
+        "props": pa.array(["{}", "{}"]),
+        "ts": pa.array(_WALL, pa.timestamp(unit)),
+    })
+    pq.write_table(table, d / "events.parquet")
+    return str(d)
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_load_table_normalizes_event_ts_physical_types(spark, tmp_path):
     """The testdata generator has emitted events.ts as TIMESTAMP(NANOS)
     in some rounds and TIMESTAMP(MICROS, isAdjustedToUTC=false) — read
     by Spark 4 as TIMESTAMP_NTZ — in others. load_table must normalize
     BOTH to the session TimestampType with the same instant (UTC
     wall-clock, DuckDB's naive-timestamp semantics), so downstream
-    plans see one stable type whichever generator produced the files."""
-    import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    wall = [
-        datetime.datetime(2024, 1, 5, 12, 30, 15, 123456),
-        datetime.datetime(2024, 2, 9, 0, 0, 1, 500000),
-    ]
-    cols = {
-        "event_id": pa.array([1, 2], pa.int64()),
-        "user_id": pa.array([10, 20], pa.int64()),
-        "event_type": pa.array(["view", "click"]),
-        "value": pa.array([1.0, 2.0]),
-        "props": pa.array(["{}", "{}"]),
-    }
+    plans see one stable type whichever generator produced the files.
+    It needs no legacy nanos flag to do so."""
+    spark.conf.unset(NANOS_AS_LONG)
     instants = {}
-    for unit, sub in (("ns", "nanos"), ("us", "micros_ntz")):
-        d = tmp_path / sub
-        d.mkdir()
-        table = pa.table({**cols, "ts": pa.array(wall, pa.timestamp(unit))})
-        pq.write_table(table, d / "events.parquet")
-        df = load_table(spark, str(d), "events")
+    for unit in ("ns", "us"):
+        df = load_table(spark, _events_dir(tmp_path, unit), "events")
         assert isinstance(df.schema["ts"].dataType, T.TimestampType), (
-            sub,
+            unit,
             df.schema["ts"].dataType,
         )
         # compare epoch micros — session-TZ-independent instant identity
-        instants[sub] = [
+        instants[unit] = [
             r[0]
             for r in df.orderBy("event_id")
             .select(F.unix_micros("ts"))
             .collect()
         ]
-    assert instants["nanos"] == instants["micros_ntz"]
+    assert instants["ns"] == instants["us"]
     epoch = datetime.datetime(1970, 1, 1)
-    assert instants["nanos"] == [
-        round((w - epoch).total_seconds() * 1_000_000) for w in wall
+    assert instants["ns"] == [
+        round((w - epoch).total_seconds() * 1_000_000) for w in _WALL
     ]
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_stream_events_reads_as_load_table(spark, tmp_path, unit):
+    """The streaming source over an events file is typed and
+    ts-normalized exactly as the batch read: same schema, same rows."""
+    d = _events_dir(tmp_path, unit)
+    batch = load_table(spark, d, "events")
+    stream = stream_events(spark, d)
+    assert stream.schema == batch.schema
+    assert _rows(run_to_completion(stream, "append")) == _rows(batch)
+
+
+def test_load_table_leaves_nanos_as_long_as_found(spark):
+    try:
+        for value in (None, "false", "true"):
+            if value is None:
+                spark.conf.unset(NANOS_AS_LONG)
+            else:
+                spark.conf.set(NANOS_AS_LONG, value)
+            load_table(spark, SF, "events")
+            assert spark.conf.getAll.get(NANOS_AS_LONG) == value
+    finally:
+        spark.conf.unset(NANOS_AS_LONG)
+
+
+def test_load_table_and_register_views_launch_no_job(spark):
+    """Every table is typed from its footer on the driver: opening one,
+    or registering all of them as views, launches no Spark job."""
+    for name in TABLES:
+        df, jobs = _jobs(spark, lambda: load_table(spark, SF, name))
+        assert jobs == 0, name
+    dfs, jobs = _jobs(spark, lambda: register_views(spark, SF))
+    assert jobs == 0
+    assert sorted(dfs) == sorted(TABLES)
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(glob.glob("/root/testdata/sf*/*.parquet")),
+    ids=lambda p: os.path.relpath(p, "/root/testdata"),
+)
+def test_parquet_schema_equals_inference_on_testdata(spark, path):
+    assert parquet_schema(path) == spark.read.parquet(path).schema
+
+
+_ARROW_COLUMNS = {
+    "int32": pa.array([1, None, 3], pa.int32()),
+    "int64": pa.array([1, None, 3], pa.int64()),
+    "double": pa.array([1.5, None, -2.0]),
+    "float": pa.array([1.5, None, -2.0], pa.float32()),
+    "string": pa.array(["a", None, "c"]),
+    "bool": pa.array([True, None, False]),
+    "date32": pa.array([datetime.date(2024, 1, 1), None, datetime.date(1969, 12, 31)]),
+    "timestamp_us": pa.array([_WALL[0], None, _WALL[1]], pa.timestamp("us")),
+    "timestamp_ns": pa.array([_WALL[0], None, _WALL[1]], pa.timestamp("ns")),
+    "decimal": pa.array([decimal.Decimal("1.250"), None, decimal.Decimal("-3.5")], pa.decimal128(12, 3)),
+    "list": pa.array([[1, 2], None, []], pa.list_(pa.int64())),
+    "struct": pa.array(
+        [{"x": 1, "y": "a"}, None, {"x": None, "y": "b"}],
+        pa.struct([("x", pa.int64()), ("y", pa.string())]),
+    ),
+    "map": pa.array([[("k", 1)], None, []], pa.map_(pa.string(), pa.int64())),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_ARROW_COLUMNS))
+def test_parquet_schema_equals_inference_by_arrow_type(spark, tmp_path, kind):
+    """A file written outside Spark is typed from its Arrow schema as
+    Spark's inference types it, TIMESTAMP(NANOS) as the raw ``bigint``
+    nanos (which inference reads only under the legacy flag), and the
+    typed read returns the inferred read's rows."""
+    path = str(tmp_path / f"{kind}.parquet")
+    pq.write_table(pa.table({"c": _ARROW_COLUMNS[kind]}), path)
+    spark.conf.unset(NANOS_AS_LONG)
+    typed = spark.read.schema(parquet_schema(path)).parquet(path)
+    got = _rows(typed)
+    spark.conf.set(NANOS_AS_LONG, "true")
+    try:
+        inferred = spark.read.parquet(path)
+        assert parquet_schema(path) == inferred.schema
+        assert typed.schema == inferred.schema
+        assert got == _rows(inferred)
+    finally:
+        spark.conf.unset(NANOS_AS_LONG)
+
+
+def test_spark_written_part_files_typed_from_footer(spark, tmp_path):
+    """The production layout: each table a dir of Spark-written part
+    files. The Spark schema in a part file's footer types it, the batch
+    and streaming reads return the rows written, with no Spark job to
+    open the batch read."""
+    for name in ("orders", "events"):
+        src = load_table(spark, SF, name)
+        path = str(tmp_path / f"{name}.parquet")
+        src.repartition(3).write.parquet(path)
+        assert parquet_schema(path) == spark.read.parquet(path).schema
+        got, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), name))
+        assert jobs == 0
+        assert got.schema == src.schema
+        assert _rows(got) == _rows(src)
+    stream = stream_events(spark, str(tmp_path))
+    assert _rows(run_to_completion(stream, "append")) == _rows(load_table(spark, SF, "events"))
 
 
 def test_unsupported_format_raises(spark):

@@ -1100,9 +1100,11 @@ def test_read_typed_from_footer_launches_no_job(spark, tmp_path, partition_by, p
     assert rows(got) == rows(inferred)
 
 
-def test_read_table_without_spark_footer_infers(spark, tmp_path):
+def test_read_table_without_spark_footer_launches_no_job(spark, tmp_path):
     """A table whose files were written outside Spark (pyarrow: no Spark
-    schema in the footer) still reads, by inference."""
+    schema in the footer) reads typed from the footer's Arrow schema,
+    with no Spark job. A table dir with no data file has no schema to
+    read without one."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1110,9 +1112,18 @@ def test_read_table_without_spark_footer_infers(spark, tmp_path):
     os.makedirs(store.path("t"))
     table = pa.table({"id": pa.array([1, 2, 3], pa.int64()), "v": ["a", "b", None]})
     pq.write_table(table, os.path.join(store.path("t"), "part-0.parquet"))
-    got = store.read("t")
+    sc = spark.sparkContext
+    sc.setJobGroup("read_arrow_footer", "store.read")
+    try:
+        got = store.read("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("read_arrow_footer")) == 0
     assert got.schema.simpleString() == "struct<id:bigint,v:string>"
     assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (2, "b"), (3, None)]
+    os.makedirs(store.path("empty"))
+    with pytest.raises(FileNotFoundError):
+        store.read("empty")
 
 
 def test_write_meta_atomic_and_validated(spark, tmp_path):

@@ -23,9 +23,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from etl_data_peri_institute_spark.sources.tables import TABLES  # noqa: E402
 
 
 def _norm_cell(v):
